@@ -9,7 +9,7 @@ operators at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
 Env knobs:
   SPARK_GRAFT_SF_DIR  parquet table dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS    local[N] cores (default 32)
+  SPARK_GRAFT_CPUS    local[N] cores (default: usable cores)
   BENCH_CDC_EVENTS    synthetic binlog size (default 2_000_000)
 
 Run at two parallelism levels for the scaling-efficiency criterion:
@@ -204,12 +204,12 @@ def _bench_overrides() -> dict:
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    n_events = int(os.environ.get("BENCH_CDC_EVENTS", "6000000"))
-
-    from nifi_spark.session import get_spark
+    from nifi_spark.session import default_cpus, get_spark
     import __spark_entry__ as entry
+
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    cpus = default_cpus()
+    n_events = int(os.environ.get("BENCH_CDC_EVENTS", "6000000"))
 
     spark = get_spark("bench", parallelism=cpus, shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")

@@ -1,0 +1,100 @@
+"""Durable writes — the one commit discipline every persisted file uses.
+
+NiFi makes a write visible one way: PutHDFS writes a hidden dot-prefixed
+temp file and renames it into place, and the FlowFile repository's WAL
+update is the session-commit point (StandardProcessSession.java:361-370).
+Here every manifest, VERSION pointer, ledger entry, source state file
+and spool batch goes through `atomic_write` or `Spool.land`: the bytes
+land in a hidden temp file, are fsynced, renamed over the target, and
+the directory is fsynced. A crash leaves the old file or the new one,
+never a torn one.
+
+Temp names are `_`-prefixed. Spark's file index (batch and streaming)
+skips `_` and `.` names, so a temp file stranded in a spool directory
+by a crash is invisible to `spark.read.parquet(spool_dir)`.
+
+`read_exact` is the framed-read counterpart for the socket sources: it
+turns a short read into the caller's protocol error instead of a torn
+frame.
+"""
+
+from __future__ import annotations
+
+import os
+import re
+from contextlib import contextmanager
+
+_BATCH = re.compile(r"batch_(\d{8})\.parquet$")
+# also sweeps the visible `batch_N.parquet.tmp` name older spools used
+_STALE = re.compile(r"_?batch_\d{8}\.parquet\.tmp$")
+
+
+def _fsync_dir(d: str) -> None:
+    fd = os.open(d or ".", os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+
+
+@contextmanager
+def _staged(path: str):
+    """Yield a binary file for a hidden temp next to `path`; on clean
+    exit fsync it, rename it over `path` and fsync the directory."""
+    d, name = os.path.split(path)
+    tmp = os.path.join(d, f"_{name}.tmp")
+    with open(tmp, "wb") as f:
+        yield f
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+    _fsync_dir(d)
+
+
+def atomic_write(path: str, text: str) -> None:
+    """Replace `path` with `text` atomically and durably."""
+    with _staged(path) as f:
+        f.write(text.encode())
+
+
+class Spool:
+    """Append-only directory of immutable `batch_{id:08d}.parquet` files.
+
+    Opening recovers the next batch id from the listing (restarts never
+    reuse a name) and removes temp files a crash left behind."""
+
+    def __init__(self, spool_dir: str):
+        self.dir = spool_dir
+        os.makedirs(spool_dir, exist_ok=True)
+        ids = [-1]
+        for name in os.listdir(spool_dir):
+            if _STALE.match(name):
+                os.remove(os.path.join(spool_dir, name))
+            elif m := _BATCH.match(name):
+                ids.append(int(m.group(1)))
+        self.next_id = max(ids) + 1
+
+    def land(self, table) -> int:
+        """Write a pyarrow table as the next batch file; returns its id."""
+        import pyarrow.parquet as pq
+        bid = self.next_id
+        with _staged(os.path.join(self.dir, f"batch_{bid:08d}.parquet")) as f:
+            pq.write_table(table, f)
+        self.next_id = bid + 1
+        return bid
+
+
+def read_exact(read, n: int, err: type[Exception] = EOFError,
+               eof_ok: bool = False) -> "bytes | None":
+    """Exactly `n` bytes from `read` (a socket or file `read` callable).
+    A stream that ends early raises `err`; with `eof_ok`, one that ends
+    before the first byte returns None (a clean close between frames)."""
+    buf = b""
+    while len(buf) < n:
+        chunk = read(n - len(buf))
+        if not chunk:
+            if eof_ok and not buf:
+                return None
+            raise err(f"stream ended ({len(buf)}/{n} bytes)")
+        buf += chunk
+    return buf

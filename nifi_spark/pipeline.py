@@ -7,10 +7,11 @@ One NiFi session-commit == one micro-batch here (SURVEY.md §3.1 mapping):
         sub-batches (NiFi sidesteps this — every processor is schema-less;
         ConvertJSONToSQL.java:101-113 is its drift-policy ancestor)
       → normalize changes onto the store schema (narrow projection)
-      → SnapshotTableStore.merge — ONE max_by hash-agg over
-        current∪changes does LWW compaction per (repo,path) AND the
-        upsert in a single shuffle (map-side partial combine ⇒ hot-repo
-        skew tolerated; a window/sort would shuffle+sort the whole slice)
+      → SnapshotTableStore.merge — a narrow winner agg over
+        (key, lsn, op) of current∪changes does LWW per (repo,path), and a
+        1:1 winner join fetches the full rows (map-side partial combine ⇒
+        hot-repo skew tolerated; full-width rows never cross a wide
+        shuffle)
         → dirty-bucket snapshot commit (atomic)
       → provenance records per stage/partition
       → OffsetLedger.commit (checksum'd) — AFTER the table commit
@@ -23,7 +24,8 @@ final state in all three.
 Duplicate (key,lsn) re-deliveries — NiFi's DetectDuplicate concern
 (standard/DetectDuplicate.java:58-68) — are absorbed by two mechanisms:
 cross-batch dups have lsn <= watermark and never pass the slice filter;
-in-batch dups collapse in the max_by compaction (identical payload).
+in-batch dups are dropped from the slice (`dedup_deliveries`) before the
+merge's 1:1 winner join.
 """
 
 from __future__ import annotations
@@ -85,7 +87,7 @@ class CdcPipeline:
     # quarantine write is at-least-once: a crash-replayed batch re-appends
     # its poison rows; readers dedup on (lsn) if they need exactly-once.
     merge_strategy: str = "argmax"  # SnapshotTableStore.merge strategy:
-    # 'argmax' (COW, shuffle-narrow) | 'maxby' (COW, wide agg) | 'delta'
+    # 'argmax' (COW, shuffle-narrow) | 'delta'
     # (merge-on-read: per-bucket delta appends, bytes-written ∝ change
     # set — the steady-state small-batch shape; run store.compact()
     # periodically to restore the zero-agg read path)
@@ -114,13 +116,12 @@ class CdcPipeline:
         narrow projection, NO shuffle.
 
         LWW compaction (one winner per key by LSN) happens exactly once,
-        inside ``SnapshotTableStore.merge``'s max_by hash-agg over
+        inside ``SnapshotTableStore.merge``'s winner agg over
         current∪changes. An earlier version pre-compacted here with its
         own groupBy — a second full shuffle on the same key that the
         merge agg then repeated; dropping it roughly halves shuffle
-        volume per batch. Same-batch delete→re-insert, trailing-delete
-        tombstones, and duplicate (key,lsn) re-deliveries all resolve
-        identically in the single max-by-LSN reduce.
+        volume per batch. Same-batch delete→re-insert and trailing-delete
+        tombstones resolve in that single max-by-LSN reduce.
         """
         return data.select(
             *[F.col(c) if c in data.columns else F.lit(None).cast(t).alias(c)

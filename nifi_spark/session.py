@@ -27,6 +27,24 @@ def _local_dir() -> str:
         return tempfile.gettempdir()
 
 
+def default_cpus() -> int:
+    """$SPARK_GRAFT_CPUS, else the cores this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
+
+
+def default_heap() -> str:
+    """$SPARK_DRIVER_MEM, else half of physical RAM — room for the
+    tmpfs shuffle dir and the Python workers beside the pinned heap."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    with open("/proc/meminfo") as f:
+        kb = next(int(line.split()[1]) for line in f
+                  if line.startswith("MemTotal:"))
+    return f"{kb // 2048}m"
+
+
 def get_spark(
     app_name: str = "nifi-spark",
     parallelism: int | None = None,
@@ -35,12 +53,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession tuned for the engine.
 
-    parallelism: local[N] core count; defaults to $SPARK_GRAFT_CPUS or 32.
+    parallelism: local[N] core count; defaults to `default_cpus()`.
     shuffle_partitions: defaults to parallelism (small-data local runs);
         on a real cluster this would be sized to ~128 MB per shuffle
         partition at the target data volume.
     """
-    cpus = parallelism or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = parallelism or default_cpus()
+    heap = default_heap()
     shuf = shuffle_partitions or cpus
     builder = (
         SparkSession.builder.appName(app_name)
@@ -62,13 +81,12 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         # local mode: the driver JVM IS the executor — size its heap for
         # the task-thread count (8g thrashed GC at 16+ threads)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", heap)
         # Pin the heap (-Xms = -Xmx): G1's commit/uncommit churn showed up
         # as ~80% kernel time (hundreds of millions of minor page faults)
         # under 32 concurrent shuffle tasks — a fixed heap ends it.
         .config("spark.driver.extraJavaOptions",
-                os.environ.get("SPARK_DRIVER_JAVA_OPTS",
-                               "-Xms" + os.environ.get("SPARK_DRIVER_MEM", "32g")))
+                os.environ.get("SPARK_DRIVER_JAVA_OPTS", "-Xms" + heap))
         # Shuffle files on tmpfs: single-box stand-in for a cluster's
         # distributed shuffle (per-node NVMe + network); keeps the shared
         # virtio disk out of the shuffle path. On a real cluster this is

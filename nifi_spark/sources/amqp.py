@@ -50,12 +50,12 @@ in the 0-9-1 surface the RabbitMQ client exposes.
 
 from __future__ import annotations
 
-import os
-import re
 import struct
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ..durable import Spool, read_exact
 
 FRAME_METHOD, FRAME_HEADER, FRAME_BODY, FRAME_HEARTBEAT = 1, 2, 3, 8
 FRAME_END = 0xCE
@@ -165,16 +165,6 @@ def decode_table(buf: bytes, pos: int) -> tuple[dict, int]:
     return t, end
 
 
-def _read_exact(read, n: int) -> bytes:
-    buf = b""
-    while len(buf) < n:
-        chunk = read(n - len(buf))
-        if not chunk:
-            raise AmqpError(f"stream ended ({len(buf)}/{n})")
-        buf += chunk
-    return buf
-
-
 def write_frame(write, ftype: int, channel: int, payload: bytes) -> None:
     write(struct.pack(">BHI", ftype, channel, len(payload)) + payload
           + bytes([FRAME_END]))
@@ -185,10 +175,10 @@ def read_frame(read) -> "tuple[int, int, bytes] | None":
     head = read(1)
     if not head:
         return None
-    head += _read_exact(read, 6)
+    head += read_exact(read, 6, AmqpError)
     ftype, channel, size = struct.unpack(">BHI", head)
-    payload = _read_exact(read, size) if size else b""
-    if _read_exact(read, 1)[0] != FRAME_END:
+    payload = read_exact(read, size, AmqpError) if size else b""
+    if read_exact(read, 1, AmqpError)[0] != FRAME_END:
         raise AmqpError("missing frame-end octet")
     return ftype, channel, payload
 
@@ -332,7 +322,7 @@ class AmqpBroker:
         return 0
 
     def serve(self, read, write) -> int:
-        if _read_exact(read, 8) != PROTOCOL_HEADER:
+        if read_exact(read, 8, AmqpError) != PROTOCOL_HEADER:
             write(PROTOCOL_HEADER)            # spec: reply with ours
             raise AmqpError("bad protocol header")
         write_frame(write, FRAME_METHOD, 0, method_frame(
@@ -901,16 +891,11 @@ class ConsumeAMQPSource:
 
     def __init__(self, spool_dir: str):
         self.spool_dir = spool_dir
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
+        self._spool = Spool(spool_dir)
 
     def drain(self, client: AmqpClient, queue: str, *,
               no_ack: bool = True, max_messages: int = 1_000_000) -> int:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         msgs = []
         while len(msgs) < max_messages:
@@ -920,7 +905,7 @@ class ConsumeAMQPSource:
             msgs.append(got)
         if not msgs:
             return 0
-        bid = self._next_batch
+        bid = self._spool.next_id
 
         def prop(name, cast=None):
             vals = [m[0].get(name) for m in msgs]
@@ -948,11 +933,7 @@ class ConsumeAMQPSource:
                 pa.string()),
             "payload": pa.array([m[1] for m in msgs], pa.binary()),
         })
-        final = os.path.join(self.spool_dir, f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)
-        self._next_batch = bid + 1
+        self._spool.land(table)
         return len(msgs)
 
     def read(self, spark: SparkSession) -> DataFrame:

@@ -43,11 +43,12 @@ back on a socketpair; production wraps a TLS socket.
 
 from __future__ import annotations
 
-import os
 import re
 import struct
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ..durable import Spool, read_exact
 
 
 class Amqp10Error(IOError):
@@ -254,28 +255,16 @@ def write_frame(write, channel: int, performative: Described,
 def read_frame(read) -> "tuple[int, Described | None, bytes] | None":
     """Returns (channel, performative, payload) or None on EOF.
     An empty frame (heartbeat) yields performative None."""
-    hdr = _read_exact(read, 8, eof_ok=True)
+    hdr = read_exact(read, 8, Amqp10Error, eof_ok=True)
     if hdr is None:
         return None
     size, doff, _ftype, channel = struct.unpack(">IBBH", hdr)
-    body = _read_exact(read, size - 8)
+    body = read_exact(read, size - 8, Amqp10Error)
     body = body[(doff - 2) * 4:]
     if not body:
         return channel, None, b""
     perf, pos = decode_value(body, 0)
     return channel, perf, body[pos:]
-
-
-def _read_exact(read, n: int, *, eof_ok: bool = False):
-    buf = b""
-    while len(buf) < n:
-        chunk = read(n - len(buf))
-        if not chunk:
-            if eof_ok and not buf:
-                return None
-            raise Amqp10Error("connection closed mid-frame")
-        buf += chunk
-    return buf
 
 
 def _lget(lst: list, i: int, default=None):
@@ -386,7 +375,7 @@ class EventHubBroker:
 
     # -- connection ------------------------------------------------
     def _sasl(self, read, write) -> None:
-        hdr = _read_exact(read, 8)
+        hdr = read_exact(read, 8, Amqp10Error)
         if hdr != SASL_HDR:
             raise Amqp10Error(f"expected SASL header, got {hdr!r}")
         write(SASL_HDR)
@@ -413,7 +402,7 @@ class EventHubBroker:
         """One connection: SASL PLAIN, then the AMQP layer until
         close. Returns transfers sent."""
         self._sasl(read, write)
-        hdr = _read_exact(read, 8)
+        hdr = read_exact(read, 8, Amqp10Error)
         if hdr != AMQP_HDR:
             raise Amqp10Error(f"expected AMQP header, got {hdr!r}")
         write(AMQP_HDR)
@@ -775,9 +764,10 @@ class EventHubReceiver:
         self._links: dict[int, int] = {}      # pid -> receiver handle
         self._send_links: dict = {}           # pid|None -> sender handle
         self._delivery = 0
+        self._txn_handle: "int | None" = None  # coordinator link
         # SASL layer
         self._write(SASL_HDR)
-        hdr = _read_exact(read, 8)
+        hdr = read_exact(read, 8, Amqp10Error)
         if hdr != SASL_HDR:
             raise Amqp10Error("server did not speak SASL")
         _ch, mechs, _ = read_frame(read)
@@ -794,7 +784,7 @@ class EventHubReceiver:
             raise Amqp10Error("SASL authentication rejected")
         # AMQP layer
         self._write(AMQP_HDR)
-        if _read_exact(read, 8) != AMQP_HDR:
+        if read_exact(read, 8, Amqp10Error) != AMQP_HDR:
             raise Amqp10Error("bad AMQP header")
         write_frame(write, 0, Described(
             ULong(P_OPEN), ["nifi-spark-receiver", hub]))
@@ -1027,8 +1017,9 @@ class EventHubReceiver:
     def declare_txn(self) -> bytes:
         """§4.4.2: declare on the coordinator link → txn-id from the
         declared disposition state."""
-        handle = getattr(self, "_txn_handle", None) \
-            or self._attach_coordinator()
+        handle = self._txn_handle
+        if handle is None:  # handle 0 is a valid link
+            handle = self._attach_coordinator()
         self._delivery += 1
         did = self._delivery
         msg = encode_message(
@@ -1048,7 +1039,7 @@ class EventHubReceiver:
                       fail: bool = False) -> None:
         """§4.4.3: discharge — fail=False commits the staged
         transfers, fail=True rolls them back."""
-        handle = getattr(self, "_txn_handle", None)
+        handle = self._txn_handle
         if handle is None:
             raise Amqp10Error("no coordinator link (declare first)")
         self._delivery += 1
@@ -1133,16 +1124,11 @@ class GetEventHubSource:
 
     def __init__(self, spool_dir: str):
         self.spool_dir = spool_dir
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
+        self._spool = Spool(spool_dir)
 
     def drain(self, receiver: EventHubReceiver,
               partitions: list[int], *, batch_size: int = 100) -> int:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         landed = 0
         active = list(partitions)
@@ -1153,7 +1139,7 @@ class GetEventHubSource:
                 if not msgs:
                     continue
                 still.append(pid)
-                bid = self._next_batch
+                bid = self._spool.next_id
                 table = pa.table({
                     "batch_id": pa.array([bid] * len(msgs), pa.int64()),
                     "msg_seq": pa.array(range(len(msgs)), pa.int64()),
@@ -1176,12 +1162,7 @@ class GetEventHubSource:
                          for m in msgs],
                         pa.map_(pa.string(), pa.string())),
                 })
-                final = os.path.join(self.spool_dir,
-                                     f"batch_{bid:08d}.parquet")
-                tmp = final + ".tmp"
-                pq.write_table(table, tmp)
-                os.rename(tmp, final)
-                self._next_batch = bid + 1
+                self._spool.land(table)
                 landed += len(msgs)
             active = still
         return landed

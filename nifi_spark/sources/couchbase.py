@@ -26,6 +26,8 @@ from __future__ import annotations
 import struct
 import threading
 
+from ..durable import read_exact
+
 MAGIC_REQ = 0x80
 MAGIC_RES = 0x81
 OP_GET = 0x00
@@ -35,16 +37,6 @@ STATUS_OK = 0x0000
 STATUS_KEY_ENOENT = 0x0001
 STATUS_KEY_EEXISTS = 0x0002
 STATUS_ETMPFAIL = 0x0086
-
-
-def _read_exact(inp, n: int) -> bytes:
-    buf = b""
-    while len(buf) < n:
-        chunk = inp.read(n - len(buf))
-        if not chunk:
-            raise EOFError(f"stream closed ({len(buf)}/{n})")
-        buf += chunk
-    return buf
 
 
 def pack_packet(magic: int, opcode: int, *, key: bytes = b"",
@@ -58,10 +50,10 @@ def pack_packet(magic: int, opcode: int, *, key: bytes = b"",
 
 
 def read_packet(inp) -> dict:
-    head = _read_exact(inp, 24)
+    head = read_exact(inp.read, 24)
     (magic, opcode, keylen, extlen, _dt, status, bodylen, opaque,
      cas) = struct.unpack(">BBHBBHIIQ", head)
-    body = _read_exact(inp, bodylen) if bodylen else b""
+    body = read_exact(inp.read, bodylen) if bodylen else b""
     return {"magic": magic, "opcode": opcode, "status": status,
             "opaque": opaque, "cas": cas,
             "extras": body[:extlen],

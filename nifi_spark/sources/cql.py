@@ -38,11 +38,12 @@ from __future__ import annotations
 
 import hashlib
 import json
-import os
 import re
 import struct
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ..durable import Spool, read_exact
 
 
 class CqlError(IOError):
@@ -120,11 +121,11 @@ def write_frame(write, version: int, opcode: int, body: bytes, *,
 
 def read_frame(read, *, compression: "str | None" = None
                ) -> "tuple[int, int, int, bytes] | None":
-    hdr = _read_exact(read, 9, eof_ok=True)
+    hdr = read_exact(read, 9, CqlError, eof_ok=True)
     if hdr is None:
         return None
     version, flags, stream, opcode, length = struct.unpack(">BBhBi", hdr)
-    body = _read_exact(read, length)
+    body = read_exact(read, length, CqlError)
     if flags & FLAG_COMPRESSED:
         if compression is None:
             raise CqlError("compressed frame but no negotiated codec")
@@ -133,18 +134,6 @@ def read_frame(read, *, compression: "str | None" = None
     if flags:
         raise CqlError("traced/custom-payload frames not supported")
     return version, stream, opcode, body
-
-
-def _read_exact(read, n: int, *, eof_ok: bool = False):
-    buf = b""
-    while len(buf) < n:
-        chunk = read(n - len(buf))
-        if not chunk:
-            if eof_ok and not buf:
-                return None
-            raise CqlError("connection closed mid-frame")
-        buf += chunk
-    return buf
 
 
 def _string(s: str) -> bytes:
@@ -874,21 +863,16 @@ class QueryCassandraSource:
 
     def __init__(self, spool_dir: str):
         self.spool_dir = spool_dir
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
+        self._spool = Spool(spool_dir)
 
     def drain(self, client: CqlClient, cql: str, *,
               page_size: int = 0) -> int:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         cols, rows = client.query(cql, page_size=page_size)
         if not rows:
             return 0
-        bid = self._next_batch
+        bid = self._spool.next_id
         names = [n for n, _t in cols]
         payloads = [json.dumps(dict(zip(names, r)), sort_keys=True,
                                separators=(",", ":")) for r in rows]
@@ -900,11 +884,7 @@ class QueryCassandraSource:
                                 pa.string()),
             "payload": pa.array(payloads, pa.string()),
         })
-        final = os.path.join(self.spool_dir, f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)
-        self._next_batch = bid + 1
+        self._spool.land(table)
         return len(rows)
 
     def read(self, spark: SparkSession) -> DataFrame:

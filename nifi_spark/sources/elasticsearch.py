@@ -33,12 +33,12 @@ response_bytes)``; tests wire it to `EsServer.handle`.
 from __future__ import annotations
 
 import json
-import os
 import re
 import urllib.parse
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..durable import Spool
 from ..ledger import KVState
 
 
@@ -293,17 +293,12 @@ class _SpoolBase:
 
     def __init__(self, spool_dir: str):
         self.spool_dir = spool_dir
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
+        self._spool = Spool(spool_dir)
 
     def _write(self, rows: list[dict]) -> None:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        bid = self._next_batch
+        bid = self._spool.next_id
         table = pa.table({
             "batch_id": pa.array([bid] * len(rows), pa.int64()),
             "hit_seq": pa.array(range(len(rows)), pa.int64()),
@@ -317,12 +312,7 @@ class _SpoolBase:
                             separators=(",", ":")) for r in rows],
                 pa.string()),
         })
-        final = os.path.join(self.spool_dir,
-                             f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)
-        self._next_batch = bid + 1
+        self._spool.land(table)
 
     def read(self, spark: SparkSession) -> DataFrame:
         return (spark.read.parquet(self.spool_dir)

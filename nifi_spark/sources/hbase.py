@@ -32,12 +32,11 @@ bridge every listen/get source here uses."""
 from __future__ import annotations
 
 import json
-import os
-import re
 import struct
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..durable import Spool
 from ..ledger import KVState
 
 
@@ -124,11 +123,7 @@ class GetHBaseSource:
         self.key = key
         self.columns = columns
         self.initial_time_range = initial_time_range
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
+        self._spool = Spool(spool_dir)
 
     def drain(self, table: HBaseTable, *, now_ms: int = 0) -> int:
         st = self.state.get(self.key)
@@ -174,8 +169,7 @@ class GetHBaseSource:
         if not rows:
             return 0
         import pyarrow as pa
-        import pyarrow.parquet as pq
-        bid = self._next_batch
+        bid = self._spool.next_id
         t = pa.table({
             "batch_id": pa.array([bid] * len(rows), pa.int64()),
             "row_seq": pa.array(range(len(rows)), pa.int64()),
@@ -183,11 +177,7 @@ class GetHBaseSource:
             "mime_type": pa.array(["application/json"] * len(rows)),
             "payload": pa.array([p for _rk, p in rows], pa.string()),
         })
-        final = os.path.join(self.spool_dir, f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(t, tmp)
-        os.rename(tmp, final)
-        self._next_batch = bid + 1
+        self._spool.land(t)
         return len(rows)
 
     def read(self, spark: SparkSession) -> DataFrame:

@@ -35,6 +35,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..durable import Spool, atomic_write
+
 EVENT_TYPES = ("append", "close", "create", "metadata", "rename",
                "unlink")
 
@@ -138,13 +140,9 @@ class GetHDFSEventsSource:
         self.ignore_hidden = ignore_hidden
         self.wanted = frozenset(wanted)
         self.poll_retries = poll_retries
-        os.makedirs(spool_dir, exist_ok=True)
         self.state_path = state_path or os.path.join(
             spool_dir, "_inotify_state.json")
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
+        self._spool = Spool(spool_dir)
         try:
             with open(self.state_path) as f:
                 self.last_txid = int(json.load(f)["last.tx.id"])
@@ -152,10 +150,8 @@ class GetHDFSEventsSource:
             self.last_txid = -1
 
     def _persist(self) -> None:
-        tmp = self.state_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"last.tx.id": self.last_txid}, f)
-        os.replace(tmp, self.state_path)
+        atomic_write(self.state_path,
+                     json.dumps({"last.tx.id": self.last_txid}))
 
     def _accept(self, ev: dict) -> bool:
         """toProcessEvent + NotificationEventPathFilter: type in the
@@ -195,8 +191,6 @@ class GetHDFSEventsSource:
         kept = [ev for ev in batch.events if self._accept(ev)]
         if kept:
             import pyarrow as pa
-            import pyarrow.parquet as pq
-            bid = self._next_batch
             table = pa.table({
                 "txid": pa.array([int(e["_txid"]) for e in kept],
                                  pa.int64()),
@@ -211,12 +205,7 @@ class GetHDFSEventsSource:
                 "mime_type": pa.array(["application/json"] * len(kept),
                                       pa.string()),
             })
-            final = os.path.join(self.spool_dir,
-                                 f"batch_{bid:08d}.parquet")
-            tmp = final + ".tmp"
-            pq.write_table(table, tmp)
-            os.rename(tmp, final)
-            self._next_batch = bid + 1
+            self._spool.land(table)
         self.last_txid = batch.txid
         self._persist()            # after the spool rename: at-least-once
         return len(kept)

@@ -21,11 +21,12 @@ servlet's unpackager split, but as a distributed scan.
 
 from __future__ import annotations
 
-import os
 import re
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ..durable import Spool
 
 _SPOOL_SCHEMA = ("batch_id bigint, msg_idx bigint, method string, "
                  "uri string, query_string string, "
@@ -296,20 +297,15 @@ class ListenHTTPSource:
                  max_body: int = 64 * 1024 * 1024):
         self.spool_dir = spool_dir
         self.max_body = max_body
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
+        self._spool = Spool(spool_dir)
 
     def drain_connection(self, read, write) -> int:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         reqs = serve_http(read, write, max_body=self.max_body)
         if not reqs:
             return 0
-        bid = self._next_batch
+        bid = self._spool.next_id
         table = pa.table({
             "batch_id": pa.array([bid] * len(reqs), pa.int64()),
             "msg_idx": pa.array(range(len(reqs)), pa.int64()),
@@ -323,11 +319,7 @@ class ListenHTTPSource:
                                      pa.string()),
             "body": pa.array([q.body for q in reqs], pa.binary()),
         })
-        final = os.path.join(self.spool_dir, f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)
-        self._next_batch = bid + 1
+        self._spool.land(table)
         return len(reqs)
 
     def read(self, spark: SparkSession) -> DataFrame:

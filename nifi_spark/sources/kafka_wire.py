@@ -36,11 +36,12 @@ from __future__ import annotations
 import gzip
 import json
 import os
-import re
 import struct
 import zlib
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..durable import Spool, atomic_write, read_exact
 
 API_PRODUCE, API_FETCH, API_METADATA = 0, 1, 3
 ERR_NONE, ERR_OFFSET_OUT_OF_RANGE, ERR_UNKNOWN_TOPIC = 0, 1, 3
@@ -84,16 +85,6 @@ def _rd_bytes(buf: bytes, pos: int) -> "tuple[bytes | None, int]":
     return buf[pos:pos + n], pos + n
 
 
-def _read_exact(read, n: int) -> bytes:
-    buf = b""
-    while len(buf) < n:
-        chunk = read(n - len(buf))
-        if not chunk:
-            raise KafkaWireError(f"stream ended ({len(buf)}/{n})")
-        buf += chunk
-    return buf
-
-
 def send_request(write, api_key: int, api_version: int, corr_id: int,
                  client_id: str, body: bytes) -> None:
     payload = (struct.pack(">hhi", api_key, api_version, corr_id)
@@ -102,12 +93,11 @@ def send_request(write, api_key: int, api_version: int, corr_id: int,
 
 
 def read_request(read) -> "tuple[int, int, int, str, bytes] | None":
-    head = read(4)
-    if not head:
+    head = read_exact(read, 4, KafkaWireError, eof_ok=True)
+    if head is None:
         return None
-    head = head + _read_exact(read, 4 - len(head)) if len(head) < 4 else head
     (size,) = struct.unpack(">i", head)
-    payload = _read_exact(read, size)
+    payload = read_exact(read, size, KafkaWireError)
     api_key, api_version, corr_id = struct.unpack_from(">hhi", payload, 0)
     client_id, pos = _rd_str(payload, 8)
     return api_key, api_version, corr_id, client_id or "", payload[pos:]
@@ -118,8 +108,8 @@ def send_response(write, corr_id: int, body: bytes) -> None:
 
 
 def read_response(read) -> "tuple[int, bytes]":
-    (size,) = struct.unpack(">i", _read_exact(read, 4))
-    payload = _read_exact(read, size)
+    (size,) = struct.unpack(">i", read_exact(read, 4, KafkaWireError))
+    payload = read_exact(read, size, KafkaWireError)
     (corr_id,) = struct.unpack_from(">i", payload, 0)
     return corr_id, payload[4:]
 
@@ -565,11 +555,7 @@ class ConsumeKafkaWireSource:
 
     def __init__(self, spool_dir: str):
         self.spool_dir = spool_dir
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
+        self._spool = Spool(spool_dir)
         self._state_path = os.path.join(spool_dir, "offsets.json")
 
     def _offsets(self) -> "dict[str, int]":
@@ -581,7 +567,6 @@ class ConsumeKafkaWireSource:
     def drain(self, client: KafkaWireClient, topic: str, *,
               max_bytes: int = 1 << 20) -> int:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         parts = client.metadata([topic]).get(topic)
         if parts is None:
@@ -603,7 +588,7 @@ class ConsumeKafkaWireSource:
             new_state[f"{topic}/{p}"] = off
         if not rows:
             return 0
-        bid = self._next_batch
+        bid = self._spool.next_id
         table = pa.table({
             "batch_id": pa.array([bid] * len(rows), pa.int64()),
             "kafka_topic": pa.array([topic] * len(rows), pa.string()),
@@ -613,15 +598,8 @@ class ConsumeKafkaWireSource:
             "kafka_key": pa.array([r[2] for r in rows], pa.binary()),
             "payload": pa.array([r[3] for r in rows], pa.binary()),
         })
-        final = os.path.join(self.spool_dir, f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)
-        self._next_batch = bid + 1
-        tmp_state = self._state_path + ".tmp"
-        with open(tmp_state, "w") as f:
-            json.dump(new_state, f)
-        os.rename(tmp_state, self._state_path)
+        self._spool.land(table)
+        atomic_write(self._state_path, json.dumps(new_state))
         return len(rows)
 
     def read(self, spark: SparkSession) -> DataFrame:

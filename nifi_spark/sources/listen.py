@@ -34,11 +34,11 @@ listing at construction, so restarts never reuse a file name.
 
 from __future__ import annotations
 
-import os
-import re
 from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ..durable import Spool
 
 # recv() -> (sender, payload_bytes) for one datagram / socket read, or
 # None when the queue is empty (the poll-timeout analog).
@@ -73,12 +73,8 @@ class ListenSource:
         self.demarcator = demarcator
         self.charset = charset
         self._carry: dict[str, bytes] = {}   # per-sender TCP tail
-        os.makedirs(spool_dir, exist_ok=True)
         # crash-safe monotonic batch ids: recover from the spool listing
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
+        self._spool = Spool(spool_dir)
 
     # ------------------------------------------------------------ drain
 
@@ -110,7 +106,6 @@ class ListenSource:
         of messages landed (0 = nothing written, like the reference's
         early return on an empty queue)."""
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         rows = list(self._messages(recv, max_batch_size))
         if not rows:
@@ -118,7 +113,7 @@ class ListenSource:
         if len(rows) > _MAX_PER_BATCH:
             raise ValueError(f"drain batch {len(rows)} exceeds msg_seq "
                              f"packing bound {_MAX_PER_BATCH}")
-        bid = self._next_batch
+        bid = self._spool.next_id
         table = pa.table({
             "batch_id": pa.array([bid] * len(rows), pa.int64()),
             "msg_idx": pa.array(range(len(rows)), pa.int64()),
@@ -128,11 +123,7 @@ class ListenSource:
             "raw": pa.array([p.decode(self.charset, errors="replace")
                              for _, p in rows], pa.string()),
         })
-        final = os.path.join(self.spool_dir, f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)  # visibility = atomic rename
-        self._next_batch = bid + 1
+        self._spool.land(table)
         return len(rows)
 
     def drain_all(self, recv: Recv, max_batch_size: int = 1000) -> int:

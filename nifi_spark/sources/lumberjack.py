@@ -15,13 +15,13 @@ BEFORE the final ack is written.
 
 from __future__ import annotations
 
-import os
-import re
 import struct
 import zlib
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ..durable import Spool
 
 _SPOOL_SCHEMA = ("batch_id bigint, msg_idx bigint, seq bigint, "
                  "line string, fields map<string,string>")
@@ -184,20 +184,15 @@ class ListenLumberjackSource:
 
     def __init__(self, spool_dir: str):
         self.spool_dir = spool_dir
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
+        self._spool = Spool(spool_dir)
 
     def drain_connection(self, read, write) -> int:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         events = serve_lumberjack(read, write)
         if not events:
             return 0
-        bid = self._next_batch
+        bid = self._spool.next_id
         table = pa.table({
             "batch_id": pa.array([bid] * len(events), pa.int64()),
             "msg_idx": pa.array(range(len(events)), pa.int64()),
@@ -206,11 +201,7 @@ class ListenLumberjackSource:
             "fields": pa.array([list(e.fields.items()) for e in events],
                                pa.map_(pa.string(), pa.string())),
         })
-        final = os.path.join(self.spool_dir, f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)
-        self._next_batch = bid + 1
+        self._spool.land(table)
         return len(events)
 
     def read(self, spark: SparkSession) -> DataFrame:

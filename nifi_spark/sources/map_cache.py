@@ -41,6 +41,8 @@ import os
 import struct
 import threading
 
+from ..durable import read_exact
+
 MAGIC = b"NiFi"
 RESOURCE_OK = 20
 DIFFERENT_RESOURCE_VERSION = 21
@@ -50,16 +52,6 @@ PROTOCOL_VERSION = 1
 
 # ---------------------------------------------------------------- io
 
-def _read_exact(inp, n: int) -> bytes:
-    buf = b""
-    while len(buf) < n:
-        chunk = inp.read(n - len(buf))
-        if not chunk:
-            raise EOFError(f"stream closed ({len(buf)}/{n} bytes)")
-        buf += chunk
-    return buf
-
-
 def _write_utf(out, s: str) -> None:
     """Java DataOutputStream.writeUTF: 2-byte length + modified UTF-8
     (the action vocabulary is ASCII, where modified == standard)."""
@@ -68,8 +60,8 @@ def _write_utf(out, s: str) -> None:
 
 
 def _read_utf(inp) -> str:
-    (n,) = struct.unpack(">H", _read_exact(inp, 2))
-    return _read_exact(inp, n).decode("utf-8")
+    (n,) = struct.unpack(">H", read_exact(inp.read, 2))
+    return read_exact(inp.read, n).decode("utf-8")
 
 
 def _write_value(out, value: bytes) -> None:
@@ -77,8 +69,8 @@ def _write_value(out, value: bytes) -> None:
 
 
 def _read_value(inp) -> bytes:
-    (n,) = struct.unpack(">i", _read_exact(inp, 4))
-    return _read_exact(inp, n)
+    (n,) = struct.unpack(">i", read_exact(inp.read, 4))
+    return read_exact(inp.read, n)
 
 
 # ------------------------------------------------------- handshake
@@ -91,11 +83,11 @@ def initiate_handshake(inp, out, versions=(PROTOCOL_VERSION,)) -> int:
     while True:
         out.write(struct.pack(">i", proposal))
         out.flush()
-        status = _read_exact(inp, 1)[0]
+        status = read_exact(inp.read, 1)[0]
         if status == RESOURCE_OK:
             return proposal
         if status == DIFFERENT_RESOURCE_VERSION:
-            (server_pref,) = struct.unpack(">i", _read_exact(inp, 4))
+            (server_pref,) = struct.unpack(">i", read_exact(inp.read, 4))
             lower = [v for v in versions if v <= server_pref]
             if not lower:
                 raise IOError("could not agree on protocol version")
@@ -108,10 +100,10 @@ def initiate_handshake(inp, out, versions=(PROTOCOL_VERSION,)) -> int:
 
 def receive_handshake(inp, out, versions=(PROTOCOL_VERSION,)) -> int:
     """Server side (ProtocolHandshake.receiveHandshake)."""
-    if _read_exact(inp, 4) != MAGIC:
+    if read_exact(inp.read, 4) != MAGIC:
         raise IOError("bad magic header")
     while True:
-        (version,) = struct.unpack(">i", _read_exact(inp, 4))
+        (version,) = struct.unpack(">i", read_exact(inp.read, 4))
         if version in versions:
             out.write(bytes([RESOURCE_OK]))
             out.flush()
@@ -400,7 +392,7 @@ class MapCacheClient:
         self.version = initiate_handshake(inp, out, versions)
 
     def _bool(self) -> bool:
-        return _read_exact(self._in, 1) == b"\x01"
+        return read_exact(self._in.read, 1) == b"\x01"
 
     def put_if_absent(self, key: bytes, value: bytes) -> bool:
         _write_utf(self._out, "putIfAbsent")
@@ -461,7 +453,7 @@ class SetCacheClient:
         _write_utf(self._out, action)
         _write_value(self._out, value)
         self._out.flush()
-        return _read_exact(self._in, 1) == b"\x01"
+        return read_exact(self._in.read, 1) == b"\x01"
 
     def add_if_absent(self, value: bytes) -> bool:
         return self._op("addIfAbsent", value)

@@ -29,11 +29,11 @@ production wraps a TCP socket).
 from __future__ import annotations
 
 import json
-import os
-import re
 import struct
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ..durable import Spool, read_exact
 
 
 class MongoError(IOError):
@@ -172,11 +172,11 @@ def encode_op_msg(request_id: int, body: dict, *,
 def read_op_msg(read) -> "tuple[int, int, dict] | None":
     """Read one OP_MSG from a stream; returns (request_id,
     response_to, body) or None on clean EOF."""
-    hdr = _read_exact(read, 16, eof_ok=True)
+    hdr = read_exact(read, 16, MongoError, eof_ok=True)
     if hdr is None:
         return None
     total, req_id, resp_to, opcode = struct.unpack("<iiii", hdr)
-    rest = _read_exact(read, total - 16)
+    rest = read_exact(read, total - 16, MongoError)
     if opcode != OP_MSG:
         raise MongoError(f"unsupported opcode {opcode}")
     (flags,) = struct.unpack_from("<I", rest, 0)
@@ -213,18 +213,6 @@ def read_op_msg(read) -> "tuple[int, int, dict] | None":
     for ident, docs in extra.items():
         body.setdefault(ident, docs)
     return req_id, resp_to, body
-
-
-def _read_exact(read, n: int, *, eof_ok: bool = False):
-    buf = b""
-    while len(buf) < n:
-        chunk = read(n - len(buf))
-        if not chunk:
-            if eof_ok and not buf:
-                return None
-            raise MongoError("connection closed mid-message")
-        buf += chunk
-    return buf
 
 
 # -------------------------------------------------------------- server
@@ -480,24 +468,19 @@ class GetMongoSource:
 
     def __init__(self, spool_dir: str):
         self.spool_dir = spool_dir
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
+        self._spool = Spool(spool_dir)
 
     def drain(self, client: MongoClient, collection: str,
               query: dict | None = None, *, sort: dict | None = None,
               limit: int = 0, projection: dict | None = None,
               batch_size: int = 0) -> int:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         docs = client.find(collection, query, sort=sort, limit=limit,
                            projection=projection, batch_size=batch_size)
         if not docs:
             return 0
-        bid = self._next_batch
+        bid = self._spool.next_id
         table = pa.table({
             "batch_id": pa.array([bid] * len(docs), pa.int64()),
             "doc_seq": pa.array(range(len(docs)), pa.int64()),
@@ -507,11 +490,7 @@ class GetMongoSource:
             "payload": pa.array([_doc_json(d) for d in docs],
                                 pa.string()),
         })
-        final = os.path.join(self.spool_dir, f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)
-        self._next_batch = bid + 1
+        self._spool.land(table)
         return len(docs)
 
     def read(self, spark: SparkSession) -> DataFrame:

@@ -26,12 +26,12 @@ reference's attribute surface (topic/qos/retained/dup).
 
 from __future__ import annotations
 
-import os
-import re
 import struct
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ..durable import Spool, read_exact
 
 _SPOOL_SCHEMA = ("batch_id bigint, msg_idx bigint, topic string, "
                  "qos int, retained boolean, dup boolean, "
@@ -62,16 +62,6 @@ def encode_varint(n: int) -> bytes:
             return bytes(out)
 
 
-def _read_exact(read, n: int) -> bytes:
-    buf = b""
-    while len(buf) < n:
-        chunk = read(n - len(buf))
-        if not chunk:
-            raise MqttError(f"stream ended ({len(buf)}/{n})")
-        buf += chunk
-    return buf
-
-
 def read_packet(read) -> "tuple[int, int, bytes] | None":
     """→ (packet_type, flags, body) or None at clean EOF."""
     first = read(1)
@@ -81,14 +71,14 @@ def read_packet(read) -> "tuple[int, int, bytes] | None":
     n = 0
     shift = 0
     for _ in range(4):
-        b = _read_exact(read, 1)[0]
+        b = read_exact(read, 1, MqttError)[0]
         n |= (b & 0x7F) << shift
         if not b & 0x80:
             break
         shift += 7
     else:
         raise MqttError("malformed remaining length")
-    return ptype, flags, _read_exact(read, n) if n else b""
+    return ptype, flags, read_exact(read, n, MqttError) if n else b""
 
 
 def _mqtt_str(s: str) -> bytes:
@@ -415,22 +405,17 @@ class ConsumeMQTTSource:
 
     def __init__(self, spool_dir: str):
         self.spool_dir = spool_dir
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
+        self._spool = Spool(spool_dir)
 
     def drain(self, client: MqttClient, *filters: str) -> int:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         if filters:
             client.subscribe(*filters)
         msgs = client.drain()
         if not msgs:
             return 0
-        bid = self._next_batch
+        bid = self._spool.next_id
         table = pa.table({
             "batch_id": pa.array([bid] * len(msgs), pa.int64()),
             "msg_idx": pa.array(range(len(msgs)), pa.int64()),
@@ -440,11 +425,7 @@ class ConsumeMQTTSource:
             "dup": pa.array([d for *_, d in msgs], pa.bool_()),
             "payload": pa.array([p for _, p, *_ in msgs], pa.binary()),
         })
-        final = os.path.join(self.spool_dir, f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)
-        self._next_batch = bid + 1
+        self._spool.land(table)
         return len(msgs)
 
     def read(self, spark: SparkSession) -> DataFrame:

@@ -19,10 +19,9 @@ composes with operators.email_ops exactly like ListenSMTP's output.
 
 from __future__ import annotations
 
-import os
-import re
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ..durable import Spool
 
 _SPOOL_SCHEMA = ("batch_id bigint, msg_idx bigint, content string")
 
@@ -167,35 +166,26 @@ class ConsumePOP3Source:
 
     def __init__(self, spool_dir: str):
         self.spool_dir = spool_dir
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
+        self._spool = Spool(spool_dir)
 
     def drain(self, connect, *, user: str, password: str,
               delete: bool = True) -> int:
         """`connect()` → fresh (read_line, write) pair."""
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         read_line, write = connect()
         msgs = pop3_fetch(read_line, write, user=user,
                           password=password, delete=delete)
         if not msgs:
             return 0
-        bid = self._next_batch
+        bid = self._spool.next_id
         table = pa.table({
             "batch_id": pa.array([bid] * len(msgs), pa.int64()),
             "msg_idx": pa.array(range(len(msgs)), pa.int64()),
             "content": pa.array([m.decode("utf-8", errors="replace")
                                  for m in msgs], pa.string()),
         })
-        final = os.path.join(self.spool_dir, f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)
-        self._next_batch = bid + 1
+        self._spool.land(table)
         return len(msgs)
 
     def read(self, spark: SparkSession) -> DataFrame:

@@ -18,11 +18,11 @@ Commands: open (offers key=value per line), syslog (one event), close.
 
 from __future__ import annotations
 
-import os
-import re
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ..durable import Spool
 
 _SPOOL_SCHEMA = ("batch_id bigint, msg_idx bigint, txnr bigint, "
                  "sender string, raw string")
@@ -174,21 +174,16 @@ class ListenRELPSource:
 
     def __init__(self, spool_dir: str):
         self.spool_dir = spool_dir
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
+        self._spool = Spool(spool_dir)
 
     def drain_connection(self, read, write,
                          sender: str = "unknown:0") -> int:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         events = serve_relp(read, write, sender=sender)
         if not events:
             return 0
-        bid = self._next_batch
+        bid = self._spool.next_id
         table = pa.table({
             "batch_id": pa.array([bid] * len(events), pa.int64()),
             "msg_idx": pa.array(range(len(events)), pa.int64()),
@@ -197,11 +192,7 @@ class ListenRELPSource:
             "raw": pa.array([d.decode("utf-8", errors="replace")
                              for _, _, d in events], pa.string()),
         })
-        final = os.path.join(self.spool_dir, f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)
-        self._next_batch = bid + 1
+        self._spool.land(table)
         return len(events)
 
     def read(self, spark: SparkSession) -> DataFrame:

@@ -26,6 +26,8 @@ from __future__ import annotations
 import struct
 import threading
 
+from ..durable import read_exact
+
 
 # ------------------------------------------------------ proto codec
 
@@ -220,8 +222,8 @@ def put_riemann(rows: "list[dict]", inp, out, *,
         if transport.upper() == "TCP":
             out.write(struct.pack(">i", len(body)) + body)
             out.flush()
-            (ln,) = struct.unpack(">i", _read_exact(inp, 4))
-            ack = decode_msg(_read_exact(inp, ln))
+            (ln,) = struct.unpack(">i", read_exact(inp.read, 4))
+            ack = decode_msg(read_exact(inp.read, ln))
             if not ack.get("ok"):
                 raise RiemannError(ack.get("error", "no ack"))
         else:
@@ -229,16 +231,6 @@ def put_riemann(rows: "list[dict]", inp, out, *,
             out.flush()
         n += len(events)
     return n
-
-
-def _read_exact(inp, n: int) -> bytes:
-    buf = b""
-    while len(buf) < n:
-        chunk = inp.read(n - len(buf))
-        if not chunk:
-            raise EOFError(f"stream closed ({len(buf)}/{n})")
-        buf += chunk
-    return buf
 
 
 class RiemannServer:
@@ -251,11 +243,11 @@ class RiemannServer:
     def serve(self, inp, out) -> None:
         while True:
             try:
-                head = _read_exact(inp, 4)
+                head = read_exact(inp.read, 4)
             except EOFError:
                 return
             (ln,) = struct.unpack(">i", head)
-            msg = decode_msg(_read_exact(inp, ln))
+            msg = decode_msg(read_exact(inp.read, ln))
             self.events.extend(msg["events"])
             ack = encode_msg([], ok=True)
             out.write(struct.pack(">i", len(ack)) + ack)

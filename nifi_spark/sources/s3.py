@@ -29,13 +29,12 @@ XML-body Query protocols.
 from __future__ import annotations
 
 import hashlib
-import os
-import re
 import urllib.parse
 from xml.etree import ElementTree as ET
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..durable import Spool
 from ..ledger import KVState
 from .sqs import SqsError, sigv4_sign, sigv4_verify
 
@@ -243,16 +242,11 @@ class ListS3Source:
         self.spool_dir = spool_dir
         self.state = state
         self.key = key
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
+        self._spool = Spool(spool_dir)
 
     def drain(self, client: S3Client, bucket: str, *,
               prefix: str = "", max_keys: int = 1000) -> int:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         st = self.state.get(self.key)
         wm = int(st.get("currentTimestamp", 0))
@@ -266,7 +260,7 @@ class ListS3Source:
             fresh.append(obj)
         if not fresh:
             return 0
-        bid = self._next_batch
+        bid = self._spool.next_id
         table = pa.table({
             "batch_id": pa.array([bid] * len(fresh), pa.int64()),
             "filename": pa.array([o["filename"] for o in fresh],
@@ -282,12 +276,7 @@ class ListS3Source:
             "store_class": pa.array([o["s3.storeClass"] for o in fresh],
                                     pa.string()),
         })
-        final = os.path.join(self.spool_dir,
-                             f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)
-        self._next_batch = bid + 1
+        self._spool.land(table)
         new_wm = max(o["s3.lastModified"] for o in fresh)
         new_keys = [o["filename"] for o in fresh
                     if o["s3.lastModified"] == new_wm]

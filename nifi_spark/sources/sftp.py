@@ -32,6 +32,8 @@ import stat as statmod
 import struct
 import time
 
+from ..durable import read_exact
+
 # packet types (draft-ietf-secsh-filexfer-02 §3)
 FXP_INIT, FXP_VERSION = 1, 2
 FXP_OPEN, FXP_CLOSE, FXP_READ, FXP_WRITE = 3, 4, 5, 6
@@ -131,24 +133,14 @@ def write_packet(write, ptype: int, payload: bytes) -> None:
 
 
 def read_packet(read) -> "tuple[int, bytes] | None":
-    head = _read_exact(read, 4)
+    head = read_exact(read, 4, eof_ok=True)
     if head is None:
         return None
     (n,) = struct.unpack(">I", head)
-    body = _read_exact(read, n)
-    if body is None or not body:
+    body = read_exact(read, n, eof_ok=True)
+    if not body:
         return None
     return body[0], body[1:]
-
-
-def _read_exact(read, n: int) -> "bytes | None":
-    buf = b""
-    while len(buf) < n:
-        chunk = read(n - len(buf))
-        if not chunk:
-            return None if not buf else buf
-        buf += chunk
-    return buf
 
 
 # --------------------------------------------------------------- server

@@ -39,6 +39,8 @@ import struct
 import zlib
 from dataclasses import dataclass, field
 
+from ..durable import read_exact
+
 
 class S2SProtocolError(IOError):
     pass
@@ -77,19 +79,9 @@ def write_utf(out, s: str) -> None:
     out.write(struct.pack(">H", len(b)) + bytes(b))
 
 
-def _read_exact(inp, n: int) -> bytes:
-    buf = b""
-    while len(buf) < n:
-        chunk = inp.read(n - len(buf))
-        if not chunk:
-            raise EOFError(f"stream ended ({len(buf)}/{n} bytes)")
-        buf += chunk
-    return buf
-
-
 def read_utf(inp) -> str:
-    n = struct.unpack(">H", _read_exact(inp, 2))[0]
-    raw = _read_exact(inp, n)
+    n = struct.unpack(">H", read_exact(inp.read, 2))[0]
+    raw = read_exact(inp.read, n)
     # modified UTF-8 decode (tolerate C0 80 NULs and CESU-8 pairs)
     out, i = [], 0
     while i < len(raw):
@@ -149,7 +141,7 @@ def write_response(out, code: str, explanation: "str | None" = None):
 
 
 def read_response(inp) -> tuple[str, "str | None"]:
-    seq = _read_exact(inp, 3)
+    seq = read_exact(inp.read, 3)
     if seq[:2] != b"RC":
         raise S2SProtocolError(f"bad response sequence {seq!r}")
     name, has_msg = _CODE_BY_NUM.get(seq[2], ("UNRECOGNIZED", False))
@@ -213,7 +205,7 @@ def encode_packet(packet: DataPacket, out) -> None:
 
 def decode_packet(inp) -> "DataPacket | None":
     try:
-        first = _read_exact(inp, 4)
+        first = read_exact(inp.read, 4)
     except EOFError:
         return None
     n_attrs = struct.unpack(">i", first)[0]
@@ -222,12 +214,12 @@ def decode_packet(inp) -> "DataPacket | None":
             f"FlowFile exceeds maximum number of attributes ({n_attrs})")
     attrs = {}
     for _ in range(n_attrs):
-        klen = struct.unpack(">i", _read_exact(inp, 4))[0]
-        k = _read_exact(inp, klen).decode()
-        vlen = struct.unpack(">i", _read_exact(inp, 4))[0]
-        attrs[k] = _read_exact(inp, vlen).decode()
-    size = struct.unpack(">q", _read_exact(inp, 8))[0]
-    return DataPacket(attrs, _read_exact(inp, size))
+        klen = struct.unpack(">i", read_exact(inp.read, 4))[0]
+        k = read_exact(inp.read, klen).decode()
+        vlen = struct.unpack(">i", read_exact(inp.read, 4))[0]
+        attrs[k] = read_exact(inp.read, vlen).decode()
+    size = struct.unpack(">q", read_exact(inp.read, 8))[0]
+    return DataPacket(attrs, read_exact(inp.read, size))
 
 
 # client transaction (AbstractTransaction.java) ---------------------
@@ -428,12 +420,12 @@ class S2SClient:
             write_utf(self.out, resource)
             self.out.write(struct.pack(">i", version))
             self.out.flush()
-            status = _read_exact(self.inp, 1)[0]
+            status = read_exact(self.inp.read, 1)[0]
             if status == RESOURCE_OK:
                 return version
             if status == DIFFERENT_RESOURCE_VERSION:
                 server_pref = struct.unpack(
-                    ">i", _read_exact(self.inp, 4))[0]
+                    ">i", read_exact(self.inp.read, 4))[0]
                 if server_pref < 1:
                     raise S2SHandshakeError(
                         f"could not agree on version for {resource}")
@@ -454,13 +446,13 @@ class S2SClient:
         flowFileCount) per peer — the PeerSelector's weighting input."""
         write_utf(self.out, "REQUEST_PEER_LIST")
         self.out.flush()
-        n = struct.unpack(">i", _read_exact(self.inp, 4))[0]
+        n = struct.unpack(">i", read_exact(self.inp.read, 4))[0]
         peers = []
         for _ in range(n):
             host = read_utf(self.inp)
-            port, = struct.unpack(">i", _read_exact(self.inp, 4))
-            secure = _read_exact(self.inp, 1) != b"\x00"
-            count, = struct.unpack(">i", _read_exact(self.inp, 4))
+            port, = struct.unpack(">i", read_exact(self.inp.read, 4))
+            secure = read_exact(self.inp.read, 1) != b"\x00"
+            count, = struct.unpack(">i", read_exact(self.inp.read, 4))
             peers.append({"hostname": host, "port": port,
                           "secure": secure, "flowfile_count": count})
         return peers
@@ -501,13 +493,13 @@ def serve_connection(inp, out, ports: dict[str, S2SPort],
     exchange the client implements above; SEND lands packets into the
     port's `received` list ATOMICALLY per transaction (two-phase commit:
     nothing lands on checksum mismatch or cancel)."""
-    if _read_exact(inp, 4) != MAGIC:
+    if read_exact(inp.read, 4) != MAGIC:
         raise S2SProtocolError("bad magic")
 
     def accept_resource(expect_name, version_cap):
         while True:
             name = read_utf(inp)
-            ver = struct.unpack(">i", _read_exact(inp, 4))[0]
+            ver = struct.unpack(">i", read_exact(inp.read, 4))[0]
             if name != expect_name:
                 out.write(bytes([ABORT]))
                 write_utf(out, f"unknown resource {name}")
@@ -526,7 +518,7 @@ def serve_connection(inp, out, ports: dict[str, S2SPort],
     read_utf(inp)                       # comms identifier
     if version >= 3:
         read_utf(inp)                   # peer url
-    n_props = struct.unpack(">i", _read_exact(inp, 4))[0]
+    n_props = struct.unpack(">i", read_exact(inp.read, 4))[0]
     props = {read_utf(inp): read_utf(inp) for _ in range(n_props)}
     port_id = props.get("PORT_IDENTIFIER")
     if port_id not in ports:

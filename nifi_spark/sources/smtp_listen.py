@@ -22,11 +22,12 @@ distributed scan.
 
 from __future__ import annotations
 
-import os
 import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ..durable import Spool
 
 _SPOOL_SCHEMA = ("batch_id bigint, msg_idx bigint, helo string, "
                  "src string, mail_from string, "
@@ -157,25 +158,20 @@ class ListenSMTPSource:
         self.spool_dir = spool_dir
         self.hostname = hostname
         self.max_message_size = max_message_size
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
+        self._spool = Spool(spool_dir)
 
     def drain_connection(self, read_line, write,
                          src: str = "unknown:0") -> int:
         """Serve one connection; land its messages as one spool file.
         Returns messages landed."""
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         msgs = serve_smtp(read_line, write, hostname=self.hostname,
                           src=src,
                           max_message_size=self.max_message_size)
         if not msgs:
             return 0
-        bid = self._next_batch
+        bid = self._spool.next_id
         table = pa.table({
             "batch_id": pa.array([bid] * len(msgs), pa.int64()),
             "msg_idx": pa.array(range(len(msgs)), pa.int64()),
@@ -187,11 +183,7 @@ class ListenSMTPSource:
                                    pa.list_(pa.string())),
             "content": pa.array([m.content for m in msgs], pa.string()),
         })
-        final = os.path.join(self.spool_dir, f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)
-        self._next_batch = bid + 1
+        self._spool.land(table)
         return len(msgs)
 
     def read(self, spark: SparkSession) -> DataFrame:

@@ -34,11 +34,11 @@ listen/get source in this repo.
 from __future__ import annotations
 
 import json
-import os
-import re
 import urllib.parse
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ..durable import Spool
 
 ENDPOINT_SAMPLE = "Sample Endpoint"
 ENDPOINT_FIREHOSE = "Firehose Endpoint"
@@ -48,30 +48,20 @@ ENDPOINT_FILTER = "Filter Endpoint"
 class _Spool:
     def __init__(self, spool_dir: str):
         self.spool_dir = spool_dir
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
+        self._spool = Spool(spool_dir)
 
     def land(self, payloads: "list[str]", mime: str) -> int:
         if not payloads:
             return 0
         import pyarrow as pa
-        import pyarrow.parquet as pq
-        bid = self._next_batch
+        bid = self._spool.next_id
         t = pa.table({
             "batch_id": pa.array([bid] * len(payloads), pa.int64()),
             "row_seq": pa.array(range(len(payloads)), pa.int64()),
             "mime_type": pa.array([mime] * len(payloads)),
             "payload": pa.array(payloads, pa.string()),
         })
-        final = os.path.join(self.spool_dir,
-                             f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(t, tmp)
-        os.rename(tmp, final)
-        self._next_batch = bid + 1
+        self._spool.land(t)
         return len(payloads)
 
     def read(self, spark: SparkSession) -> DataFrame:

@@ -28,12 +28,12 @@ tests wire it straight to `SolrServer.handle`.
 from __future__ import annotations
 
 import json
-import os
 import re
 import urllib.parse
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..durable import Spool
 from ..ledger import KVState
 
 
@@ -244,11 +244,7 @@ class GetSolrSource:
         self.spool_dir = spool_dir
         self.state = state
         self.key = key
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
+        self._spool = Spool(spool_dir)
 
     def drain(self, client: SolrClient, *, date_field: str,
               now, rows: int = 10, q: str = "*:*",
@@ -263,7 +259,6 @@ class GetSolrSource:
         `fields` must include the date field (needed for the
         watermark) and id (the cursor tiebreak)."""
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         if fields and (date_field not in fields or "id" not in fields):
             raise SolrError("fields must include the date field and id")
@@ -279,7 +274,7 @@ class GetSolrSource:
                     for d in docs]
         if not docs:
             return 0
-        bid = self._next_batch
+        bid = self._spool.next_id
         table = pa.table({
             "batch_id": pa.array([bid] * len(docs), pa.int64()),
             "doc_seq": pa.array(range(len(docs)), pa.int64()),
@@ -289,11 +284,7 @@ class GetSolrSource:
                  for d in docs], pa.string()),
             date_field: pa.array([d[date_field] for d in docs]),
         })
-        final = os.path.join(self.spool_dir, f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)
-        self._next_batch = bid + 1
+        self._spool.land(table)
         self.state.put(self.key,
                        {"watermark": docs[-1][date_field]})
         return len(docs)

@@ -33,12 +33,12 @@ drains land parquet spool files read back as a DataFrame.
 from __future__ import annotations
 
 import json
-import os
 import re
 import urllib.parse
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..durable import Spool
 from ..ledger import KVState
 
 DATE_TIME_FORMAT_NOTE = "yyyy-MM-dd'T'HH:mm:ss.SSSZ"  # GetSplunk.java:156
@@ -157,11 +157,7 @@ class GetSplunkSource:
         self.earliest_prop = earliest_time
         self.latest_prop = latest_time
         self.output_mode = output_mode
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
+        self._spool = Spool(spool_dir)
 
     def _fingerprint(self) -> str:
         # onPropertyModified: query/field-strategy/range-strategy/
@@ -224,8 +220,7 @@ class GetSplunkSource:
         if not rows:
             return 0
         import pyarrow as pa
-        import pyarrow.parquet as pq
-        bid = self._next_batch
+        bid = self._spool.next_id
         table = pa.table({
             "batch_id": pa.array([bid] * len(rows), pa.int64()),
             "row_seq": pa.array(range(len(rows)), pa.int64()),
@@ -234,11 +229,7 @@ class GetSplunkSource:
             "splunk_earliest_time": pa.array([earliest or ""] * len(rows)),
             "splunk_latest_time": pa.array([latest or ""] * len(rows)),
         })
-        final = os.path.join(self.spool_dir, f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)
-        self._next_batch = bid + 1
+        self._spool.land(table)
         return len(rows)
 
     def read(self, spark: SparkSession) -> DataFrame:

@@ -34,12 +34,13 @@ from __future__ import annotations
 
 import hashlib
 import hmac
-import os
 import re
 import urllib.parse
 from xml.etree import ElementTree as ET
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ..durable import Spool
 
 
 class SqsError(IOError):
@@ -332,23 +333,18 @@ class GetSQSSource:
 
     def __init__(self, spool_dir: str):
         self.spool_dir = spool_dir
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
+        self._spool = Spool(spool_dir)
 
     def drain(self, client: SqsClient, *, max_messages: int = 10,
               auto_delete: bool = True) -> int:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         landed = 0
         while True:
             msgs = client.receive_messages(max_messages=max_messages)
             if not msgs:
                 return landed
-            bid = self._next_batch
+            bid = self._spool.next_id
             table = pa.table({
                 "batch_id": pa.array([bid] * len(msgs), pa.int64()),
                 "msg_seq": pa.array(range(len(msgs)), pa.int64()),
@@ -362,12 +358,7 @@ class GetSQSSource:
                     [sorted(m["attributes"].items()) for m in msgs],
                     pa.map_(pa.string(), pa.string())),
             })
-            final = os.path.join(self.spool_dir,
-                                 f"batch_{bid:08d}.parquet")
-            tmp = final + ".tmp"
-            pq.write_table(table, tmp)
-            os.rename(tmp, final)
-            self._next_batch = bid + 1
+            self._spool.land(table)
             landed += len(msgs)
             if auto_delete:
                 for m in msgs:

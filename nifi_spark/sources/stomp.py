@@ -31,10 +31,9 @@ deterministic batch boundary with no timing dependence.
 
 from __future__ import annotations
 
-import os
-import re
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ..durable import Spool, read_exact
 
 
 class StompError(IOError):
@@ -86,16 +85,6 @@ def encode_frame(command: str, headers: "dict[str, str]",
     return ("\n".join(lines) + "\n\n").encode() + body + b"\x00"
 
 
-def _read_exact(read, n: int) -> bytes:
-    buf = b""
-    while len(buf) < n:
-        chunk = read(n - len(buf))
-        if not chunk:
-            raise StompError(f"stream ended ({len(buf)}/{n})")
-        buf += chunk
-    return buf
-
-
 def read_frame(read) -> "tuple[str, dict[str, str], bytes] | None":
     """→ (command, headers, body) or None at clean EOF. Skips
     inter-frame EOLs (heart-beats are bare newlines). First-written
@@ -129,8 +118,8 @@ def read_frame(read) -> "tuple[str, dict[str, str], bytes] | None":
             k, v = _unesc(k), _unesc(v)
         headers.setdefault(k, v)
     if "content-length" in headers:
-        body = _read_exact(read, int(headers["content-length"]))
-        if _read_exact(read, 1) != b"\x00":
+        body = read_exact(read, int(headers["content-length"]), StompError)
+        if read_exact(read, 1, StompError) != b"\x00":
             raise StompError("missing frame NUL after content-length body")
     else:
         body = bytearray()
@@ -383,20 +372,15 @@ class GetJMSSource:
 
     def __init__(self, spool_dir: str):
         self.spool_dir = spool_dir
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
+        self._spool = Spool(spool_dir)
 
     def drain(self, client: StompClient) -> int:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         msgs = client.drain()
         if not msgs:
             return 0
-        bid = self._next_batch
+        bid = self._spool.next_id
         dests, mids, bodies, attrs = [], [], [], []
         for headers, body in msgs:
             dests.append(headers.get("destination", ""))
@@ -420,11 +404,7 @@ class GetJMSSource:
             "attributes": pa.array(
                 attrs, pa.map_(pa.string(), pa.string())),
         })
-        final = os.path.join(self.spool_dir, f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)
-        self._next_batch = bid + 1
+        self._spool.land(table)
         return len(msgs)
 
     def read(self, spark: SparkSession) -> DataFrame:

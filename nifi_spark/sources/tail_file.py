@@ -52,6 +52,8 @@ import zlib
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..durable import Spool, atomic_write
+
 _SPOOL_SCHEMA = ("batch_id bigint, filename string, original_path string, "
                  "start_pos bigint, end_pos bigint, content string, "
                  "mime_type string")
@@ -93,15 +95,11 @@ class TailFileSource:
         self.spool_dir = spool_dir
         self.rolling_pattern = rolling_pattern
         self.charset = charset
-        os.makedirs(spool_dir, exist_ok=True)
         # underscore prefix keeps the state file invisible to Spark's
         # file index when the spool is read as a parquet table
         self.state_path = state_path or os.path.join(spool_dir,
                                                      "_tail_state.json")
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
+        self._spool = Spool(spool_dir)
         st = self._load_state()
         self.position = int(st.get("position", 0))
         self.timestamp = int(st.get("timestamp", 0))   # mtime_ns watermark
@@ -130,18 +128,14 @@ class TailFileSource:
         state = {"filename": self.tail_path, "position": self.position,
                  "timestamp": self.timestamp, "length": self.length,
                  "checksum": self.checksum}
-        tmp = self.state_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, self.state_path)
+        atomic_write(self.state_path, json.dumps(state))
 
     # ------------------------------------------------------------ spool
 
     def _land(self, filename: str, start: int, end: int,
               content: bytes) -> None:
         import pyarrow as pa
-        import pyarrow.parquet as pq
-        bid = self._next_batch
+        bid = self._spool.next_id
         table = pa.table({
             "batch_id": pa.array([bid], pa.int64()),
             "filename": pa.array([filename], pa.string()),
@@ -153,11 +147,7 @@ class TailFileSource:
                                 pa.string()),
             "mime_type": pa.array(["text/plain"], pa.string()),
         })
-        final = os.path.join(self.spool_dir, f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)      # visibility = atomic rename
-        self._next_batch = bid + 1
+        self._spool.land(table)
 
     # --------------------------------------------------------- rollover
 
@@ -385,9 +375,7 @@ class MultiTailFileSource:
             if path not in self._tails:
                 sub = os.path.join(self.spool_dir, "t_" + self._hash(path))
                 os.makedirs(sub, exist_ok=True)
-                with open(os.path.join(sub, "_tail_path.txt"),
-                          "w") as fh:
-                    fh.write(path)
+                atomic_write(os.path.join(sub, "_tail_path.txt"), path)
                 self._tails[path] = TailFileSource(
                     path, sub, rolling_pattern=self.rolling_pattern,
                     charset=self.charset)

@@ -23,11 +23,12 @@ from __future__ import annotations
 
 import base64
 import hashlib
-import os
 import re
 import struct
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ..durable import Spool, read_exact
 
 _GUID = "258EAFA5-E914-47DA-95CA-C5AB0DC85B11"
 
@@ -46,16 +47,6 @@ def ws_accept_key(client_key: str) -> str:
     """Sec-WebSocket-Accept (RFC 6455 §4.2.2 step 5.4)."""
     digest = hashlib.sha1((client_key + _GUID).encode()).digest()
     return base64.b64encode(digest).decode()
-
-
-def _read_exact(read, n: int) -> bytes:
-    buf = b""
-    while len(buf) < n:
-        chunk = read(n - len(buf))
-        if not chunk:
-            raise WsError(f"connection closed ({len(buf)}/{n})")
-        buf += chunk
-    return buf
 
 
 def encode_frame(opcode: int, payload: bytes, *, fin: bool = True,
@@ -81,17 +72,17 @@ def encode_frame(opcode: int, payload: bytes, *, fin: bool = True,
 
 def decode_frame(read) -> tuple[bool, int, bytes]:
     """→ (fin, opcode, unmasked payload)."""
-    b0, b1 = _read_exact(read, 2)
+    b0, b1 = read_exact(read, 2, WsError)
     fin = bool(b0 & 0x80)
     opcode = b0 & 0x0F
     masked = bool(b1 & 0x80)
     n = b1 & 0x7F
     if n == 126:
-        (n,) = struct.unpack(">H", _read_exact(read, 2))
+        (n,) = struct.unpack(">H", read_exact(read, 2, WsError))
     elif n == 127:
-        (n,) = struct.unpack(">Q", _read_exact(read, 8))
-    mask = _read_exact(read, 4) if masked else None
-    payload = _read_exact(read, n) if n else b""
+        (n,) = struct.unpack(">Q", read_exact(read, 8, WsError))
+    mask = read_exact(read, 4, WsError) if masked else None
+    payload = read_exact(read, n, WsError) if n else b""
     if mask:
         payload = bytes(b ^ mask[i % 4] for i, b in enumerate(payload))
     return fin, opcode, payload
@@ -141,7 +132,7 @@ def serve_websocket(read, write, *, path: str = "/ws",
     frag: bytearray = bytearray()
     while max_messages is None or len(messages) < max_messages:
         try:
-            b0, b1 = _read_exact(read, 2)
+            b0, b1 = read_exact(read, 2, WsError)
         except WsError:
             break
         # re-parse with the two bytes we already consumed
@@ -150,14 +141,14 @@ def serve_websocket(read, write, *, path: str = "/ws",
         masked = bool(b1 & 0x80)
         n = b1 & 0x7F
         if n == 126:
-            (n,) = struct.unpack(">H", _read_exact(read, 2))
+            (n,) = struct.unpack(">H", read_exact(read, 2, WsError))
         elif n == 127:
-            (n,) = struct.unpack(">Q", _read_exact(read, 8))
+            (n,) = struct.unpack(">Q", read_exact(read, 8, WsError))
         if not masked and opcode != OP_CLOSE:
             write(encode_frame(OP_CLOSE, struct.pack(">H", 1002)))
             raise WsError("client frame not masked (RFC 6455 §5.1)")
-        mask = _read_exact(read, 4) if masked else None
-        payload = _read_exact(read, n) if n else b""
+        mask = read_exact(read, 4, WsError) if masked else None
+        payload = read_exact(read, n, WsError) if n else b""
         if mask:
             payload = bytes(b ^ mask[i % 4]
                             for i, b in enumerate(payload))
@@ -285,20 +276,15 @@ class ListenWebSocketSource:
     def __init__(self, spool_dir: str, *, path: str = "/ws"):
         self.spool_dir = spool_dir
         self.path = path
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
+        self._spool = Spool(spool_dir)
 
     def drain_connection(self, read, write) -> int:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         msgs = serve_websocket(read, write, path=self.path)
         if not msgs:
             return 0
-        bid = self._next_batch
+        bid = self._spool.next_id
         table = pa.table({
             "batch_id": pa.array([bid] * len(msgs), pa.int64()),
             "msg_idx": pa.array(range(len(msgs)), pa.int64()),
@@ -310,11 +296,7 @@ class ListenWebSocketSource:
             "data": pa.array([p if op == OP_BINARY else None
                               for op, p in msgs], pa.binary()),
         })
-        final = os.path.join(self.spool_dir, f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)
-        self._next_batch = bid + 1
+        self._spool.land(table)
         return len(msgs)
 
     def read(self, spark: SparkSession) -> DataFrame:

@@ -4,16 +4,16 @@ The sandbox has no Iceberg catalog, so the engine targets a clean storage
 seam with the same semantics an Iceberg `MERGE INTO` would give:
 
 * **Snapshot isolation + atomic commit**: every merge writes a new version
-  directory plus a JSON manifest; the commit point is a single atomic
-  `os.replace` of the VERSION pointer (NiFi analog: the FlowFile-repo WAL
-  update is the session-commit atomicity point, StandardProcessSession.java:
-  361-370; here the pointer swap plays that role).
+  directory plus a JSON manifest; the commit point is a single
+  `durable.atomic_write` of the VERSION pointer (NiFi analog: the
+  FlowFile-repo WAL update is the session-commit atomicity point,
+  StandardProcessSession.java:361-370; here the pointer swap plays that
+  role).
 * **Hash-bucketed layout**: rows live in `bucket = pmod(xxhash64(repo,path),
   n_buckets)` partitions. A merge only reads and rewrites *dirty* buckets —
   cost scales with the change set, not the table. At 100 TB you'd raise
   n_buckets so each bucket is a few GB; with a real Iceberg catalog the same
-  pruning comes from partition transforms (`bucket(N, repo)`), and
-  `IcebergTableAdapter` below shows the MERGE INTO shape.
+  pruning comes from partition transforms (`bucket(N, repo)`).
 * **Schema evolution without rewrites**: manifests carry numbered schemas;
   files written under an old schema are mapped positionally (append-only
   adds + in-place renames ⇒ position is a stable field id, the same trick
@@ -23,10 +23,12 @@ seam with the same semantics an Iceberg `MERGE INTO` would give:
   ledger-write is idempotent (exactly-once end state; upgrades NiFi's
   at-least-once commit-then-state edge, QueryDatabaseTable.java:313-321).
 
-The merge itself is a single hash aggregation, not a join: current rows of
-dirty buckets are unioned with the compacted change set and reduced with
-`max_by(row, lsn)` per key. Partial (map-side) aggregation makes this
-naturally skew-tolerant — a hot repo's rows combine before the shuffle.
+The merge unions current rows of dirty buckets with the change set, finds
+each key's winning LSN with a narrow hash aggregation over (key, lsn, op)
+only, and joins the winners back to fetch the full rows — full-width rows
+never cross a wide shuffle. Partial (map-side) aggregation keeps the
+winner selection skew-tolerant: a hot repo's rows combine before the
+shuffle.
 """
 
 from __future__ import annotations
@@ -36,6 +38,8 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from .durable import atomic_write
 
 _BASE = [("repo", "string"), ("path", "string"), ("commit", "string"),
          ("lang", "string"), ("content", "string")]
@@ -78,14 +82,8 @@ class SnapshotTableStore:
         """Write manifest, then atomically swap the VERSION pointer."""
         v = manifest["version"]
         os.makedirs(os.path.join(self.root, "manifests"), exist_ok=True)
-        mp = self._manifest_path(v)
-        with open(mp + ".tmp", "w") as f:
-            json.dump(manifest, f)
-        os.replace(mp + ".tmp", mp)
-        pp = self._ptr_path()
-        with open(pp + ".tmp", "w") as f:
-            f.write(str(v))
-        os.replace(pp + ".tmp", pp)  # ← the atomic commit point
+        atomic_write(self._manifest_path(v), json.dumps(manifest))
+        atomic_write(self._ptr_path(), str(v))  # ← the atomic commit point
         return v
 
     def init(self, extra_schema: list[tuple[str, str]] | None = None) -> None:
@@ -329,8 +327,7 @@ class SnapshotTableStore:
     # ---------------- merge (the PutSQL / MERGE INTO analog) ----------------
     def merge(self, spark: SparkSession, changes: DataFrame,
               strategy: str = "argmax",
-              assume_all_dirty: bool = False,
-              dedup_ties: bool = False) -> dict:
+              assume_all_dirty: bool = False) -> dict:
         """Apply a change set (store-schema columns + `op` ∈
         {'upsert','delete'} + `lsn`; multiple rows per key allowed — LWW
         by LSN happens here, exactly once).
@@ -340,15 +337,13 @@ class SnapshotTableStore:
           (repo, path, lsn, op) to find each key's winning LSN, then
           join the winner list back against current∪changes to fetch the
           winning full rows. Full-width rows (content ~KBs) NEVER enter
-          a wide shuffle — measured ~2× the max_by plan at 8M
-          events/batch and scales with cores because the only wide
+          a wide shuffle — measured ~2× a full-row max_by hash-agg at
+          8M events/batch and scales with cores because the only wide
           movement left is the final per-bucket write. AQE picks the
           join physical form at runtime: broadcast-hash while the
           touched-key set fits an executor, shuffle join past that
           (10^9+ touched keys) — same semantics either way, no driver
           count job needed.
-        * 'maxby' — single wide hash-agg `max_by(full_row, lsn)`;
-          simplest plan, shuffles full-width partial aggregates.
         * 'delta' — merge-on-read: the batch (within-batch LWW
           compacted, delete tombstones KEPT) appends as per-bucket
           delta files; no base bucket is read or rewritten, so
@@ -368,9 +363,8 @@ class SnapshotTableStore:
         per-bucket repartition before write). Changes must be
         (key, lsn)-unique — automatic for any real changelog, where the
         LSN is a log position; for at-least-once feeds that can
-        re-deliver inside one batch, pass dedup_ties=True (adds a
-        dropDuplicates — one extra wide exchange) or run
-        operators.detect_duplicate upstream.
+        re-deliver inside one batch, run operators.detect_duplicate
+        upstream (CdcPipeline's delivery dedup does).
 
         assume_all_dirty ("bulk mode"): skip the dirty-bucket probe job
         and treat every bucket as dirty. Correct always (clean buckets
@@ -380,9 +374,9 @@ class SnapshotTableStore:
 
         Returns stats {dirty_buckets, rows_written, version}.
         """
+        if strategy not in ("argmax", "delta"):
+            raise ValueError(f"unknown merge strategy {strategy!r}")
         m = self._load_manifest()
-        cur = self.schema_columns(m)
-        names = [n for n, _ in cur]
         nb = m["n_buckets"]
 
         # No cache: the dirty-bucket probe is a column-pruned scan of just
@@ -408,44 +402,25 @@ class SnapshotTableStore:
                    .withColumn("_src", F.lit(0)))
         unioned = current.unionByName(chg.select(*current.columns))
 
-        if strategy == "argmax":
-            # (lsn, _src) is unique per key: the store holds one row per
-            # key (_src=0) and changes are (key,lsn)-unique (_src=1), so
-            # a replay tie (change lsn == stored lsn) resolves to the
-            # change copy and the winner join is 1:1 — no wide dedup.
-            winners = (unioned.select(*KEY, "lsn", "_src", "op")
-                       .groupBy(*KEY)
-                       .agg(F.max(F.struct("lsn", "_src")).alias("w"),
-                            F.max_by("op", F.struct("lsn", "_src"))
-                             .alias("_wop"))
-                       .filter(F.col("_wop") != "delete")
-                       .select(*KEY, F.col("w.lsn").alias("lsn"),
-                               F.col("w._src").alias("_src")))
-            # No explicit broadcast and no count job: AQE sees the
-            # winners' runtime size after the narrow agg and picks
-            # broadcast-hash for small winner sets, shuffle join when
-            # the touched-key set is too big to broadcast.
-            winner = (unioned.join(winners, [*KEY, "lsn", "_src"])
-                      .withColumnRenamed("lsn", "_last_lsn")
-                      .drop("op", "_src"))
-            if dedup_ties:
-                winner = winner.dropDuplicates(KEY)
-        elif strategy == "maxby":
-            # LWW reduce: one hash-agg (partial map-side combine ⇒
-            # skew-safe), cheaper than the sort a window would force.
-            winners = None
-            row = F.struct(*[F.col(c) for c in names], F.col("op"), F.col("bucket"))
-            winner = (unioned.groupBy(*KEY)
-                      .agg(F.max_by(row, F.col("lsn")).alias("w"),
-                           F.max("lsn").alias("_last_lsn"))
-                      .select(*[F.col(f"w.{c}").alias(c) for c in names],
-                              F.col("w.op").alias("op"),
-                              F.col("w.bucket").alias("bucket"),
-                              "_last_lsn")
-                      .filter(F.col("op") != "delete")
-                      .drop("op"))
-        else:
-            raise ValueError(f"unknown merge strategy {strategy!r}")
+        # (lsn, _src) is unique per key: the store holds one row per
+        # key (_src=0) and changes are (key,lsn)-unique (_src=1), so
+        # a replay tie (change lsn == stored lsn) resolves to the
+        # change copy and the winner join is 1:1 — no wide dedup.
+        winners = (unioned.select(*KEY, "lsn", "_src", "op")
+                   .groupBy(*KEY)
+                   .agg(F.max(F.struct("lsn", "_src")).alias("w"),
+                        F.max_by("op", F.struct("lsn", "_src"))
+                         .alias("_wop"))
+                   .filter(F.col("_wop") != "delete")
+                   .select(*KEY, F.col("w.lsn").alias("lsn"),
+                           F.col("w._src").alias("_src")))
+        # No explicit broadcast and no count job: AQE sees the
+        # winners' runtime size after the narrow agg and picks
+        # broadcast-hash for small winner sets, shuffle join when
+        # the touched-key set is too big to broadcast.
+        winner = (unioned.join(winners, [*KEY, "lsn", "_src"])
+                  .withColumnRenamed("lsn", "_last_lsn")
+                  .drop("op", "_src"))
 
         new_version = m["version"] + 1
         rel = os.path.join("versions", f"v{new_version:06d}")
@@ -547,26 +522,3 @@ class SnapshotTableStore:
         self._commit(m)
         return {"compacted_buckets": target, "version": new_version}
 
-
-class IcebergTableAdapter:
-    """The same seam over a real Iceberg catalog (not available in sandbox).
-
-    With `spark.sql.catalog.lake = org.apache.iceberg.spark.SparkCatalog`
-    configured, merge() issues:
-
-        MERGE INTO lake.db.repos t
-        USING changes s
-        ON t.repo = s.repo AND t.path = s.path
-        WHEN MATCHED AND s.op = 'delete' AND s.lsn > t._last_lsn THEN DELETE
-        WHEN MATCHED AND s.lsn > t._last_lsn THEN UPDATE SET *
-        WHEN NOT MATCHED AND s.op != 'delete' THEN INSERT *
-
-    and evolve() issues `ALTER TABLE ... ADD COLUMN / RENAME COLUMN`.
-    Table creation uses `PARTITIONED BY (bucket(N, repo))` so the merge
-    prunes to dirty buckets exactly as SnapshotTableStore does.
-    """
-
-    def __init__(self, spark: SparkSession, table: str):
-        self.spark, self.table = spark, table
-        raise NotImplementedError("no Iceberg catalog in this sandbox; "
-                                  "use SnapshotTableStore")

@@ -151,8 +151,7 @@ def compact_index(spark: SparkSession, index_path: str,
         (int(d.split("=", 1)[1]), d)
         for d in os.listdir(index_path)
         if d.startswith("batch=") and d != "batch=-1")
-    fold = [d for _, d in subs[:len(subs) - keep_last]] if keep_last \
-        else [d for _, d in subs]
+    fold = [d for _, d in subs[:max(0, len(subs) - keep_last)]]
     if not fold:
         return 0
     paths = [os.path.join(index_path, d) for d in fold]

@@ -251,3 +251,19 @@ def test_txn_transfer_multiframe_and_unknown_txn():
     assert broker.partitions[0][0][3] == big
     with pytest.raises(Amqp10Error):
         recv.discharge_txn(txn, fail=False)   # unknown txn-id now
+
+
+def test_declare_txn_reuses_coordinator_handle_zero():
+    """On a fresh client the coordinator link gets handle 0; a second
+    declare must reuse it rather than attach another link."""
+    broker = EventHubBroker("hub1", 1, users={"u": "p"})
+    r, w, join = eventhub_loopback(broker)
+    recv = EventHubReceiver(r, w, hub="hub1", user="u", password="p")
+    attach, attaches = recv._attach_coordinator, []
+    recv._attach_coordinator = lambda: attaches.append(1) or attach()
+    recv.declare_txn()
+    recv.declare_txn()
+    assert recv._txn_handle == 0
+    assert len(attaches) == 1
+    recv.close()
+    join()

@@ -133,3 +133,19 @@ def test_compact_index_is_read_equivalent(spark, tmp_path):
     # idempotent re-run folds the rest
     assert compact_index(spark, src.index_path) == 2  # batch=2 + batch=3
     assert compact_index(spark, src.index_path) == 0
+
+
+def test_compact_index_keep_last_beyond_dir_count(spark, tmp_path):
+    """keep_last larger than the number of batch dirs folds nothing: the
+    slice must not wrap and fold dirs it promised to keep."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from nifi_spark.streaming.dedup_index_stream import compact_index
+    index = tmp_path / "index"
+    for b in range(3):
+        os.makedirs(index / f"batch={b}")
+        pq.write_table(pa.table({"doc_id": pa.array([b], pa.int64()),
+                                 "kind": ["exact"], "key": [str(b)]}),
+                       str(index / f"batch={b}" / "part-0.parquet"))
+    assert compact_index(spark, str(index), keep_last=5) == 0
+    assert sorted(os.listdir(index)) == ["batch=0", "batch=1", "batch=2"]

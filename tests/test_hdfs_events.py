@@ -88,7 +88,7 @@ def test_watermark_survives_restart(tmp_path):
     src2 = GetHDFSEventsSource(feed, str(tmp_path / "spool"))
     assert src2.last_txid == 2
     assert src2.drain() == 2               # only the unseen half
-    assert src2._next_batch == 2           # batch ids recovered too
+    assert src2._spool.next_id == 2       # batch ids recovered too
 
 
 def test_spark_read(spark, tmp_path):
