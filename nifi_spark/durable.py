@@ -13,6 +13,10 @@ Temp names are `_`-prefixed. Spark's file index (batch and streaming)
 skips `_` and `.` names, so a temp file stranded in a spool directory
 by a crash is invisible to `spark.read.parquet(spool_dir)`.
 
+`swap_dir` publishes a whole directory the same way: the old one is
+moved aside under a hidden name, the new one renamed in, the old one
+deleted last; `recover_dir_swap` finishes a swap a crash cut short.
+
 `read_exact` is the framed-read counterpart for the socket sources: it
 turns a short read into the caller's protocol error instead of a torn
 frame.
@@ -22,6 +26,7 @@ from __future__ import annotations
 
 import os
 import re
+import shutil
 from contextlib import contextmanager
 
 _BATCH = re.compile(r"batch_(\d{8})\.parquet$")
@@ -55,6 +60,39 @@ def atomic_write(path: str, text: str) -> None:
     """Replace `path` with `text` atomically and durably."""
     with _staged(path) as f:
         f.write(text.encode())
+
+
+def _aside(target: str) -> str:
+    d, name = os.path.split(target)
+    return os.path.join(d, f"_{name}.old")
+
+
+def swap_dir(staged: str, target: str) -> None:
+    """Replace directory `target` (if any) by the complete directory
+    `staged`, in the same parent. At every crash point one of the two
+    copies survives under a known name, and `recover_dir_swap` puts the
+    right one at `target`."""
+    parent, old = os.path.dirname(target), _aside(target)
+    if os.path.isdir(target):
+        os.rename(target, old)
+        _fsync_dir(parent)
+    os.rename(staged, target)
+    _fsync_dir(parent)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def recover_dir_swap(staged: str, target: str) -> None:
+    """Finish or roll back a `swap_dir(staged, target)` a crash cut
+    short; a no-op when none is in flight. Call before rewriting
+    `staged`: once the old copy is aside, `staged` was complete, so it
+    rolls forward into `target`."""
+    old = _aside(target)
+    if not os.path.isdir(old):
+        return              # any `staged` left is an unfinished write
+    if not os.path.isdir(target):
+        os.rename(staged if os.path.isdir(staged) else old, target)
+        _fsync_dir(os.path.dirname(target))
+    shutil.rmtree(old, ignore_errors=True)
 
 
 class Spool:

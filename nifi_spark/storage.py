@@ -24,11 +24,11 @@ seam with the same semantics an Iceberg `MERGE INTO` would give:
   at-least-once commit-then-state edge, QueryDatabaseTable.java:313-321).
 
 The merge unions current rows of dirty buckets with the change set, finds
-each key's winning LSN with a narrow hash aggregation over (key, lsn, op)
-only, and joins the winners back to fetch the full rows — full-width rows
-never cross a wide shuffle. Partial (map-side) aggregation keeps the
-winner selection skew-tolerant: a hot repo's rows combine before the
-shuffle.
+each key's winning LSN with a narrow hash aggregation over (key, lsn,
+_src, op) only, and joins the winners back to fetch the full rows —
+full-width rows never cross a wide shuffle. Partial (map-side)
+aggregation keeps the winner selection skew-tolerant: a hot repo's rows
+combine before the shuffle.
 """
 
 from __future__ import annotations
@@ -37,7 +37,7 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from .durable import atomic_write
 
@@ -46,8 +46,45 @@ _BASE = [("repo", "string"), ("path", "string"), ("commit", "string"),
 KEY = ["repo", "path"]
 
 
+# packed LWW order keys must fit a long: lsn*4 + 3 < 2^63
+LSN_BOUND = 1 << 61
+
+
 def bucket_expr(n_buckets: int):
     return F.pmod(F.xxhash64(F.col("repo"), F.col("path")), F.lit(n_buckets)).cast("int")
+
+
+def lww_order(lsn: str, src: str, op: str) -> Column:
+    """The last-writer-wins order as one long: `lsn*4 + _src*2 +
+    is_delete`. Ordering by it is ordering by (lsn, _src): `_src` (0 =
+    stored row, 1 = change) breaks a replay tie toward the change copy,
+    and the low bit carries the op without changing the order of any
+    (key, lsn, _src)-unique rows. A fixed-width long lets `max` run as
+    a HashAggregate, where a struct key forces Sort → SortAggregate.
+
+    An LSN outside [-2^61, 2^61) raises instead of wrapping (ANSI mode
+    or not); a null LSN or op gives a null key, which never wins."""
+    lsn_c = F.col(lsn).cast("long")
+    guarded = (F.when((lsn_c < -LSN_BOUND) | (lsn_c >= LSN_BOUND),
+                      F.raise_error(F.concat(
+                          F.lit(f"LSN outside [-2^61, 2^61) in column {lsn}: "),
+                          lsn_c.cast("string"))))
+               .otherwise(lsn_c))
+    return (guarded * 4 + F.col(src).cast("long") * 2
+            + (F.col(op) == "delete").cast("long"))
+
+
+def lww_winners(rows: DataFrame) -> DataFrame:
+    """Each key's winning (lsn, _src) over `rows` (KEY, lsn, _src, op;
+    other columns are pruned), keys whose winner is a delete dropped.
+    One `max` over the packed `lww_order` long; unpacked with arithmetic
+    shifts only — `/` would go through a double and `%` keeps the
+    dividend's sign, which breaks negative LSNs."""
+    w = lww_order("lsn", "_src", "op")
+    return (rows.groupBy(*KEY).agg(F.max(w).alias("_w"))
+            .filter(F.col("_w").bitwiseAND(1) == 0)
+            .select(*KEY, F.shiftright("_w", 2).alias("lsn"),
+                    F.shiftright("_w", 1).bitwiseAND(1).alias("_src")))
 
 
 class SnapshotTableStore:
@@ -166,11 +203,12 @@ class SnapshotTableStore:
         FileNotFoundError for versions dropped by expire_snapshots.
 
         Buckets carrying merge-on-read deltas (strategy='delta' merges)
-        are folded here: base ∪ delta rows reduce with LWW by
-        (lsn, base<delta) and delete tombstones drop — one extra
-        hash-agg, only over the delta-carrying buckets (the classic MOR
-        read cost; `compact()` restores the zero-agg fast path). Tables
-        with no deltas take the COW fast path unchanged."""
+        are folded here: base ∪ delta rows reduce with LWW in the
+        merge's `lww_order` (lsn, then base<delta) and delete tombstones
+        drop — one extra aggregation, only over the delta-carrying
+        buckets (the classic MOR read cost; `compact()` restores the
+        zero-agg fast path). Tables with no deltas take the COW fast
+        path unchanged."""
         m = self._load_manifest(version)
         cur = self.schema_columns(m)
         cols = [n for n, _ in cur] + (["_last_lsn"] if with_lsn else [])
@@ -214,18 +252,17 @@ class SnapshotTableStore:
                                      extra=("_last_lsn", "op"))
                      .withColumn("_src", F.lit(1)))
                 fold_in = p if fold_in is None else fold_in.unionByName(p)
-            # LWW fold: one hash-agg (map-side combine ⇒ skew-safe);
-            # ties (crash-replayed delta == compacted base, identical
-            # payload by contract) resolve to the delta copy via _src,
-            # mirroring the COW merge's (lsn, _src) rule.
-            row = F.struct(*[F.col(c) for c in names], F.col("op"))
+            # LWW fold: one max_by (map-side combine ⇒ skew-safe) in
+            # the merge's lww_order; ties (crash-replayed delta ==
+            # compacted base, identical payload by contract) resolve
+            # to the delta copy via _src.
+            row = F.struct(*[F.col(c) for c in names], "_last_lsn", "op")
             folded = (fold_in.groupBy(*KEY)
-                      .agg(F.max_by(row, F.struct("_last_lsn", "_src"))
-                            .alias("w"),
-                           F.max(F.col("_last_lsn")).alias("_last_lsn"))
+                      .agg(F.max_by(row, lww_order("_last_lsn", "_src",
+                                                   "op")).alias("w"))
                       .filter(F.col("w.op") != "delete")
-                      .select(*[F.col(f"w.{c}").alias(c) for c in names],
-                              "_last_lsn"))
+                      .select(*[F.col(f"w.{c}").alias(c)
+                                for c in [*names, "_last_lsn"]]))
             parts.append(folded)
         if not parts:
             fields = ", ".join(f"`{n}` {t}" for n, t in cur) + ", `_last_lsn` long"
@@ -333,17 +370,18 @@ class SnapshotTableStore:
         by LSN happens here, exactly once).
 
         strategy:
-        * 'argmax' (default) — shuffle-narrow plan: aggregate only
-          (repo, path, lsn, op) to find each key's winning LSN, then
-          join the winner list back against current∪changes to fetch the
-          winning full rows. Full-width rows (content ~KBs) NEVER enter
-          a wide shuffle — measured ~2× a full-row max_by hash-agg at
-          8M events/batch and scales with cores because the only wide
-          movement left is the final per-bucket write. AQE picks the
-          join physical form at runtime: broadcast-hash while the
-          touched-key set fits an executor, shuffle join past that
-          (10^9+ touched keys) — same semantics either way, no driver
-          count job needed.
+        * 'argmax' (default) — shuffle-narrow plan: `lww_winners`
+          aggregates only (repo, path, lsn, _src, op) to find each
+          key's winning LSN — one HashAggregate `max` over the packed
+          `lww_order` long `lsn*4 + _src*2 + is_delete`, combined
+          map-side before its shuffle — then joins the winner list
+          back against current∪changes to fetch the winning full rows.
+          LSNs must lie in [-2^61, 2^61); one outside raises. The
+          winner join is planned statically: a broadcast-hash join
+          while the winner estimate is under the session's
+          `autoBroadcastJoinThreshold` (64 MB in `get_spark`), AQE's
+          shuffle join above it — same semantics either way, no
+          driver count job.
         * 'delta' — merge-on-read: the batch (within-batch LWW
           compacted, delete tombstones KEPT) appends as per-bucket
           delta files; no base bucket is read or rewritten, so
@@ -351,12 +389,12 @@ class SnapshotTableStore:
           shape for steady-state small batches over wide key
           distributions, where copy-on-write's per-batch bucket rewrite
           amplifies writes by table_size/batch_size. read() folds
-          base ∪ deltas with the same (lsn, _src) LWW rule;
+          base ∪ deltas in the same `lww_order`;
           `compact()` folds deltas back into base files.
 
         Replay ties: a replayed batch (crash between table commit and
         ledger write) re-delivers changes whose lsn equals the stored
-        row's `_last_lsn`. Winner selection keys on (lsn, _src) where
+        row's `_last_lsn`. Winner selection orders by (lsn, _src), where
         _src prefers the change copy (payloads are identical by
         contract), so the winner join matches exactly ONE wide row per
         key and the full-width rows take exactly one exchange (the
@@ -406,18 +444,7 @@ class SnapshotTableStore:
         # key (_src=0) and changes are (key,lsn)-unique (_src=1), so
         # a replay tie (change lsn == stored lsn) resolves to the
         # change copy and the winner join is 1:1 — no wide dedup.
-        winners = (unioned.select(*KEY, "lsn", "_src", "op")
-                   .groupBy(*KEY)
-                   .agg(F.max(F.struct("lsn", "_src")).alias("w"),
-                        F.max_by("op", F.struct("lsn", "_src"))
-                         .alias("_wop"))
-                   .filter(F.col("_wop") != "delete")
-                   .select(*KEY, F.col("w.lsn").alias("lsn"),
-                           F.col("w._src").alias("_src")))
-        # No explicit broadcast and no count job: AQE sees the
-        # winners' runtime size after the narrow agg and picks
-        # broadcast-hash for small winner sets, shuffle join when
-        # the touched-key set is too big to broadcast.
+        winners = lww_winners(unioned)
         winner = (unioned.join(winners, [*KEY, "lsn", "_src"])
                   .withColumnRenamed("lsn", "_last_lsn")
                   .drop("op", "_src"))

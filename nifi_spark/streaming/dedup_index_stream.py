@@ -30,8 +30,15 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from nifi_spark.datalib.dedup import build_dedup_index, dedup_incremental
+from nifi_spark.durable import recover_dir_swap, swap_dir
 
 _RESULT_SCHEMA = "doc_id long, status string, matched_id long"
+
+
+def _compact_dirs(index_path: str) -> "tuple[str, str]":
+    """(staging dir, base dir) of compact_index's swap."""
+    return (os.path.join(index_path, "_compact_tmp"),
+            os.path.join(index_path, "batch=-1"))
 
 
 class StreamingDedupIndex:
@@ -55,6 +62,8 @@ class StreamingDedupIndex:
         self.schema = schema
         os.makedirs(index_path, exist_ok=True)
         os.makedirs(results_path, exist_ok=True)
+        # a compaction cut mid-swap has its base dir aside: put it back
+        recover_dir_swap(*_compact_dirs(index_path))
 
     # ---------------------------------------------------------- reads
 
@@ -147,6 +156,8 @@ def compact_index(spark: SparkSession, index_path: str,
     folded."""
     import shutil
 
+    tmp, base = _compact_dirs(index_path)
+    recover_dir_swap(tmp, base)
     subs = sorted(
         (int(d.split("=", 1)[1]), d)
         for d in os.listdir(index_path)
@@ -155,19 +166,16 @@ def compact_index(spark: SparkSession, index_path: str,
     if not fold:
         return 0
     paths = [os.path.join(index_path, d) for d in fold]
-    base = os.path.join(index_path, "batch=-1")
     if os.path.isdir(base):
         paths.append(base)
     merged = (spark.read.schema("doc_id long, kind string, key string")
               .parquet(*paths))
-    tmp = os.path.join(index_path, "_compact_tmp")
     merged.write.mode("overwrite").parquet(tmp)
-    # publish: swap the tmp dir in, then drop the folded subdirs —
+    # publish: swap the tmp dir in (a crash mid-swap is finished by the
+    # next call's recover_dir_swap), then drop the folded subdirs — a
     # crash between the two leaves duplicate rows, which the
     # min-per-key collapse reads through harmlessly (re-run to finish)
-    if os.path.isdir(base):
-        shutil.rmtree(base)
-    os.rename(tmp, base)
+    swap_dir(tmp, base)
     for p in paths:
         if p != base and os.path.isdir(p):
             shutil.rmtree(p)

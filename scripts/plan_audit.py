@@ -4,9 +4,11 @@ story depends on, and dump the interesting plans for review.
 Checks (hard asserts — run in CI/tests):
 1. changelog slice read: both LSN predicates reach the parquet scan
    (PushedFilters) and the scan schema is pruned to requested columns;
-2. store merge: the winners join is broadcast (AQE) and no full-width
-   exchange appears between scan and join — only the narrow argmax agg
-   and the final per-bucket repartition shuffle wide rows;
+2. store merge: the winners (`storage.lww_winners`, the helper merge
+   calls) come from a HashAggregate with no SortAggregate, the winners
+   join is broadcast, and no full-width exchange appears between scan
+   and join — only the narrow winner agg and the final per-bucket
+   repartition shuffle wide rows;
 3. TPC-H-shape q5: dimension joins are broadcast-hash;
 4. q1: partial aggregation (map-side combine) before the exchange.
 
@@ -23,7 +25,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from nifi_spark.session import get_spark  # noqa: E402
 from nifi_spark.fixtures import gen_changelog_spark  # noqa: E402
-from nifi_spark.storage import SnapshotTableStore, bucket_expr, KEY  # noqa: E402
+from nifi_spark.storage import (  # noqa: E402
+    KEY, SnapshotTableStore, bucket_expr, lww_winners)
 from pyspark.sql import functions as F  # noqa: E402
 
 
@@ -87,16 +90,14 @@ def main():
                     .otherwise("upsert").alias("op"), "lsn")
            .withColumn("bucket", bucket_expr(8)))
     chg = chg.withColumn("_src", F.lit(1))
-    winners = (chg.select(*KEY, "lsn", "_src", "op").groupBy(*KEY)
-               .agg(F.max(F.struct("lsn", "_src")).alias("w"),
-                    F.max_by("op", F.struct("lsn", "_src")).alias("_wop"))
-               .filter(F.col("_wop") != "delete")
-               .select(*KEY, F.col("w.lsn").alias("lsn"),
-                       F.col("w._src").alias("_src")))
+    winners = lww_winners(chg)
     merged = (chg.join(winners, [*KEY, "lsn", "_src"])
               .withColumnRenamed("lsn", "_last_lsn").drop("op", "_src"))
     p = executed_plan_of(merged)
     assert "BroadcastHashJoin" in p, p
+    # the packed-long winner key is fixed-width: max hashes, no sort
+    assert "HashAggregate" in p, p
+    assert "SortAggregate" not in p, p
     # full-width side must stream from scan to join (the only exchanges
     # belong to the narrow winners agg + its broadcast); the (lsn,_src)
     # winner key makes the join 1:1, so there is NO post-join wide dedup
@@ -106,7 +107,8 @@ def main():
     assert "Window" not in p, p
     n_ex = len(re.findall(r"Exchange (hashpartitioning|SinglePartition)", p))
     assert n_ex <= 1, f"expected <=1 hash exchange (narrow agg), got {n_ex}\n{p}"
-    results.append(("merge argmax join", "AQE selected BroadcastHashJoin; "
+    results.append(("merge argmax join", "BroadcastHashJoin; winners by "
+                    "HashAggregate (no SortAggregate); "
                     "full-width rows stream scan->join with no exchange; "
                     "only the narrow (repo,path,lsn,_src,op) agg shuffles; "
                     "1:1 winner join (no post-join dedup exchange)"))

@@ -10,6 +10,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from nifi_spark.streaming import StreamingDedupIndex
@@ -149,3 +151,54 @@ def test_compact_index_keep_last_beyond_dir_count(spark, tmp_path):
                        str(index / f"batch={b}" / "part-0.parquet"))
     assert compact_index(spark, str(index), keep_last=5) == 0
     assert sorted(os.listdir(index)) == ["batch=0", "batch=1", "batch=2"]
+
+
+@pytest.mark.parametrize("reopen", [False, True])
+def test_compact_index_crash_mid_swap_loses_no_row(spark, tmp_path,
+                                                   monkeypatch, reopen):
+    """A crash after the old base dir is moved aside, before the
+    compacted dir is renamed in: the next compaction (or the next open
+    of the index) must finish the swap, not re-fold the remaining batch
+    dirs over a missing base."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from nifi_spark.streaming.dedup_index_stream import compact_index
+    index = tmp_path / "index"
+
+    def land(b):
+        os.makedirs(index / f"batch={b}")
+        pq.write_table(pa.table({"doc_id": pa.array([b], pa.int64()),
+                                 "kind": ["exact"], "key": [str(b)]}),
+                       str(index / f"batch={b}" / "part-0.parquet"))
+
+    def rows():
+        subs = [str(index / d) for d in os.listdir(index)
+                if d.startswith("batch=")]
+        return sorted(r["doc_id"] for r in spark.read.parquet(*subs)
+                      .distinct().collect())
+
+    for b in range(3):
+        land(b)
+    assert compact_index(spark, str(index)) == 3      # base = {0, 1, 2}
+    for b in range(3, 5):
+        land(b)
+    real = os.rename
+
+    def crash(src, dst):
+        if src.endswith("_compact_tmp"):
+            raise OSError("crash mid-swap")
+        return real(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", crash)
+        with pytest.raises(OSError, match="crash mid-swap"):
+            compact_index(spark, str(index))
+    assert "batch=-1" not in os.listdir(index)         # base is aside
+    if reopen:
+        StreamingDedupIndex(spark, str(tmp_path / "docs"), str(index),
+                            str(tmp_path / "results"), str(tmp_path / "ck"))
+        assert rows() == [0, 1, 2, 3, 4]
+    compact_index(spark, str(index))
+    assert rows() == [0, 1, 2, 3, 4]
+    assert sorted(d for d in os.listdir(index)
+                  if not d.startswith(".")) == ["batch=-1"]

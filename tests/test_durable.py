@@ -62,6 +62,49 @@ def test_atomic_write_replaces_and_leaves_no_temp(tmp_path):
     assert os.listdir(tmp_path) == ["state.json"]
 
 
+def _dir(path, name):
+    os.makedirs(path / name)
+    (path / name / "f").write_text(name)
+
+
+def _listing(path):
+    return {d: (path / d / "f").read_text() for d in os.listdir(path)}
+
+
+@pytest.mark.parametrize("crash_at", [1, 2, 3])
+def test_recover_dir_swap_after_crash(tmp_path, monkeypatch, crash_at):
+    """Crash before the old dir moves aside (1), after it (2) and
+    before the old copy is deleted (3): recovery leaves exactly the
+    new copy at the target when the swap got past step 1, else the
+    old one plus the untouched staged dir."""
+    import shutil
+
+    from nifi_spark import durable
+    _dir(tmp_path, "base")
+    _dir(tmp_path, "staged")
+    calls = []
+
+    def crashing(real):
+        def fn(*a, **k):
+            calls.append(a)
+            if len(calls) == crash_at:
+                raise OSError("crash")
+            return real(*a, **k)
+        return fn
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", crashing(os.rename))
+        m.setattr(shutil, "rmtree", crashing(shutil.rmtree))
+        with pytest.raises(OSError, match="crash"):
+            durable.swap_dir(str(tmp_path / "staged"),
+                             str(tmp_path / "base"))
+    durable.recover_dir_swap(str(tmp_path / "staged"),
+                             str(tmp_path / "base"))
+    want = ({"base": "base", "staged": "staged"} if crash_at == 1
+            else {"base": "staged"})
+    assert _listing(tmp_path) == want
+
+
 class _Boom(IOError):
     pass
 
@@ -85,10 +128,8 @@ def test_read_exact_eof_ok():
 def test_no_rename_commit_outside_durable():
     """Every tmp-then-rename commit goes through nifi_spark.durable.
     The exceptions are renames a protocol server performs for its
-    client (FTP RNFR/RNTO, SFTP RENAME) and compact_index's directory
-    swap."""
-    allowed = {"sources/ftp.py": 1, "sources/sftp.py": 1,
-               "streaming/dedup_index_stream.py": 1}
+    client (FTP RNFR/RNTO, SFTP RENAME)."""
+    allowed = {"sources/ftp.py": 1, "sources/sftp.py": 1}
     found = {}
     for root, _, files in os.walk(PKG):
         for name in files:
