@@ -16,7 +16,9 @@ with the per-row sha256(content) invariant (BASELINE.json input_hint).
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import struct
 import tempfile
 from collections.abc import Callable
@@ -25,6 +27,24 @@ import pandas as pd  # module-scope so pandas_udf type hints resolve
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 PH = "(('0x' || substr(md5({x}), 1, 15))::BIGINT)"  # portable hash, DuckDB side
+
+
+_WORKDIRS: list[str] = []
+
+
+@atexit.register
+def _remove_workdirs() -> None:
+    for d in _WORKDIRS:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def _workdir(prefix: str) -> str:
+    """A fresh temp directory, removed when the process exits. Query
+    results are lazy DataFrames that read these directories after the
+    query function returns, so they must outlive it."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    _WORKDIRS.append(d)
+    return d
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -94,7 +114,7 @@ def q_cdc_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nifi_spark.provenance import ProvenanceWriter
     from nifi_spark.storage import SnapshotTableStore
 
-    work = tempfile.mkdtemp(prefix="cdc_e2e_")
+    work = _workdir("cdc_e2e_")
     log_path = os.path.join(work, "changelog")
     _events_as_changelog(_t(spark, sf_dir, "events")).write.parquet(log_path)
 
@@ -123,7 +143,7 @@ def q_cdc_rebucket_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nifi_spark.pipeline import CdcPipeline
     from nifi_spark.storage import SnapshotTableStore
 
-    work = tempfile.mkdtemp(prefix="cdc_rebucket_")
+    work = _workdir("cdc_rebucket_")
     log_path = os.path.join(work, "changelog")
     _events_as_changelog(_t(spark, sf_dir, "events")).write.parquet(log_path)
     store = SnapshotTableStore(os.path.join(work, "table"), n_buckets=4)
@@ -151,7 +171,7 @@ def q_cdc_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nifi_spark.pipeline import CdcPipeline
     from nifi_spark.storage import SnapshotTableStore
 
-    work = tempfile.mkdtemp(prefix="cdc_mor_")
+    work = _workdir("cdc_mor_")
     log_path = os.path.join(work, "changelog")
     _events_as_changelog(_t(spark, sf_dir, "events")).write.parquet(log_path)
     store = SnapshotTableStore(os.path.join(work, "table"), n_buckets=8)
@@ -180,7 +200,7 @@ def q_stream_cdc_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nifi_spark.storage import SnapshotTableStore
     from nifi_spark.streaming import StreamingCdcPipeline
 
-    work = tempfile.mkdtemp(prefix="cdc_stream_e2e_")
+    work = _workdir("cdc_stream_e2e_")
     log_path = os.path.join(work, "changelog")
     (_events_as_changelog(_t(spark, sf_dir, "events"))
      .repartition(24).write.parquet(log_path))   # 24 files / 8 per
@@ -208,7 +228,7 @@ def q_lineage_batch_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nifi_spark.provenance import ProvenanceWriter, batch_summary
     from nifi_spark.storage import SnapshotTableStore
 
-    work = tempfile.mkdtemp(prefix="cdc_lineage_")
+    work = _workdir("cdc_lineage_")
     log_path = os.path.join(work, "changelog")
     _events_as_changelog(_t(spark, sf_dir, "events")).write.parquet(log_path)
     store = SnapshotTableStore(os.path.join(work, "table"), n_buckets=16)
@@ -1630,7 +1650,7 @@ def q_format_convert_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Format-conversion family (ConvertAvroToORC shape): parquet → ORC
     → read back; content-hash invariant proves lossless conversion."""
     from nifi_spark.operators import convert_format
-    work = tempfile.mkdtemp(prefix="fmt_orc_")
+    work = _workdir("fmt_orc_")
     out = convert_format(spark, os.path.join(sf_dir, "documents.parquet"),
                          "parquet", os.path.join(work, "docs_orc"), "orc")
     return out.select("doc_id", F.md5(F.col("text")).alias("text_md5"))
@@ -1694,7 +1714,7 @@ def q_format_convert_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition, executor-side) → read back through the binaryFile-backed
     decoder; content-hash invariant proves lossless conversion."""
     from nifi_spark.operators import convert_format
-    work = tempfile.mkdtemp(prefix="fmt_avro_")
+    work = _workdir("fmt_avro_")
     out = convert_format(
         spark, os.path.join(sf_dir, "documents.parquet"), "parquet",
         os.path.join(work, "docs_avro"), "avro",
@@ -1983,12 +2003,11 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user counters must equal the batch answer (state carries
     last-event time across micro-batches, so batch boundaries are
     invisible in the result)."""
-    import shutil
     import uuid
 
     from nifi_spark.streaming import sessionize_stream
 
-    work = tempfile.mkdtemp(prefix="stream_sess_")
+    work = _workdir("stream_sess_")
     src = os.path.join(work, "events")
     os.makedirs(src)
     shutil.copy(os.path.join(sf_dir, "events.parquet"),
@@ -2018,12 +2037,11 @@ def q_stream_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     output mode so windows still open at end-of-input are emitted when
     the availableNow run terminates — append mode would hold back the
     final `watermark` hours and the batch oracle could never match."""
-    import shutil
     import uuid
 
     from nifi_spark.streaming import windowed_rollup
 
-    work = tempfile.mkdtemp(prefix="stream_roll_")
+    work = _workdir("stream_roll_")
     src = os.path.join(work, "events")
     os.makedirs(src)
     shutil.copy(os.path.join(sf_dir, "events.parquet"),
@@ -2050,12 +2068,11 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside the state horizon, so the surviving key set is exactly
     DISTINCT — which makes the nondeterministic which-row-survives
     question moot by emitting only the key columns."""
-    import shutil
     import uuid
 
     from nifi_spark.streaming import dedup_stream
 
-    work = tempfile.mkdtemp(prefix="stream_dedup_")
+    work = _workdir("stream_dedup_")
     src = os.path.join(work, "events")
     os.makedirs(src)
     shutil.copy(os.path.join(sf_dir, "events.parquet"),
@@ -2084,12 +2101,11 @@ def q_stream_detect_duplicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole fixture in one availableNow micro-batch the handler's
     order-by-event_id makes the winner the global min id, so the oracle
     is a plain row_number() window."""
-    import shutil
     import uuid
 
     from nifi_spark.streaming import detect_duplicate_stream
 
-    work = tempfile.mkdtemp(prefix="stream_detdup_")
+    work = _workdir("stream_detdup_")
     src = os.path.join(work, "events")
     os.makedirs(src)
     shutil.copy(os.path.join(sf_dir, "events.parquet"),
@@ -2130,7 +2146,7 @@ def q_stream_listen_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (f"<{i % 191}>Jan  1 00:00:0{i % 10} host{i % 7} "
                 f"app[{i % 50}]: ev {i}").encode()
 
-    src = ListenSyslogSource(tempfile.mkdtemp(prefix="listen_stream_"),
+    src = ListenSyslogSource(_workdir("listen_stream_"),
                              protocol="UDP")
     msgs = [(f"10.1.{i % 3}.9", mkline(i)) for i in range(600)]
     it = iter(msgs)
@@ -2145,7 +2161,7 @@ def q_stream_listen_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
            .agg(F.count(F.lit(1)).alias("n"),
                 F.sum("syslog_pid").cast("bigint").alias("sum_pid"),
                 F.max("msg_seq").alias("max_seq")))
-    ck = tempfile.mkdtemp(prefix="listen_roll_ck_")
+    ck = _workdir("listen_roll_ck_")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
@@ -2166,12 +2182,11 @@ def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     same user within 4 hours): with the whole fixture in one
     availableNow micro-batch nothing is late, so the result equals the
     batch interval join the oracle runs."""
-    import shutil
     import uuid
 
     from nifi_spark.streaming import interval_join_streams
 
-    work = tempfile.mkdtemp(prefix="stream_ij_")
+    work = _workdir("stream_ij_")
     src = os.path.join(work, "events")
     os.makedirs(src)
     shutil.copy(os.path.join(sf_dir, "events.parquet"),
@@ -3199,12 +3214,10 @@ def q_stateful_counter_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """@Stateful UpdateAttribute counter: numbering CONTINUES across two
     batches through the KVState checkpoint (batch 1 = even event_ids,
     batch 2 = odd; batch 2 starts where batch 1 ended)."""
-    import tempfile
-
     from nifi_spark.ledger import KVState
     from nifi_spark.operators import stateful_counter
     ev = _t(spark, sf_dir, "events").select("event_id")
-    state = KVState(tempfile.mkdtemp(prefix="ctr_gate_"))
+    state = KVState(_workdir("ctr_gate_"))
     b1 = stateful_counter(ev.filter(F.col("event_id") % 2 == 0), state,
                           "ctr", "event_id")
     b2 = stateful_counter(ev.filter(F.col("event_id") % 2 == 1), state,
@@ -3646,13 +3659,13 @@ def q_listen_syslog_landed(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (f"<{i % 191}>Jan  1 00:00:0{i % 10} host{i % 5} "
                 f"app[{i % 100}]: event {i}").encode()
 
-    udp = ListenSyslogSource(tempfile.mkdtemp(prefix="listen_udp_"),
+    udp = ListenSyslogSource(_workdir("listen_udp_"),
                              protocol="UDP")
     udp_msgs = [(f"10.0.{i % 5}.1", mkline(i)) for i in range(500)]
     it_u = iter(udp_msgs)
     udp.drain_all(lambda: next(it_u, None), max_batch_size=150)
 
-    tcp = ListenSyslogSource(tempfile.mkdtemp(prefix="listen_tcp_"),
+    tcp = ListenSyslogSource(_workdir("listen_tcp_"),
                              protocol="TCP")
     stream = b"".join(mkline(i) + b"\n" for i in range(200))
     chunks = [("10.9.9.9", stream[p:p + 37])
@@ -3740,7 +3753,7 @@ def q_ftp_sftp_transfer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     files = [(f"f{i:03d}.log", content(i)) for i in range(40)]
     probe = [f"f{i:03d}.log" for i in range(38, 45)]   # 2 hits, 5 misses
-    spool = tempfile.mkdtemp(prefix="xfer_spool_")
+    spool = _workdir("xfer_spool_")
     listed_names: dict[str, list[str]] = {}
     missing_rows: list[tuple[str, str]] = []
 
@@ -3750,7 +3763,7 @@ def q_ftp_sftp_transfer(spark: SparkSession, sf_dir: str) -> DataFrame:
                      (1_000_000 + i * 10,) * 2)
 
     # FTP over a real loopback TCP socket
-    ftp_root = tempfile.mkdtemp(prefix="ftp_root_")
+    ftp_root = _workdir("ftp_root_")
     srv = FtpServer(ftp_root, user="u", password="p")
     host, port = srv.start()
     fc = FtpClient(host, port, user="u", password="p")
@@ -3768,7 +3781,7 @@ def q_ftp_sftp_transfer(spark: SparkSession, sf_dir: str) -> DataFrame:
     srv.stop()
 
     # SFTP over a socketpair channel
-    sftp_root = tempfile.mkdtemp(prefix="sftp_root_")
+    sftp_root = _workdir("sftp_root_")
     sc, join = sftp_loopback(SftpServer(sftp_root))
     put_sftp(sc, files)
     pin_mtimes(sftp_root)
@@ -4002,7 +4015,7 @@ def q_listen_smtp_landed(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates over the landed table replay arithmetically in SQL."""
     from nifi_spark.sources import ListenSMTPSource, lines_feed
 
-    src = ListenSMTPSource(tempfile.mkdtemp(prefix="listen_smtp_"))
+    src = ListenSMTPSource(_workdir("listen_smtp_"))
     for conn in range(4):
         parts = [b"EHLO client%d\r\n" % conn]
         for i in range(conn * 30, conn * 30 + 30):
@@ -4073,7 +4086,7 @@ def q_tail_file_rollover(spark: SparkSession, sf_dir: str) -> DataFrame:
             f.write(data)
         touch(path)
 
-    root = tempfile.mkdtemp(prefix="tailf_gate_")
+    root = _workdir("tailf_gate_")
     log = os.path.join(root, "f.log")
     open(log, "wb").close()
     touch(log)
@@ -4118,7 +4131,7 @@ def q_listen_http_landed(spark: SparkSession, sf_dir: str) -> DataFrame:
     method/query/body replay arithmetically."""
     from nifi_spark.sources import ListenHTTPSource, requests_feed
 
-    src = ListenHTTPSource(tempfile.mkdtemp(prefix="listen_http_"))
+    src = ListenHTTPSource(_workdir("listen_http_"))
     for conn in range(3):
         raw = bytearray()
         for i in range(conn * 50, conn * 50 + 50):
@@ -4160,7 +4173,7 @@ def q_listen_websocket_landed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import socket
     import threading
 
-    src = ListenWebSocketSource(tempfile.mkdtemp(prefix="listen_ws_"))
+    src = ListenWebSocketSource(_workdir("listen_ws_"))
     a, b = socket.socketpair()
     t = threading.Thread(
         target=lambda: (src.drain_connection(b.recv, b.sendall),
@@ -4205,7 +4218,7 @@ def q_listen_relp_landed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"app[{i % 100}]: relp event {i}")
         raw += encode_frame(2 + i, "syslog", line.encode())
     raw += encode_frame(302, "close", b"")
-    src = ListenRELPSource(tempfile.mkdtemp(prefix="listen_relp_"))
+    src = ListenRELPSource(_workdir("listen_relp_"))
     src.drain_connection(bytes_feed(raw), lambda b: None,
                          sender="10.1.1.1:601")
     routed = parse_syslog(src.read(spark), "raw")
@@ -4238,7 +4251,7 @@ def q_listen_lumberjack_landed(spark: SparkSession, sf_dir: str) -> DataFrame:
     inner = b"".join(encode_data_frame(i + 1, kv(i))
                      for i in range(120, 240))
     raw += encode_compressed_frame(inner)
-    src = ListenLumberjackSource(tempfile.mkdtemp(prefix="listen_lj_"))
+    src = ListenLumberjackSource(_workdir("listen_lj_"))
 
     def feed(data):
         pos = 0
@@ -4275,7 +4288,7 @@ def q_consume_mqtt_landed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ] + [(f"other/{i}", b"x", 0, False) for i in range(40)])
     read, write, join = mqtt_loopback(broker)
     client = MqttClient(read, write, client_id="gate")
-    src = ConsumeMQTTSource(tempfile.mkdtemp(prefix="consume_mqtt_"))
+    src = ConsumeMQTTSource(_workdir("consume_mqtt_"))
     n = src.drain(client, "sensors/#")
     client.disconnect()
     join()
@@ -4301,7 +4314,7 @@ def q_consume_imap_landed(spark: SparkSession, sf_dir: str) -> DataFrame:
     folders = {"INBOX": [
         (f"Subject: s{i}\r\n\r\nimap {i} {'k' * (i % 7)}\r\n").encode()
         for i in range(150)]}
-    src = ConsumeIMAPSource(tempfile.mkdtemp(prefix="consume_imap_"))
+    src = ConsumeIMAPSource(_workdir("consume_imap_"))
     connect, join = imap_loopback(user="u", password="p",
                                   folders=folders)
     n1 = src.drain(connect, user="u", password="p")
@@ -4364,7 +4377,7 @@ def q_imap_idle_structs(spark: SparkSession, sf_dir: str) -> DataFrame:
     join2()
     bs_parts = [s.count('("TEXT" "PLAIN"') for s in structs]
 
-    spool = tempfile.mkdtemp(prefix="imap_idle_")
+    spool = _workdir("imap_idle_")
     rows_round, rows_pos, rows_content = [], [], []
     pos = 0
     for r, batch in enumerate(rounds):
@@ -4482,7 +4495,7 @@ def q_put_syslog_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     sends: list[bytes] = []
     n_sent, invalid = put_syslog(rows, sends.append, protocol="TCP")
     assert (n_sent, len(invalid)) == (210, 30), (n_sent, len(invalid))
-    src = ListenSyslogSource(tempfile.mkdtemp(prefix="put_syslog_"),
+    src = ListenSyslogSource(_workdir("put_syslog_"),
                              protocol="TCP")
     src.drain_all(sent_feed(sends, chop=41))
     valid = src.read_parsed(spark)["valid"]
@@ -4609,7 +4622,7 @@ def q_get_mongo_landed(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = [{"_id": i, "grp": i % 6, "v": i * i, "name": f"doc{i}"}
             for i in range(260)]
     assert client.insert("events", docs) == 260
-    src = GetMongoSource(tempfile.mkdtemp(prefix="get_mongo_"))
+    src = GetMongoSource(_workdir("get_mongo_"))
     n = src.drain(client, "events", {"grp": {"$lt": 4}},
                   sort={"_id": 1}, batch_size=25)
     join()
@@ -4649,7 +4662,7 @@ def q_query_cassandra_landed(spark: SparkSession, sf_dir: str
                    ("big", "bigint")], rows)
     r, w, join = cql_loopback(srv)
     client = CqlClient(r, w)
-    src = QueryCassandraSource(tempfile.mkdtemp(prefix="query_cql_"))
+    src = QueryCassandraSource(_workdir("query_cql_"))
     n = src.drain(client,
                   "SELECT id, grp, score, flag, big FROM ks.events "
                   "WHERE id >= 30 AND grp != 4", page_size=37)
@@ -4704,7 +4717,7 @@ def q_cql_compressed_frames(spark: SparkSession, sf_dir: str
 
         client = CqlClient(r, cw, compression=algo)
         src = QueryCassandraSource(
-            tempfile.mkdtemp(prefix=f"cql_{algo}_"))
+            _workdir(f"cql_{algo}_"))
         src.drain(client,
                   "SELECT id, grp, name, big FROM ks.events "
                   "WHERE id >= 20", page_size=41)
@@ -4754,7 +4767,7 @@ def q_get_sqs_landed(spark: SparkSession, sf_dir: str) -> DataFrame:
                   secret_key="WRONG").receive_messages()
     except SqsError as exc:
         refused = int("SignatureDoesNotMatch" in str(exc))
-    src = GetSQSSource(tempfile.mkdtemp(prefix="get_sqs_"))
+    src = GetSQSSource(_workdir("get_sqs_"))
     n = src.drain(client, max_messages=10)
     assert n == 210 and not srv.queues["jobs"] and not srv.inflight
     df = src.read(spark)
@@ -4786,7 +4799,7 @@ def q_get_solr_incremental(spark: SparkSession, sf_dir: str
              for i in range(220)])
     client = SolrClient(srv.transport, "http://solr.local/solr",
                         "docs")
-    root = tempfile.mkdtemp(prefix="get_solr_")
+    root = _workdir("get_solr_")
     state = KVState(root + "/state")
     src = GetSolrSource(root + "/spool", state)
     n1 = src.drain(client, date_field="ts", now=2500, rows=13)
@@ -4856,7 +4869,7 @@ def q_amqp10_cbs_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
     for i in ids:
         if i % 3 == 2:
             recv.send(f"ev {i}".encode(), {"n": i}, partition=i % 2)
-    src = GetEventHubSource(tempfile.mkdtemp(prefix="amqp10_cbs_"))
+    src = GetEventHubSource(_workdir("amqp10_cbs_"))
     src.drain(recv, [0, 1], batch_size=23)
     recv.close()
     join()
@@ -4903,7 +4916,7 @@ def q_get_eventhub_landed(spark: SparkSession, sf_dir: str
     r, w, join = eventhub_loopback(broker)
     recv = EventHubReceiver(r, w, hub="hub1", user="nifi",
                             password="pw")
-    src = GetEventHubSource(tempfile.mkdtemp(prefix="get_eventhub_"))
+    src = GetEventHubSource(_workdir("get_eventhub_"))
     n = src.drain(recv, [0, 1, 2], batch_size=17)
     recv.close()
     join()
@@ -4954,7 +4967,7 @@ def q_elasticsearch_query_scroll(spark: SparkSession, sf_dir: str
         client.fetch("corpus", "doc", "d0001")
     except EsRetryableError:
         routed += 1
-    root = tempfile.mkdtemp(prefix="es_gate_")
+    root = _workdir("es_gate_")
     qsrc = QueryEsSource(root + "/query")
     nq = qsrc.drain(client, "corpus", q="grp:3", page_size=7)
     assert nq == 36, nq
@@ -4997,7 +5010,7 @@ def q_s3_list_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     client = S3Client(srv.transport,
                       endpoint="https://s3.us-east-1.amazonaws.com",
                       access_key="AK", secret_key="s3cr3t")
-    root = tempfile.mkdtemp(prefix="s3_gate_")
+    root = _workdir("s3_gate_")
     src = ListS3Source(root + "/spool", KVState(root + "/state"))
     n = src.drain(client, "lake", prefix="data/", max_keys=11)
     assert n == 120 and src.drain(client, "lake",
@@ -5037,7 +5050,7 @@ def q_s2s_provenance_report(spark: SparkSession, sf_dir: str
     from nifi_spark.reporting import S2SProvenanceReportingTask
     from nifi_spark.sources.site_to_site import (S2SClient, S2SPort,
                                                  loopback_serve)
-    root = tempfile.mkdtemp(prefix="s2s_prov_")
+    root = _workdir("s2s_prov_")
     prov = ProvenanceWriter(root + "/prov")
     for i in range(30):
         prov.emit_counts(spark, "RECEIVE" if i % 2 == 0 else "SEND",
@@ -5080,7 +5093,7 @@ def q_ambari_metrics_report(spark: SparkSession, sf_dir: str
                                               MetricsCollectorServer,
                                               flow_status_metrics)
     from nifi_spark.provenance import ProvenanceWriter
-    root = tempfile.mkdtemp(prefix="metrics_rep_")
+    root = _workdir("metrics_rep_")
     prov = ProvenanceWriter(root + "/prov")
     recv = spark.range(300).select(
         F.col("id").alias("lsn"),
@@ -5178,7 +5191,7 @@ def q_get_splunk_incremental(spark: SparkSession, sf_dir: str
     base = 1_700_000_000_000
     srv = SplunkServer([(base + i * 500, f"event {i} sev={i % 5}")
                         for i in range(240)])
-    root = tempfile.mkdtemp(prefix="get_splunk_")
+    root = _workdir("get_splunk_")
     src = GetSplunkSource(root + "/spool", KVState(root + "/state"),
                           base_url="http://splunk:8089",
                           time_range_strategy=MANAGED_BEGINNING)
@@ -5222,7 +5235,7 @@ def q_get_hbase_incremental(spark: SparkSession, sf_dir: str
             table="t1", column_family="f", row_field_name="id",
             ts=1000 + i // 3)
         t.put_cells([p])
-    root = tempfile.mkdtemp(prefix="get_hbase_")
+    root = _workdir("get_hbase_")
     src = GetHBaseSource(root + "/spool", KVState(root + "/state"))
     n1 = src.drain(t)
     for i in range(90, 150):
@@ -5382,7 +5395,7 @@ def q_hdfs_events_landed(spark: SparkSession, sf_dir: str) -> DataFrame:
            .orderBy("event_id").collect()]
     for i in ids[:400]:
         emit(i)
-    spool = tempfile.mkdtemp(prefix="hdfs_events_")
+    spool = _workdir("hdfs_events_")
     src = GetHDFSEventsSource(feed, spool,
                               path_watch_regex="/data/.*",
                               ignore_hidden=True,
@@ -5465,7 +5478,7 @@ def q_get_twitter_filtered(spark: SparkSession, sf_dir: str
                else f"other {i}",
                "user": {"id": 100 + i % 5}} for i in range(200)]
     srv = TwitterStreamServer(tweets)
-    root = tempfile.mkdtemp(prefix="get_twitter_")
+    root = _workdir("get_twitter_")
     src = GetTwitterSource(root + "/spool", endpoint=ENDPOINT_FILTER,
                            terms=["SPARK"], follow=[102],
                            languages=["en"])
@@ -5528,7 +5541,7 @@ def q_consume_winevt_landed(spark: SparkSession, sf_dir: str
         evs.append(f"<Event><System><EventID>{i % 7}</EventID>"
                    f"<Seq>{i}</Seq></System>"
                    f"<Data>{body}</Data></Event>")
-    root = tempfile.mkdtemp(prefix="winevt_")
+    root = _workdir("winevt_")
     src = ConsumeWindowsEventLogSource(root + "/spool",
                                        channel="Security",
                                        max_buffer=200)
@@ -5827,7 +5840,7 @@ def q_amqp_confirm_tx(spark: SparkSession, sf_dir: str) -> DataFrame:
     confirms = c2.wait_for_confirms()
     assert confirms == list(range(1, 11)), confirms
 
-    src = ConsumeAMQPSource(tempfile.mkdtemp(prefix="amqp_tx_"))
+    src = ConsumeAMQPSource(_workdir("amqp_tx_"))
     src.drain(c2, "jobs")
     c2.close()
     join2()
@@ -5885,7 +5898,7 @@ def q_amqp_nack_redeliver(spark: SparkSession, sf_dir: str) -> DataFrame:
     join()
     assert order_check == sorted(order_check), order_check
 
-    spool = tempfile.mkdtemp(prefix="amqp_nack_")
+    spool = _workdir("amqp_nack_")
     pq.write_table(pa.table({
         "phase": pa.array([r[0] for r in rows], pa.string()),
         "i": pa.array([r[1] for r in rows], pa.int64()),
@@ -5923,7 +5936,7 @@ def q_consume_amqp_landed(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"v {i} {'z' * (i % 7)}".encode(),
             {"priority": i % 10, "delivery_mode": 1 + i % 2,
              "app_id": f"app{i % 5}", "message_id": f"m{i}"})
-    src = ConsumeAMQPSource(tempfile.mkdtemp(prefix="consume_amqp_"))
+    src = ConsumeAMQPSource(_workdir("consume_amqp_"))
     n_m = src.drain(client, "metrics")
     n_e = src.drain(client, "errors")
     client.close()
@@ -5959,7 +5972,7 @@ def q_get_jms_landed(spark: SparkSession, sf_dir: str) -> DataFrame:
     read, write, join = stomp_loopback(broker)
     client = StompClient(read, write)
     client.subscribe("/queue/logs")
-    src = GetJMSSource(tempfile.mkdtemp(prefix="get_jms_"))
+    src = GetJMSSource(_workdir("get_jms_"))
     n1 = src.drain(client)
     put_jms(client, "/queue/logs",
             [(f"late {i}".encode(), {"origin": "put", "priority": "9"})
@@ -6010,7 +6023,7 @@ def q_consume_kafka_wire_landed(spark: SparkSession,
                   f"ev {i} {'d' * (i % 7)}".encode()) for i in chunk],
                 compress=[False, "gzip", "snappy",
                           "lz4"][(c_idx // 20) % 4])
-    src = ConsumeKafkaWireSource(tempfile.mkdtemp(prefix="kafka_wire_"))
+    src = ConsumeKafkaWireSource(_workdir("kafka_wire_"))
     n1 = src.drain(client, "events")
     n2 = src.drain(client, "events")
     join()
@@ -6044,7 +6057,7 @@ def q_webhdfs_list_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     client = WebHdfsClient(
         "http://nn:9870", user="etl",
         transport=fake_hdfs_transport(ns, mtimes=mtimes))
-    state = KVState(tempfile.mkdtemp(prefix="webhdfs_state_"))
+    state = KVState(_workdir("webhdfs_state_"))
     landed = []
     for d in range(4):
         src = ListHDFSSource(client, f"/lake/day={d}", state,
@@ -6216,13 +6229,11 @@ def q_list_db_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     refresh-interval watermark — first pass emits the matching tables,
     a second pass inside the refresh window emits nothing (the
     list_file_watermark pattern applied to the catalog)."""
-    import tempfile
-
     from nifi_spark.ledger import KVState
     from nifi_spark.sources import list_database_tables
     for t in ("region", "nation"):
         _t(spark, sf_dir, t).createOrReplaceTempView(f"dblgate_{t}")
-    state = KVState(tempfile.mkdtemp(prefix="dbt_gate_"))
+    state = KVState(_workdir("dbt_gate_"))
     first, st = list_database_tables(spark, state, pattern="dblgate_*",
                                      include_count=True)
     state.put("db_tables", st)
@@ -7556,7 +7567,7 @@ def q_stream_dedup_incremental(spark: SparkSession,
     generated signature-pipeline SQL plus drop 0's novel block."""
     from nifi_spark.streaming import StreamingDedupIndex
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    work = tempfile.mkdtemp(prefix="stream_dedup_idx_")
+    work = _workdir("stream_dedup_idx_")
     spool = os.path.join(work, "docs")
     os.makedirs(spool)
 

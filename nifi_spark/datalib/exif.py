@@ -319,7 +319,13 @@ def _id3v2_frames(blob: bytes, ver: int, flags: int, size: int
     """ID3v2.2/2.3/2.4 text frames (informal standards id3.org):
     v2.2 = 3-byte ids + 3-byte sizes, v2.3 = 4+4 plain big-endian,
     v2.4 = 4+4 syncsafe; text payload leads with an encoding byte
-    (0 latin-1, 1 utf-16+BOM, 2 utf-16-be, 3 utf-8), NUL-terminated."""
+    (0 latin-1, 1 utf-16+BOM, 2 utf-16-be, 3 utf-8), NUL-terminated.
+
+    An unsynchronised tag (flags & 0x80: a 0x00 stuffed after every
+    0xFF) and a compressed v2.2 tag (flags & 0x40) do not hold plain
+    frames, so they yield none; the caller keeps the version pair."""
+    if flags & 0x80 or (ver == 2 and flags & 0x40):
+        return []
     out: list[tuple[str, str]] = []
     pos, end = 10, min(10 + size, len(blob))
     if flags & 0x40 and ver in (3, 4) and pos + 4 <= end:

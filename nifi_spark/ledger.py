@@ -13,8 +13,10 @@ exactly-once, strictly stronger than the reference's at-least-once
 commit-then-state edge (QueryDatabaseTable.java:313-321).
 
 The checksum is an order-independent aggregate over the applied slice
-(sum of xxhash64(repo,path,lsn) mod 2^61) — computed distributed, no
-driver-side collect; it plays the role of TailFile's CRC32 position check.
+(sum of xxhash64(repo,path,lsn) mod 2^61-1): partial sums are computed
+distributed and folded in Python, so `CdcPipeline` gets them from its
+one aggregate over the slice. It plays the role of TailFile's CRC32
+position check.
 """
 
 from __future__ import annotations
@@ -23,7 +25,7 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from .durable import atomic_write
 
@@ -86,10 +88,19 @@ class KVState:
         return value
 
 
+def checksum_term() -> Column:
+    """One row's term of the slice checksum: xxhash64(repo, path, lsn)
+    mod 2^61-1, as a decimal so that sums of it never overflow."""
+    return (F.pmod(F.xxhash64("repo", "path", "lsn"), F.lit(_MOD))
+            .cast("decimal(38,0)"))
+
+
+def fold_checksum(partials) -> str:
+    """The slice checksum from partial sums of `checksum_term` over
+    disjoint parts of the slice (None for a part with no rows)."""
+    return format(sum(int(p or 0) for p in partials) % _MOD, "016x")
+
+
 def slice_checksum(events: DataFrame) -> str:
     """Order-independent checksum of the slice's (repo, path, lsn) set."""
-    row = events.agg(
-        F.pmod(F.sum(F.pmod(F.xxhash64("repo", "path", "lsn"), F.lit(_MOD))
-                     .cast("decimal(38,0)")),
-               F.lit(_MOD).cast("decimal(38,0)")).alias("c")).collect()[0]
-    return format(int(row["c"] or 0), "016x")
+    return fold_checksum([events.agg(F.sum(checksum_term())).collect()[0][0]])

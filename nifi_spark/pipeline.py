@@ -3,18 +3,28 @@
 One NiFi session-commit == one micro-batch here (SURVEY.md §3.1 mapping):
 
     read change slice (lsn > ledger watermark, pushdown to parquet scan)
+      → ONE slice pass: a single aggregate per Spark partition, collected
+        in Python — the RECEIVE record (lsn range, rows, bytes), the
+        same over the poison rows (the DROP record and quarantine count),
+        the ledger checksum's partial sums and the schema_change rows.
+        It runs only when provenance, the checksum, eager_stats, DDL
+        scanning or the quarantine needs it, so the bulk config (none of
+        these) runs the merge's job alone
+      → poison rows append to the quarantine once, if the pass counted any
       → split at schema_change boundaries, apply DDL serially between
         sub-batches (NiFi sidesteps this — every processor is schema-less;
-        ConvertJSONToSQL.java:101-113 is its drift-policy ancestor)
-      → normalize changes onto the store schema (narrow projection)
-      → SnapshotTableStore.merge — a narrow winner agg over
-        (key, lsn, op) of current∪changes does LWW per (repo,path), and a
-        1:1 winner join fetches the full rows (map-side partial combine ⇒
-        hot-repo skew tolerated; full-width rows never cross a wide
-        shuffle)
-        → dirty-bucket snapshot commit (atomic)
-      → provenance records per stage/partition
-      → OffsetLedger.commit (checksum'd) — AFTER the table commit
+        ConvertJSONToSQL.java:101-113 is its drift-policy ancestor); per
+        sub-batch:
+          normalize changes onto the store schema (narrow projection)
+          → SnapshotTableStore.merge — a narrow winner agg over
+            (key, lsn, op) of current∪changes does LWW per (repo,path),
+            and a 1:1 winner join fetches the full rows (map-side partial
+            combine ⇒ hot-repo skew tolerated; full-width rows never
+            cross a wide shuffle) → dirty-bucket snapshot commit (atomic)
+      → ONE provenance landing: the batch's RECEIVE, DROP, JOIN and SEND
+        records as one parquet file (durable.Spool, no Spark job) — AFTER
+        the table commits, like NiFi's session-commit provenance write
+      → OffsetLedger.commit (checksum folded from the pass) — LAST
 
 Crash matrix (tests/test_resume.py): crash before merge ⇒ nothing happened;
 crash between merge and ledger ⇒ batch replays, `_last_lsn` LWW makes the
@@ -32,10 +42,14 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from nifi_spark.ledger import OffsetLedger, slice_checksum
-from nifi_spark.provenance import ProvenanceWriter
+from nifi_spark.ledger import OffsetLedger, checksum_term, fold_checksum
+from nifi_spark.ledger import slice_checksum  # noqa: F401 — kept importable
+# here: the benchmark traces it under this module's name
+from nifi_spark.provenance import (ProvenanceWriter, content_size,
+                                   count_record, partition_aggs,
+                                   partition_records)
 from nifi_spark.storage import SnapshotTableStore
 
 
@@ -63,12 +77,13 @@ class CdcPipeline:
     stream: str = "changelog"
     provenance: ProvenanceWriter | None = None
     checksum: bool = True
-    eager_stats: bool = True  # False: skip the per-batch count job
-    # (events = -1); the apply itself never needs the count
+    eager_stats: bool = True  # False: the count alone does not run the
+    # slice pass; when nothing else needs it (no provenance, checksum, DDL
+    # scan or quarantine) the batch skips it and reports events = -1
     cache_slice: bool = True  # persist the batch slice (MEMORY_AND_DISK)
-    # across the schema-scan / merge passes; size batches to the cluster
-    # (micro-batch bound = the NiFi back-pressure analog) or disable to
-    # re-scan the (column-pruned) parquet per pass
+    # across the slice pass, quarantine write and merges; size batches to
+    # the cluster (micro-batch bound = the NiFi back-pressure analog) or
+    # disable to re-scan the (column-pruned) parquet per pass
     bulk_mode: bool = False  # steady-state bulk CDC: skip the per-batch
     # dirty-bucket probe (every bucket assumed dirty — see
     # SnapshotTableStore.merge)
@@ -76,16 +91,17 @@ class CdcPipeline:
     # valid while data events never reference evolved columns)
     ddl_in_stream: bool = True  # False: the feed carries no schema_change
     # events (steady-state bulk CDC where DDL arrives out-of-band — the
-    # usual Debezium topology) — skips the per-batch schema-scan job, so a
-    # bulk batch runs exactly one Spark job (the merge)
+    # usual Debezium topology) — no DDL scan in the slice pass, so a bulk
+    # batch (no pass at all) runs exactly one Spark job (the merge)
     quarantine_path: str | None = None  # poison-row routing: malformed
     # data events (null key, unknown op) append to this errors table
     # (with reason + batch id) instead of silently merging under a null
     # key or failing the batch — the PutSQL failure-relationship /
     # ProcessSession.penalize analog (standard/PutSQL.java:147-163,
-    # ProcessSession.java:316). Like NiFi's failure relationship the
-    # quarantine write is at-least-once: a crash-replayed batch re-appends
-    # its poison rows; readers dedup on (lsn) if they need exactly-once.
+    # ProcessSession.java:316). Written once per batch, before the first
+    # merge. Like NiFi's failure relationship the quarantine write is
+    # at-least-once: a crash-replayed batch re-appends its poison rows;
+    # readers dedup on (lsn) if they need exactly-once.
     merge_strategy: str = "argmax"  # SnapshotTableStore.merge strategy:
     # 'argmax' (COW, shuffle-narrow) | 'delta'
     # (merge-on-read: per-bucket delta appends, bytes-written ∝ change
@@ -130,36 +146,72 @@ class CdcPipeline:
             "lsn")
 
     # ---------------- one micro-batch ----------------
+    _VALID_OPS = ("insert", "update", "delete", "upsert")
+
+    def _slice_pass(self, sl: DataFrame, ddl: Column,
+                    bad: Column | None) -> list:
+        """The slice's one aggregate, per Spark partition: the RECEIVE
+        record's numbers, the same over the poison rows (the DROP record,
+        prefix `drop_`), the checksum's partial sum over the non-DDL rows
+        and the schema_change rows. One collected job instead of a count,
+        a DDL scan, a quarantine count and a checksum job."""
+        size = content_size(sl)
+        aggs = partition_aggs(F.col("lsn"), size)
+        if bad is not None:
+            aggs += partition_aggs(F.col("lsn"), size, bad, prefix="drop_")
+        if self.checksum:
+            aggs.append(F.sum(F.when(~ddl, checksum_term())).alias("checksum"))
+        if self.ddl_in_stream:
+            aggs.append(F.collect_list(F.when(ddl, F.struct(
+                "lsn", "sc_kind", "sc_column", "sc_new_name", "sc_dtype"))
+            ).alias("ddl"))
+        return (sl.groupBy(F.spark_partition_id().alias("partition_id"))
+                .agg(*aggs).collect())
+
     def apply_until(self, lsn_to_incl: int) -> BatchStats:
         wm = self.ledger.get(self.stream)["last_applied_lsn"]
         batch_id = self.ledger.get(self.stream)["batch_id"] + 1
         stats = BatchStats(batch_id=batch_id, lsn_from=wm, lsn_to=lsn_to_incl)
         if lsn_to_incl <= wm:
             return stats
+        prov = self.provenance if self.provenance and self.provenance.enabled \
+            else None
 
         sl = self._read_slice(wm, lsn_to_incl)
         if self.cache_slice:
             sl = sl.persist()
         try:
-            stats.events = sl.count() if self.eager_stats else -1
-            if self.provenance:
-                self.provenance.emit(sl, "RECEIVE", batch_id, "tail")
-
-            # schema-change boundaries (tiny driver-side list; NiFi's analog
-            # is per-record — we split the batch instead)
-            if self.ddl_in_stream:
-                sc = (sl.filter(F.col("op") == "schema_change")
-                        .select("lsn", "sc_kind", "sc_column", "sc_new_name",
-                                "sc_dtype")
-                        .sort("lsn").collect())
-            else:
-                sc = []
             # null-safe: a NULL op is a data (poison) row, not DDL — it
             # must reach the quarantine split, not vanish in a
             # three-valued-logic filter
-            data = (sl.filter(~F.col("op").eqNullSafe("schema_change"))
-                    if self.ddl_in_stream else sl)
+            ddl = (F.col("op").eqNullSafe("schema_change")
+                   if self.ddl_in_stream else F.lit(False))
+            data = sl.filter(~ddl) if self.ddl_in_stream else sl
+            bad = (~ddl & (F.col("repo").isNull() | F.col("path").isNull()
+                           | ~F.coalesce(F.col("op").isin(*self._VALID_OPS),
+                                         F.lit(False)))
+                   if self.quarantine_path else None)
+            run_pass = bool(prov or self.checksum or self.eager_stats
+                            or self.ddl_in_stream or bad is not None)
+            parts = self._slice_pass(sl, ddl, bad) if run_pass else []
+            stats.events = (sum(r["row_count"] for r in parts) if run_pass
+                            else -1)
+            # schema-change boundaries (tiny driver-side list; NiFi's analog
+            # is per-record — we split the batch instead)
+            sc = (sorted((d for r in parts for d in r["ddl"]),
+                         key=lambda d: d.lsn) if self.ddl_in_stream else [])
             stats.schema_events = len(sc)
+            records = (partition_records(parts, "RECEIVE", batch_id, "tail")
+                       if prov else [])
+
+            if bad is not None:
+                stats.quarantined = sum(r["drop_row_count"] for r in parts)
+                if stats.quarantined:
+                    self._quarantine(data.filter(bad), batch_id)
+                    if prov:
+                        records += partition_records(
+                            parts, "DROP", batch_id, "quarantine", "drop_")
+                data = data.filter(~bad)
 
             if self.coalesce_ddl:
                 for r in sc:
@@ -171,7 +223,7 @@ class CdcPipeline:
             boundaries = [r.lsn for r in sc] + [lsn_to_incl + 1]
             for i, b in enumerate(boundaries):
                 sub = data.filter((F.col("lsn") > lo) & (F.col("lsn") < b))
-                self._apply_data(sub, batch_id, stats)
+                records += self._merge(sub, batch_id, prov)
                 if i < len(sc):
                     r = sc[i]
                     self.store.evolve(r.sc_kind, r.sc_column, r.sc_new_name,
@@ -179,8 +231,11 @@ class CdcPipeline:
                 lo = b - 1
                 stats.sub_batches += 1
 
-            cs = slice_checksum(data) if self.checksum else None
             stats.table_version = self.store.current_version()
+            if prov:
+                prov.land(records)
+            cs = (fold_checksum(r["checksum"] for r in parts)
+                  if self.checksum else None)
             self.ledger.commit(self.stream, lsn_to_incl, batch_id, cs,
                                stats.table_version)
             self.history.append(stats)
@@ -191,41 +246,30 @@ class CdcPipeline:
             if self.cache_slice:
                 sl.unpersist()
 
-    _VALID_OPS = ("insert", "update", "delete", "upsert")
+    def _quarantine(self, poison: DataFrame, batch_id: int) -> None:
+        reason = (F.when(F.col("repo").isNull() | F.col("path").isNull(),
+                         "null_key")
+                  .otherwise(F.concat(F.lit("bad_op:"),
+                                      F.coalesce(F.col("op"), F.lit("null")))))
+        (poison.withColumn("_reason", reason)
+         .withColumn("_batch_id", F.lit(batch_id).cast("long"))
+         .write.mode("append").parquet(self.quarantine_path))
 
-    def _apply_data(self, sub: DataFrame, batch_id: int, stats: BatchStats) -> None:
-        if self.quarantine_path:
-            bad = (F.col("repo").isNull() | F.col("path").isNull()
-                   | ~F.coalesce(F.col("op").isin(*self._VALID_OPS),
-                                 F.lit(False)))
-            reason = (F.when(F.col("repo").isNull() | F.col("path").isNull(),
-                             "null_key")
-                      .otherwise(F.concat(F.lit("bad_op:"),
-                                          F.coalesce(F.col("op"),
-                                                     F.lit("null")))))
-            poison = (sub.filter(bad)
-                      .withColumn("_reason", reason)
-                      .withColumn("_batch_id", F.lit(batch_id).cast("long")))
-            n_bad = poison.count() if self.eager_stats else -1
-            if n_bad != 0:
-                poison.write.mode("append").parquet(self.quarantine_path)
-                if self.provenance:
-                    self.provenance.emit(poison, "DROP", batch_id,
-                                         "quarantine")
-            if n_bad > 0:
-                stats.quarantined += n_bad
-            sub = sub.filter(~bad)
+    def _merge(self, sub: DataFrame, batch_id: int,
+               prov: ProvenanceWriter | None) -> list:
+        """Merge one sub-batch; returns its JOIN and SEND records."""
         changes = self._normalize_changes(sub)
         if self.dedup_deliveries:
             changes = changes.dropDuplicates(["repo", "path", "lsn"])
-        if self.provenance:
-            self.provenance.emit(changes, "JOIN", batch_id, "compact")
+        records = (prov.aggregate(changes, "JOIN", batch_id, "compact")
+                   if prov else [])
         res = self.store.merge(self.spark, changes,
                                strategy=self.merge_strategy,
                                assume_all_dirty=self.bulk_mode)
-        if res["dirty_buckets"] and self.provenance:
-            self.provenance.emit_counts(self.spark, "SEND", batch_id, "merge",
-                                        len(res["dirty_buckets"]))
+        if res["dirty_buckets"] and prov:
+            records.append(count_record("SEND", batch_id, "merge",
+                                        len(res["dirty_buckets"])))
+        return records
 
     # ---------------- full run / resume ----------------
     def run(self, bounds: list[int]) -> list[BatchStats]:

@@ -370,3 +370,27 @@ def test_id3v1_wins_over_id3v2_on_conflict():
     md = dict(parse_mp3_metadata(blob))
     assert md["title"] == "V1 Title"
     assert md["MP3.ID3v2.TIT2"] == "V2 Title"
+
+
+def test_id3v2_unsynchronised_or_compressed_tag_yields_no_frames():
+    """An unsynchronised tag (flag 0x80) stuffs 0x00 after every 0xFF, so
+    its frame sizes and text are not plain bytes; a v2.2 tag with flag
+    0x40 is compressed. Neither is parsed into frames — only the
+    version pair is reported."""
+    from nifi_spark.datalib.exif import parse_mp3_metadata
+
+    def frame3(fid, text):
+        data = b"\x00" + text
+        return fid + len(data).to_bytes(4, "big") + b"\x00\x00" + data
+
+    # "\xff\x00" is the unsynchronised form of the text byte 0xFF
+    unsync = _id3v2(3, frame3(b"TIT2", b"Caf\xff\x00 Song"), flags=0x80)
+    md = dict(parse_mp3_metadata(unsync))
+    assert md["MP3.ID3v2"] == "2.3.0"
+    assert not any(k.startswith("MP3.ID3v2.") for k in md)
+    assert "title" not in md
+
+    frame2 = b"TT2" + (1 + 9).to_bytes(3, "big") + b"\x00Old Title"
+    md = dict(parse_mp3_metadata(_id3v2(2, frame2, flags=0x40)))
+    assert md["MP3.ID3v2"] == "2.2.0"
+    assert "title" not in md and "MP3.ID3v2.TT2" not in md

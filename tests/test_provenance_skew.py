@@ -80,3 +80,43 @@ def test_partition_balance_query(applied):
     bal = partition_balance(prov.read(spark), stage="compact").toPandas()
     assert len(bal) == 3
     assert (bal["max_rows"] >= bal["mean_rows"]).all()
+
+
+def test_query_rows_follow_from_the_log(applied):
+    """batch_summary, lineage_for_lsn and partition_balance rows,
+    recomputed from the input log: RECEIVE counts every slice row, JOIN
+    the deduplicated data rows the merge took, SEND the 8 dirty buckets.
+    The slice (one input file) and the merge's input each fit one
+    partition here."""
+    spark, log, pipe, prov = applied
+    p = prov.read(spark)
+
+    def size(df):
+        return int(df["content"].fillna("").str.encode("utf-8").str.len().sum())
+
+    expected, lo = [], -1
+    for b, hi in enumerate(fixtures.batch_bounds(log, 3)):
+        sl = log[(log["lsn"] > lo) & (log["lsn"] <= hi)]
+        data = sl[sl["op"] != "schema_change"].drop_duplicates(
+            ["repo", "path", "lsn"])
+        expected += [
+            (b, "compact", "JOIN", len(data), size(data), 1,
+             int(data["lsn"].min()), int(data["lsn"].max())),
+            (b, "merge", "SEND", 8, 0, 1, -1, -1),
+            (b, "tail", "RECEIVE", len(sl), size(sl), 1, lo + 1, hi)]
+        lo = hi
+    got = [tuple(r) for r in batch_summary(p).orderBy(
+        "batch_id", "stage").collect()]
+    assert got == expected
+
+    some_lsn = int(log[log["op"] == "update"]["lsn"].iloc[10])
+    b = next(i for i, hi in enumerate(fixtures.batch_bounds(log, 3))
+             if some_lsn <= hi)
+    lin = [(r.batch_id, r.stage, r.event_type, r.row_count)
+           for r in lineage_for_lsn(p, some_lsn).collect()]
+    assert lin == [(b, "tail", "RECEIVE", expected[3 * b + 2][3]),
+                   (b, "compact", "JOIN", expected[3 * b][3])]
+
+    bal = [tuple(r) for r in partition_balance(p, "compact").collect()]
+    assert bal == [(b, e[3], float(e[3]), 1, 1.0)
+                   for b, e in enumerate(expected[0::3])]
