@@ -10823,8 +10823,9 @@ tagged AS (
   SELECT i.event_id, i.rn,
          CASE WHEN rn < a THEN 0 WHEN rn < a + b THEN 1
               WHEN rn < a + b + c THEN 2 WHEN rn < a + b + c + d THEN 3
-              ELSE 4 END AS bid
-  FROM ids i CROSS JOIN p),
+              WHEN rn < a + b + c + d + e THEN 4 END AS bid
+  FROM ids i CROSS JOIN p
+  WHERE rn < a + b + c + d + e),
 agg AS (
   SELECT bid, count(*)::BIGINT AS n_lines,
          sum(event_id)::BIGINT AS sum_id,

@@ -2,14 +2,19 @@
 
 One NiFi session-commit == one micro-batch here (SURVEY.md §3.1 mapping):
 
-    read change slice (lsn > ledger watermark, pushdown to parquet scan)
+    read change slice (lsn > ledger watermark, pushdown to parquet scan;
+    the changelog schema is inferred on the first read only, so later
+    slices plan without a footer-lookup job)
       → ONE slice pass: a single aggregate per Spark partition, collected
         in Python — the RECEIVE record (lsn range, rows, bytes), the
         same over the poison rows (the DROP record and quarantine count),
-        the ledger checksum's partial sums and the schema_change rows.
-        It runs only when provenance, the checksum, eager_stats, DDL
-        scanning or the quarantine needs it, so the bulk config (none of
-        these) runs the merge's job alone
+        the ledger checksum's partial sums, the schema_change rows and
+        the buckets the good data rows hash to: the merge's dirty set
+        when the batch has no DDL sub-batch (a DDL batch's sub-batches
+        keep the store's probe; bulk mode merges every bucket). It runs
+        only when provenance, the checksum, eager_stats, DDL scanning or
+        the quarantine needs it, so the bulk config (none of these) runs
+        the merge's jobs alone
       → poison rows append to the quarantine once, if the pass counted any
       → split at schema_change boundaries, apply DDL serially between
         sub-batches (NiFi sidesteps this — every processor is schema-less;
@@ -40,9 +45,11 @@ merge's 1:1 winner join.
 
 from __future__ import annotations
 
+from collections.abc import Iterable
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from nifi_spark.ledger import OffsetLedger, checksum_term, fold_checksum
 from nifi_spark.ledger import slice_checksum  # noqa: F401 — kept importable
@@ -50,7 +57,7 @@ from nifi_spark.ledger import slice_checksum  # noqa: F401 — kept importable
 from nifi_spark.provenance import (ProvenanceWriter, content_size,
                                    count_record, partition_aggs,
                                    partition_records)
-from nifi_spark.storage import SnapshotTableStore
+from nifi_spark.storage import SnapshotTableStore, bucket_expr
 
 
 @dataclass
@@ -84,8 +91,8 @@ class CdcPipeline:
     # across the slice pass, quarantine write and merges; size batches to
     # the cluster (micro-batch bound = the NiFi back-pressure analog) or
     # disable to re-scan the (column-pruned) parquet per pass
-    bulk_mode: bool = False  # steady-state bulk CDC: skip the per-batch
-    # dirty-bucket probe (every bucket assumed dirty — see
+    bulk_mode: bool = False  # steady-state bulk CDC: every bucket is
+    # merged as dirty, with no dirty-bucket probe or set (see
     # SnapshotTableStore.merge)
     coalesce_ddl: bool = False  # True: apply all DDL up-front (perf mode,
     # valid while data events never reference evolved columns)
@@ -115,21 +122,28 @@ class CdcPipeline:
     # is a unique log position) — then a batch has no dedup exchange at
     # all. DetectDuplicate analog, standard/DetectDuplicate.java:58-68.
     history: list[BatchStats] = field(default_factory=list)
+    _slice_schema: StructType | None = field(default=None, init=False,
+                                             repr=False)
 
     # ---------------- source ----------------
     def _read_slice(self, lsn_from_excl: int, lsn_to_incl: int) -> DataFrame:
         # Both predicates push down to the parquet scan (min/max row-group
         # pruning) — the QueryDatabaseTable incremental-fetch analog
         # (standard/QueryDatabaseTable.java:324-354: strict '>' on the
-        # first watermark column).
-        return (self.spark.read.parquet(self.changelog_path)
-                .filter((F.col("lsn") > F.lit(lsn_from_excl))
-                        & (F.col("lsn") <= F.lit(lsn_to_incl))))
+        # first watermark column). The changelog schema is inferred (one
+        # footer-lookup job) on the first read only; later reads pass it.
+        reader = self.spark.read
+        if self._slice_schema is not None:
+            reader = reader.schema(self._slice_schema)
+        df = reader.parquet(self.changelog_path)
+        self._slice_schema = df.schema
+        return df.filter((F.col("lsn") > F.lit(lsn_from_excl))
+                         & (F.col("lsn") <= F.lit(lsn_to_incl)))
 
     # ---------------- change normalization ----------------
     def _normalize_changes(self, data: DataFrame) -> DataFrame:
-        """Project raw events onto the store schema + (op, lsn) — a pure
-        narrow projection, NO shuffle.
+        """Project raw events onto the store schema, cast to its types,
+        + (op, lsn) — a pure narrow projection, NO shuffle.
 
         LWW compaction (one winner per key by LSN) happens exactly once,
         inside ``SnapshotTableStore.merge``'s winner agg over
@@ -140,7 +154,7 @@ class CdcPipeline:
         tombstones resolve in that single max-by-LSN reduce.
         """
         return data.select(
-            *[F.col(c) if c in data.columns else F.lit(None).cast(t).alias(c)
+            *[(F.col(c) if c in data.columns else F.lit(None)).cast(t).alias(c)
               for c, t in self.store.schema_columns()],
             F.when(F.col("op") == "delete", "delete").otherwise("upsert").alias("op"),
             "lsn")
@@ -148,13 +162,15 @@ class CdcPipeline:
     # ---------------- one micro-batch ----------------
     _VALID_OPS = ("insert", "update", "delete", "upsert")
 
-    def _slice_pass(self, sl: DataFrame, ddl: Column,
-                    bad: Column | None) -> list:
+    def _slice_pass(self, sl: DataFrame, ddl: Column, bad: Column | None,
+                    n_buckets: int | None) -> list:
         """The slice's one aggregate, per Spark partition: the RECEIVE
         record's numbers, the same over the poison rows (the DROP record,
-        prefix `drop_`), the checksum's partial sum over the non-DDL rows
-        and the schema_change rows. One collected job instead of a count,
-        a DDL scan, a quarantine count and a checksum job."""
+        prefix `drop_`), the checksum's partial sum over the non-DDL rows,
+        the schema_change rows and, given `n_buckets`, the buckets the
+        data rows hash to (the merge's dirty set). One collected job
+        instead of a count, a DDL scan, a quarantine count, a checksum
+        job and the merge's dirty-bucket probe."""
         size = content_size(sl)
         aggs = partition_aggs(F.col("lsn"), size)
         if bad is not None:
@@ -165,6 +181,10 @@ class CdcPipeline:
             aggs.append(F.collect_list(F.when(ddl, F.struct(
                 "lsn", "sc_kind", "sc_column", "sc_new_name", "sc_dtype"))
             ).alias("ddl"))
+        if n_buckets is not None:
+            good = ~ddl if bad is None else ~ddl & ~bad
+            aggs.append(F.collect_set(F.when(good, bucket_expr(n_buckets)))
+                        .alias("buckets"))
         return (sl.groupBy(F.spark_partition_id().alias("partition_id"))
                 .agg(*aggs).collect())
 
@@ -193,7 +213,10 @@ class CdcPipeline:
                    if self.quarantine_path else None)
             run_pass = bool(prov or self.checksum or self.eager_stats
                             or self.ddl_in_stream or bad is not None)
-            parts = self._slice_pass(sl, ddl, bad) if run_pass else []
+            nb = self.store._load_manifest()["n_buckets"]
+            parts = (self._slice_pass(sl, ddl, bad,
+                                      None if self.bulk_mode else nb)
+                     if run_pass else [])
             stats.events = (sum(r["row_count"] for r in parts) if run_pass
                             else -1)
             # schema-change boundaries (tiny driver-side list; NiFi's analog
@@ -219,11 +242,19 @@ class CdcPipeline:
                                       r.sc_dtype or "string", lsn=r.lsn)
                 sc = []
 
+            # the merge's dirty buckets: all of them in bulk mode, the
+            # pass's set for a batch with no DDL sub-batch, else the probe
+            if self.bulk_mode:
+                dirty = range(nb)
+            elif run_pass and not sc:
+                dirty = {b for r in parts for b in r["buckets"]}
+            else:
+                dirty = None
             lo = wm
             boundaries = [r.lsn for r in sc] + [lsn_to_incl + 1]
             for i, b in enumerate(boundaries):
                 sub = data.filter((F.col("lsn") > lo) & (F.col("lsn") < b))
-                records += self._merge(sub, batch_id, prov)
+                records += self._merge(sub, batch_id, prov, dirty)
                 if i < len(sc):
                     r = sc[i]
                     self.store.evolve(r.sc_kind, r.sc_column, r.sc_new_name,
@@ -256,16 +287,17 @@ class CdcPipeline:
          .write.mode("append").parquet(self.quarantine_path))
 
     def _merge(self, sub: DataFrame, batch_id: int,
-               prov: ProvenanceWriter | None) -> list:
-        """Merge one sub-batch; returns its JOIN and SEND records."""
+               prov: ProvenanceWriter | None,
+               dirty: Iterable[int] | None) -> list:
+        """Merge one sub-batch into the `dirty` buckets (None: the
+        store's probe finds them); returns its JOIN and SEND records."""
         changes = self._normalize_changes(sub)
         if self.dedup_deliveries:
             changes = changes.dropDuplicates(["repo", "path", "lsn"])
         records = (prov.aggregate(changes, "JOIN", batch_id, "compact")
                    if prov else [])
         res = self.store.merge(self.spark, changes,
-                               strategy=self.merge_strategy,
-                               assume_all_dirty=self.bulk_mode)
+                               strategy=self.merge_strategy, dirty=dirty)
         if res["dirty_buckets"] and prov:
             records.append(count_record("SEND", batch_id, "merge",
                                         len(res["dirty_buckets"])))

@@ -36,6 +36,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections.abc import Iterable
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
@@ -48,6 +49,22 @@ KEY = ["repo", "path"]
 
 # packed LWW order keys must fit a long: lsn*4 + 3 < 2^63
 LSN_BOUND = 1 << 61
+
+
+def _ddl(cols) -> str:
+    return ", ".join(f"`{n}` {t}" for n, t in cols)
+
+
+def _file_columns(cur, *extra: str) -> list[Column]:
+    """A data file's columns: the manifest schema `cur` cast to its
+    types, then `_last_lsn` as a long, `extra` (delta files' `op`) and
+    the `bucket` partition column. Every writer selects these, so a
+    file's schema is its schema_id's manifest columns exactly and
+    read() can hand it to the scan instead of inferring it."""
+    return ([F.col(n).cast(t).alias(n) for n, t in cur]
+            + [F.col("_last_lsn").cast("long").alias("_last_lsn")]
+            + [F.col(e).cast("string").alias(e) for e in extra]
+            + [F.col("bucket")])
 
 
 def bucket_expr(n_buckets: int):
@@ -93,6 +110,11 @@ class SnapshotTableStore:
     def __init__(self, root: str, n_buckets: int = 16):
         self.root = root
         self.n_buckets = n_buckets
+        # read()'s plans for one committed version: ((version,
+        # committed_at), {(session, buckets, with_lsn): DataFrame}),
+        # replaced as one tuple so a concurrent reader of another
+        # version only ever fills its own dict
+        self._plans: tuple = (None, {})
 
     # ---------------- manifest / pointer plumbing ----------------
     def _ptr_path(self) -> str:
@@ -202,6 +224,15 @@ class SnapshotTableStore:
         PersistentProvenanceRepository.java:156-175). Raises
         FileNotFoundError for versions dropped by expire_snapshots.
 
+        The plan is built from the manifest alone: each schema group's
+        scan gets its file schema (`schemas[sid]` + `_last_lsn long`,
+        + `op string` for delta files — the writers cast to exactly
+        that), so no Spark job infers a parquet footer. The built
+        DataFrame is memoized per (session, version, buckets,
+        with_lsn): VERSION and the manifest are re-read on every call,
+        so a commit by any store instance is seen at once, and the memo
+        drops every plan of another version when the version moves.
+
         Buckets carrying merge-on-read deltas (strategy='delta' merges)
         are folded here: base ∪ delta rows reduce with LWW in the
         merge's `lww_order` (lsn, then base<delta) and delete tombstones
@@ -210,6 +241,25 @@ class SnapshotTableStore:
         zero-agg fast path). Tables with no deltas take the COW fast
         path unchanged."""
         m = self._load_manifest(version)
+        at = (m["version"], m["committed_at"])
+        plans_at, plans = self._plans
+        if plans_at != at:
+            plans = {}
+            self._plans = (at, plans)
+        key = (spark, None if buckets is None else tuple(buckets), with_lsn)
+        df = plans.get(key)
+        if df is None:
+            df = plans[key] = self._plan(spark, m, buckets, with_lsn)
+        return df
+
+    def _scan(self, spark: SparkSession, m: dict, sid: str,
+              paths: list[str], *extra: tuple[str, str]) -> DataFrame:
+        """The files of schema `sid`, read under the manifest's schema."""
+        cols = [*m["schemas"][sid], ("_last_lsn", "long"), *extra]
+        return spark.read.schema(_ddl(cols)).parquet(*paths)
+
+    def _plan(self, spark: SparkSession, m: dict, buckets: list[int] | None,
+              with_lsn: bool) -> DataFrame:
         cur = self.schema_columns(m)
         cols = [n for n, _ in cur] + (["_last_lsn"] if with_lsn else [])
         entries = m["buckets"]
@@ -235,19 +285,20 @@ class SnapshotTableStore:
                     os.path.join(self.root, e["path"]))
         parts = []
         for sid, paths in base_clean.items():
-            df = spark.read.parquet(*paths)
+            df = self._scan(spark, m, sid, paths)
             parts.append(self._normalize(df, m["schemas"][sid], cur))
         if delta_by_sid:
             names = [n for n, _ in cur]
             fold_in = None
             for sid, paths in base_delta.items():
-                p = (self._normalize(spark.read.parquet(*paths),
+                p = (self._normalize(self._scan(spark, m, sid, paths),
                                      m["schemas"][sid], cur)
                      .withColumn("op", F.lit("upsert"))
                      .withColumn("_src", F.lit(0)))
                 fold_in = p if fold_in is None else fold_in.unionByName(p)
             for sid, paths in delta_by_sid.items():
-                p = (self._normalize(spark.read.parquet(*paths),
+                p = (self._normalize(self._scan(spark, m, sid, paths,
+                                                ("op", "string")),
                                      m["schemas"][sid], cur,
                                      extra=("_last_lsn", "op"))
                      .withColumn("_src", F.lit(1)))
@@ -265,8 +316,8 @@ class SnapshotTableStore:
                                 for c in [*names, "_last_lsn"]]))
             parts.append(folded)
         if not parts:
-            fields = ", ".join(f"`{n}` {t}" for n, t in cur) + ", `_last_lsn` long"
-            empty = spark.createDataFrame([], schema=fields)
+            empty = spark.createDataFrame([], schema=_ddl(
+                [*cur, ("_last_lsn", "long")]))
             return empty.select(*cols)
         out = parts[0]
         for p in parts[1:]:
@@ -341,8 +392,9 @@ class SnapshotTableStore:
         if new_n_buckets < 1:
             raise ValueError("new_n_buckets must be >= 1")
         m = self._load_manifest()
-        full = self.read(spark, with_lsn=True) \
-            .withColumn("bucket", bucket_expr(new_n_buckets))
+        full = (self.read(spark, with_lsn=True)
+                .withColumn("bucket", bucket_expr(new_n_buckets))
+                .select(*_file_columns(self.schema_columns(m))))
         new_version = m["version"] + 1
         rel = os.path.join("versions", f"v{new_version:06d}")
         out_dir = os.path.join(self.root, rel)
@@ -364,7 +416,7 @@ class SnapshotTableStore:
     # ---------------- merge (the PutSQL / MERGE INTO analog) ----------------
     def merge(self, spark: SparkSession, changes: DataFrame,
               strategy: str = "argmax",
-              assume_all_dirty: bool = False) -> dict:
+              dirty: Iterable[int] | None = None) -> dict:
         """Apply a change set (store-schema columns + `op` ∈
         {'upsert','delete'} + `lsn`; multiple rows per key allowed — LWW
         by LSN happens here, exactly once).
@@ -404,11 +456,18 @@ class SnapshotTableStore:
         re-deliver inside one batch, run operators.detect_duplicate
         upstream (CdcPipeline's delivery dedup does).
 
-        assume_all_dirty ("bulk mode"): skip the dirty-bucket probe job
-        and treat every bucket as dirty. Correct always (clean buckets
-        are rewritten unchanged); profitable when micro-batches are
-        large relative to n_buckets — steady-state bulk CDC — where the
-        probe would return "all" anyway and its scan is pure overhead.
+        dirty: the buckets the change set hashes to, when the caller
+        already knows them — CdcPipeline collects them in its slice
+        pass, and bulk mode passes every bucket (correct always: clean
+        buckets are rewritten unchanged; profitable when micro-batches
+        are large relative to n_buckets, where the probe would return
+        "all" anyway). It must cover every bucket a change hashes to,
+        or the changes outside it may be lost. Only `None` runs the
+        probe, a `distinct` over the changes' buckets (two Spark jobs);
+        an empty set commits nothing.
+
+        Every written file carries the manifest's columns in order and
+        type (`_file_columns`), whatever types the change set has.
 
         Returns stats {dirty_buckets, rows_written, version}.
         """
@@ -422,11 +481,10 @@ class SnapshotTableStore:
         # and the only viable shape when the change slice exceeds memory.
         chg = (changes.withColumn("bucket", bucket_expr(nb))
                .withColumn("_src", F.lit(1)))
-        if assume_all_dirty:
-            dirty = list(range(nb))
-        else:
-            dirty = sorted(r["bucket"] for r in
-                           chg.select("bucket").distinct().collect())
+        if dirty is None:
+            dirty = [r["bucket"] for r in
+                     chg.select("bucket").distinct().collect()]
+        dirty = sorted(dirty)
         if not dirty:
             return {"dirty_buckets": [], "rows_written": 0, "version": m["version"]}
 
@@ -454,7 +512,8 @@ class SnapshotTableStore:
         out_dir = os.path.join(self.root, rel)
         # one output task per dirty bucket → exactly one file per bucket dir
         # (small-file control; MergeContent bin-packing analog).
-        (winner.repartition(len(dirty), "bucket")
+        (winner.select(*_file_columns(self.schema_columns(m)))
+               .repartition(len(dirty), "bucket")
                .write.partitionBy("bucket").mode("overwrite").parquet(out_dir))
 
         written = {int(d.split("=")[1]) for d in os.listdir(out_dir)
@@ -492,7 +551,8 @@ class SnapshotTableStore:
         new_version = m["version"] + 1
         rel = os.path.join("versions", f"v{new_version:06d}")
         out_dir = os.path.join(self.root, rel)
-        (compacted.repartition(len(dirty), "bucket")
+        (compacted.select(*_file_columns(cur, "op"))
+                  .repartition(len(dirty), "bucket")
                   .write.partitionBy("bucket").mode("overwrite")
                   .parquet(out_dir))
         written = {int(d.split("=")[1]) for d in os.listdir(out_dir)
@@ -527,7 +587,8 @@ class SnapshotTableStore:
         if not target:
             return {"compacted_buckets": [], "version": m["version"]}
         folded = (self.read(spark, buckets=target, with_lsn=True)
-                  .withColumn("bucket", bucket_expr(nb)))
+                  .withColumn("bucket", bucket_expr(nb))
+                  .select(*_file_columns(self.schema_columns(m))))
         new_version = m["version"] + 1
         rel = os.path.join("versions", f"v{new_version:06d}")
         out_dir = os.path.join(self.root, rel)

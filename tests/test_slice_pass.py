@@ -20,7 +20,7 @@ from nifi_spark import fixtures
 from nifi_spark.ledger import OffsetLedger, slice_checksum
 from nifi_spark.pipeline import CdcPipeline
 from nifi_spark.provenance import ProvenanceWriter
-from nifi_spark.storage import SnapshotTableStore
+from nifi_spark.storage import SnapshotTableStore, bucket_expr
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -166,27 +166,30 @@ def _pipeline(spark, root, log, **kw):
     return CdcPipeline(spark, log, store, OffsetLedger(str(root / "led")), **kw)
 
 
-def test_bulk_batch_runs_no_job_besides_slice_read_and_merge(
+def test_bulk_batch_runs_no_job_besides_the_merge(
         spark, tmp_path, no_ddl_log, monkeypatch):
-    """The benchmark's bulk config runs no slice pass: the pipeline's
-    only job of its own is the slice read's parquet footer lookup; the
-    rest is the merge's one write, which adaptive execution runs as one
-    job per query stage."""
+    """The benchmark's bulk config runs no slice pass, and the slice
+    read reuses the changelog schema of the first batch: every job of a
+    later bulk batch is the merge's one write, which adaptive execution
+    runs as one job per query stage."""
     monkeypatch.syspath_prepend(os.path.join(ROOT, "cdcbench"))
     from workloads import BULK
     pipe = _pipeline(spark, tmp_path, no_ddl_log, **BULK)
     pipe.apply_until(599)
     total, merge = _jobs(spark, pipe, 1199)
     assert merge >= 1
-    assert total - merge == 1
+    assert total - merge == 0
     assert pipe.history[-1].events == -1
 
 
-# Measured on this fixture: 8 jobs of the pipeline's own (slice footer
-# lookup, the slice pass, the JOIN records' aggregate, the quarantine
-# write) + 9 of the merge; the separate count / DDL-scan / quarantine-count
-# / checksum jobs and Spark-written provenance ran 28 in all.
-DEFAULT_BATCH_JOBS = 17
+# Measured on this fixture: 7 jobs of the pipeline's own (the slice
+# pass, the JOIN records' aggregate, the quarantine write) + 6 of the
+# merge (its write; the table scan's schema comes from the manifest and
+# the dirty buckets from the slice pass). With the slice footer lookup,
+# the table's footer lookup and the dirty-bucket probe it ran 17; with
+# the separate count / DDL-scan / quarantine-count / checksum jobs and
+# Spark-written provenance, 28.
+DEFAULT_BATCH_JOBS = 13
 
 
 def test_default_batch_job_count(spark, tmp_path, no_ddl_log):
@@ -198,3 +201,133 @@ def test_default_batch_job_count(spark, tmp_path, no_ddl_log):
     total, _ = _jobs(spark, pipe, 1199)
     assert pipe.history[-1].quarantined == 1
     assert total <= DEFAULT_BATCH_JOBS, total
+
+
+def _group_jobs(spark, fn):
+    """(Spark job ids run by fn(), fn's result)."""
+    sc = spark.sparkContext
+    tag = f"jobs-{id(fn)}"
+    sc.setJobGroup(tag, "count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return sc.statusTracker().getJobIdsForGroup(tag), out
+
+
+def _changes(spark, rows):
+    return spark.createDataFrame(
+        [(r, p, f"c{lsn}", "py", f"v{lsn}", "upsert", lsn)
+         for r, p, lsn in rows],
+        "repo string, path string, commit string, lang string, "
+        "content string, op string, lsn long")
+
+
+def test_store_read_plans_from_the_manifest(spark, tmp_path):
+    """Building a read runs no Spark job, an unchanged version returns
+    the memoized DataFrame, and another store instance on the same root
+    sees a commit at once."""
+    root = str(tmp_path / "tbl")
+    store = SnapshotTableStore(root, n_buckets=4)
+    store.init()
+    store.merge(spark, _changes(spark, [(f"r{i}", "a", i) for i in range(8)]))
+    store.merge(spark, _changes(spark, [("r0", "a", 8), ("r9", "a", 9)]),
+                strategy="delta")
+    jobs, df = _group_jobs(spark, lambda: store.read(spark, with_lsn=True))
+    assert list(jobs) == []
+    assert store.read(spark, with_lsn=True) is df
+    assert store.read(spark) is not df
+
+    other = SnapshotTableStore(root, n_buckets=4)
+    seen = other.read(spark)
+    assert seen.count() == 9
+    store.merge(spark, _changes(spark, [("r10", "a", 10)]))
+    after = other.read(spark)
+    assert after is not seen and after.count() == 10
+    assert other.read(spark, version=2).count() == 9
+
+
+# ------------------- dirty buckets from the slice pass -------------------
+
+def _keys_in_bucket(spark, keys, n_buckets, bucket, n):
+    """The first n of `keys` (repo, path) that hash to `bucket`."""
+    cand = spark.createDataFrame(keys, "repo string, path string")
+    hit = sorted((r.repo, r.path) for r in
+                 cand.filter(bucket_expr(n_buckets) == bucket).collect())
+    assert len(hit) >= n
+    return hit[:n]
+
+
+def _record_dirty(store):
+    """The `dirty` argument of each later store.merge call, in order."""
+    seen, merge = [], store.merge
+
+    def recording_merge(*a, **kw):
+        seen.append(kw.get("dirty"))
+        return merge(*a, **kw)
+
+    store.merge = recording_merge
+    return seen
+
+
+def test_dirty_buckets_come_from_the_slice_pass(spark, tmp_path):
+    """A default-config batch whose rows all hash to one of 8 buckets
+    rewrites only that bucket, and its merge runs no probe job."""
+    rows = [_row(i, "insert", f"r{i}", "a") for i in range(64)]
+    hot = _keys_in_bucket(spark, [(r["repo"], r["path"]) for r in rows],
+                          8, 3, 4)
+    rows += [_row(64 + i, "update", r, p) for i, (r, p) in enumerate(hot * 3)]
+    log = str(tmp_path / "log.parquet")
+    fixtures.write_changelog_parquet(pd.DataFrame(rows), log)
+    store = SnapshotTableStore(str(tmp_path / "tbl"), n_buckets=8)
+    store.init()
+    pipe = CdcPipeline(spark, log, store, OffsetLedger(str(tmp_path / "led")),
+                       provenance=ProvenanceWriter(str(tmp_path / "prov")),
+                       quarantine_path=str(tmp_path / "q"))
+    pipe.apply_until(63)
+    before = store._load_manifest()["buckets"]
+    assert len(before) == 8
+
+    dirty_args = _record_dirty(store)
+    jobs, _ = _group_jobs(spark, lambda: pipe.apply_until(64 + len(hot) * 3 - 1))
+    after = store._load_manifest()["buckets"]
+    assert dirty_args == [{3}]
+    assert {b for b in after if after[b] != before[b]} == {"3"}
+    tracker = spark.sparkContext.statusTracker()
+    stages = [tracker.getStageInfo(s) for j in jobs
+              for s in tracker.getJobInfo(j).stageIds]
+    # the probe is the merge's only collect
+    assert not [s.name for s in stages
+                if s and s.name.startswith("collect at")
+                and "storage.py" in s.name]
+    final = {(r.repo, r.path): r.content for r in store.read(spark).collect()}
+    assert len(final) == 64
+    for k, (r, p) in enumerate(hot):
+        assert final[(r, p)] == f"v{64 + 2 * len(hot) + k}"
+
+
+def test_empty_sub_batch_between_adjacent_ddls_commits_nothing(spark, tmp_path):
+    """A batch with DDL keeps the probe per sub-batch, so the empty one
+    between two adjacent DDLs commits no table version."""
+    rows = ([_row(i, "insert", f"r{i}", "a") for i in range(6)]
+            + [_row(6 + i, "update", f"r{i}", "a") for i in range(4)]
+            + [_row(10, "schema_change", None, None, "", ADD),
+               _row(11, "schema_change", None, None, "", RENAME)]
+            + [_row(12 + i, "update", f"r{i}", "a") for i in range(4)])
+    log = str(tmp_path / "log.parquet")
+    fixtures.write_changelog_parquet(pd.DataFrame(rows), log)
+    store = SnapshotTableStore(str(tmp_path / "tbl"), n_buckets=4)
+    store.init()
+    pipe = CdcPipeline(spark, log, store, OffsetLedger(str(tmp_path / "led")),
+                       provenance=ProvenanceWriter(str(tmp_path / "prov")),
+                       quarantine_path=str(tmp_path / "q"))
+    pipe.apply_until(5)
+    assert store.current_version() == 1
+    dirty_args = _record_dirty(store)
+    st = pipe.apply_until(15)
+    assert st.sub_batches == 3 and dirty_args == [None, None, None]
+    # merge (6..9), add, nothing for the empty sub-batch, rename, merge (12..15)
+    assert store.current_version() == 5 == st.table_version
+    assert store.versions() == [0, 1, 2, 3, 4, 5]
+    assert store.read(spark).columns[-1] == "extra_y"
