@@ -2,7 +2,10 @@
 
 Applies the change log in LSN order with exact CDC semantics (last-writer-
 wins per (repo, path); delete removes; duplicate (key, lsn) deliveries
-ignored; schema changes applied in order). Mirrors NiFi's record-processing
+ignored; schema changes applied in order). Evolved columns are kept by
+position: an upsert fills position i from its column named as in the
+schema then in effect (null if the log has no such column), and a later
+rename keeps the value in place. Mirrors NiFi's record-processing
 integration-test approach (SURVEY.md §5): the mock-harness asserts final
 state; here the harness is pandas and the state is the final table.
 
@@ -28,13 +31,15 @@ def replay(changelog: pd.DataFrame,
     state: dict[tuple[str, str], dict] = {}
     if initial is not None:
         for r in initial.itertuples(index=False):
-            state[(r.repo, r.path)] = {c: getattr(r, c) for c in BASE_COLS}
+            state[(r.repo, r.path)] = {**{c: getattr(r, c) for c in BASE_COLS},
+                                       "_x": []}
     extra_cols: list[str] = []
     applied: set[tuple[str, str, int]] = set()
     applied_schema_lsns: set[int] = set()
 
     ev = changelog if max_lsn is None else changelog[changelog["lsn"] <= max_lsn]
     ev = ev.sort_values("lsn", kind="stable")
+    pos = {c: i for i, c in enumerate(ev.columns)}
     for r in ev.itertuples(index=False):
         if r.op == "schema_change":
             if r.lsn in applied_schema_lsns:  # duplicate delivery
@@ -56,14 +61,17 @@ def replay(changelog: pd.DataFrame,
             state.pop(key, None)
         else:  # insert | update → upsert
             state[key] = {"repo": r.repo, "path": r.path, "commit": r.commit,
-                          "lang": r.lang, "content": r.content}
+                          "lang": r.lang, "content": r.content,
+                          "_x": [r[pos[c]] if c in pos else None
+                                 for c in extra_cols]}
     cols = BASE_COLS + extra_cols
     if not state:
         return pd.DataFrame(columns=cols), extra_cols
-    out = pd.DataFrame(list(state.values()))
-    for c in extra_cols:
-        out[c] = None
-    return out[cols].sort_values(["repo", "path"]).reset_index(drop=True), extra_cols
+    out = pd.DataFrame([
+        [*(v[c] for c in BASE_COLS),
+         *v["_x"], *[None] * (len(extra_cols) - len(v["_x"]))]
+        for v in state.values()], columns=cols)
+    return out.sort_values(["repo", "path"]).reset_index(drop=True), extra_cols
 
 
 def content_sha256(df: pd.DataFrame) -> pd.Series:

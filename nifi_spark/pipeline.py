@@ -10,31 +10,39 @@ One NiFi session-commit == one micro-batch here (SURVEY.md §3.1 mapping):
         same over the poison rows (the DROP record and quarantine count),
         the ledger checksum's partial sums, the schema_change rows and
         the buckets the good data rows hash to: the merge's dirty set
-        when the batch has no DDL sub-batch (a DDL batch's sub-batches
-        keep the store's probe; bulk mode merges every bucket). It runs
-        only when provenance, the checksum, eager_stats, DDL scanning or
-        the quarantine needs it, so the bulk config (none of these) runs
-        the merge's jobs alone
+        (bulk mode merges every bucket). It runs only when provenance,
+        the checksum, eager_stats, DDL scanning or the quarantine needs
+        it, so the bulk config (none of these) runs the merge's jobs alone
       → poison rows append to the quarantine once, if the pass counted any
-      → split at schema_change boundaries, apply DDL serially between
-        sub-batches (NiFi sidesteps this — every processor is schema-less;
-        ConvertJSONToSQL.java:101-113 is its drift-policy ancestor); per
-        sub-batch:
-          normalize changes onto the store schema (narrow projection)
-          → SnapshotTableStore.merge — a narrow winner agg over
-            (key, lsn, op) of current∪changes does LWW per (repo,path),
-            and a 1:1 winner join fetches the full rows (map-side partial
-            combine ⇒ hot-repo skew tolerated; full-width rows never
-            cross a wide shuffle) → dirty-bucket snapshot commit (atomic)
+      → the batch's DDL commits first, in lsn order, each a metadata-only
+        schema version that records the lsn it applies from
+        (`schema_lsn`; NiFi sidesteps this — every processor is
+        schema-less; ConvertJSONToSQL.java:101-113 is its drift-policy
+        ancestor)
+      → normalize changes onto the final schema (narrow projection): each
+        event's columns come from the schema in effect at its lsn,
+        mapped by position (adds append, renames keep position), so the
+        DDL splits the batch into schema segments without splitting the
+        merge
+      → ONE SnapshotTableStore.merge — a narrow winner agg over
+        (key, lsn, op) of current∪changes does LWW per (repo,path), and
+        a 1:1 winner join fetches the full rows (map-side partial
+        combine ⇒ hot-repo skew tolerated; full-width rows never cross a
+        wide shuffle) → dirty-bucket snapshot commit (atomic). One merge
+        equals a merge per schema segment because LWW is one `max` over
+        `lww_order`, and max is associative
       → ONE provenance landing: the batch's RECEIVE, DROP, JOIN and SEND
         records as one parquet file (durable.Spool, no Spark job) — AFTER
         the table commits, like NiFi's session-commit provenance write
       → OffsetLedger.commit (checksum folded from the pass) — LAST
 
-Crash matrix (tests/test_resume.py): crash before merge ⇒ nothing happened;
-crash between merge and ledger ⇒ batch replays, `_last_lsn` LWW makes the
-replay idempotent; crash after ledger ⇒ batch never replays. Exactly-once
-final state in all three.
+Crash matrix (tests/test_resume.py; a DDL batch's crash points in
+tests/test_schema_evolution.py): crash before the DDL ⇒ nothing
+happened; crash after the DDL, before the merge ⇒ the replay skips the
+applied DDL (the `last_schema_lsn` gate) and still projects every event
+from the schema at its lsn (`schema_lsn`); crash between merge and ledger
+⇒ batch replays, `_last_lsn` LWW makes the replay idempotent; crash after
+ledger ⇒ batch never replays. Exactly-once final state in all four.
 
 Duplicate (key,lsn) re-deliveries — NiFi's DetectDuplicate concern
 (standard/DetectDuplicate.java:58-68) — are absorbed by two mechanisms:
@@ -66,12 +74,9 @@ class BatchStats:
     lsn_from: int
     lsn_to: int
     events: int = 0
-    data_events: int = 0
     schema_events: int = 0
-    upserts: int = 0
-    deletes: int = 0
     quarantined: int = 0
-    sub_batches: int = 0
+    sub_batches: int = 0  # schema segments: schema_events + 1
     table_version: int = -1
 
 
@@ -88,14 +93,12 @@ class CdcPipeline:
     # slice pass; when nothing else needs it (no provenance, checksum, DDL
     # scan or quarantine) the batch skips it and reports events = -1
     cache_slice: bool = True  # persist the batch slice (MEMORY_AND_DISK)
-    # across the slice pass, quarantine write and merges; size batches to
+    # across the slice pass, quarantine write and merge; size batches to
     # the cluster (micro-batch bound = the NiFi back-pressure analog) or
     # disable to re-scan the (column-pruned) parquet per pass
     bulk_mode: bool = False  # steady-state bulk CDC: every bucket is
     # merged as dirty, with no dirty-bucket probe or set (see
     # SnapshotTableStore.merge)
-    coalesce_ddl: bool = False  # True: apply all DDL up-front (perf mode,
-    # valid while data events never reference evolved columns)
     ddl_in_stream: bool = True  # False: the feed carries no schema_change
     # events (steady-state bulk CDC where DDL arrives out-of-band — the
     # usual Debezium topology) — no DDL scan in the slice pass, so a bulk
@@ -105,7 +108,7 @@ class CdcPipeline:
     # (with reason + batch id) instead of silently merging under a null
     # key or failing the batch — the PutSQL failure-relationship /
     # ProcessSession.penalize analog (standard/PutSQL.java:147-163,
-    # ProcessSession.java:316). Written once per batch, before the first
+    # ProcessSession.java:316). Written once per batch, before the
     # merge. Like NiFi's failure relationship the quarantine write is
     # at-least-once: a crash-replayed batch re-appends its poison rows;
     # readers dedup on (lsn) if they need exactly-once.
@@ -141,9 +144,21 @@ class CdcPipeline:
                          & (F.col("lsn") <= F.lit(lsn_to_incl)))
 
     # ---------------- change normalization ----------------
-    def _normalize_changes(self, data: DataFrame) -> DataFrame:
-        """Project raw events onto the store schema, cast to its types,
-        + (op, lsn) — a pure narrow projection, NO shuffle.
+    def _normalize_changes(self, data: DataFrame, m: dict,
+                           wm: int) -> DataFrame:
+        """Project raw events onto manifest `m`'s current schema, cast to
+        its types, + (op, lsn) — a pure narrow projection, NO shuffle.
+
+        Position i takes the slice column named at position i in the
+        schema in effect at the event's lsn (adds append and renames keep
+        position, the rule `SnapshotTableStore._normalize` applies to
+        files), or null when that schema has no position i or the slice
+        no such column. The schema starts after the watermark `wm`
+        (`schema_lsn`) cut the slice into segments, an event at a DDL's
+        own lsn falling after the DDL; a segment's schema is the highest
+        sid whose start is <= the segment's lower bound. A position whose
+        source is the same in every segment is a plain column, so a batch
+        without DDL gets the by-name projection and the same plan.
 
         LWW compaction (one winner per key by LSN) happens exactly once,
         inside ``SnapshotTableStore.merge``'s winner agg over
@@ -153,9 +168,36 @@ class CdcPipeline:
         volume per batch. Same-batch delete→re-insert and trailing-delete
         tombstones resolve in that single max-by-LSN reduce.
         """
+        starts = m.get("schema_lsn", {})
+
+        def start(sid: str) -> float:
+            return starts.get(sid, float("-inf"))
+
+        cuts = sorted({start(s) for s in m["schemas"] if start(s) > wm})
+        sids = [max(m["schemas"], key=lambda s: (start(s) <= lb, int(s)))
+                for lb in [wm, *cuts]]
+
+        def source(sid: str, i: int) -> str | None:
+            cols = m["schemas"][sid]
+            n = cols[i][0] if i < len(cols) else None
+            return n if n in data.columns else None
+
+        def val(n: str | None) -> Column:
+            return F.col(n) if n else F.lit(None)
+
+        out = []
+        for i, (c, t) in enumerate(self.store.schema_columns(m)):
+            names = [source(sid, i) for sid in sids]
+            if len(set(names)) == 1:
+                e = val(names[0])
+            else:
+                e = F.when(F.col("lsn") < cuts[0], val(names[0]).cast(t))
+                for cut, n in zip(cuts[1:], names[1:]):
+                    e = e.when(F.col("lsn") < cut, val(n).cast(t))
+                e = e.otherwise(val(names[-1]).cast(t))
+            out.append(e.cast(t).alias(c))
         return data.select(
-            *[(F.col(c) if c in data.columns else F.lit(None)).cast(t).alias(c)
-              for c, t in self.store.schema_columns()],
+            *out,
             F.when(F.col("op") == "delete", "delete").otherwise("upsert").alias("op"),
             "lsn")
 
@@ -219,8 +261,8 @@ class CdcPipeline:
                      if run_pass else [])
             stats.events = (sum(r["row_count"] for r in parts) if run_pass
                             else -1)
-            # schema-change boundaries (tiny driver-side list; NiFi's analog
-            # is per-record — we split the batch instead)
+            # the batch's schema changes (a tiny collected list; NiFi's
+            # analog is per-record — here they cut the projection)
             sc = (sorted((d for r in parts for d in r["ddl"]),
                          key=lambda d: d.lsn) if self.ddl_in_stream else [])
             stats.schema_events = len(sc)
@@ -236,31 +278,21 @@ class CdcPipeline:
                             parts, "DROP", batch_id, "quarantine", "drop_")
                 data = data.filter(~bad)
 
-            if self.coalesce_ddl:
-                for r in sc:
-                    self.store.evolve(r.sc_kind, r.sc_column, r.sc_new_name,
-                                      r.sc_dtype or "string", lsn=r.lsn)
-                sc = []
-
-            # the merge's dirty buckets: all of them in bulk mode, the
-            # pass's set for a batch with no DDL sub-batch, else the probe
+            # DDL first (a replay's already-applied DDL is a no-op), then
+            # one merge, each event projected from its lsn's schema
+            for r in sc:
+                self.store.evolve(r.sc_kind, r.sc_column, r.sc_new_name,
+                                  r.sc_dtype or "string", lsn=r.lsn)
+            stats.sub_batches = len(sc) + 1
+            # the merge's dirty buckets: all of them in bulk mode, else
+            # the pass's set, else (no pass ran) the store's probe
             if self.bulk_mode:
                 dirty = range(nb)
-            elif run_pass and not sc:
+            elif run_pass:
                 dirty = {b for r in parts for b in r["buckets"]}
             else:
                 dirty = None
-            lo = wm
-            boundaries = [r.lsn for r in sc] + [lsn_to_incl + 1]
-            for i, b in enumerate(boundaries):
-                sub = data.filter((F.col("lsn") > lo) & (F.col("lsn") < b))
-                records += self._merge(sub, batch_id, prov, dirty)
-                if i < len(sc):
-                    r = sc[i]
-                    self.store.evolve(r.sc_kind, r.sc_column, r.sc_new_name,
-                                      r.sc_dtype or "string", lsn=r.lsn)
-                lo = b - 1
-                stats.sub_batches += 1
+            records += self._merge(data, wm, batch_id, prov, dirty)
 
             stats.table_version = self.store.current_version()
             if prov:
@@ -286,12 +318,14 @@ class CdcPipeline:
          .withColumn("_batch_id", F.lit(batch_id).cast("long"))
          .write.mode("append").parquet(self.quarantine_path))
 
-    def _merge(self, sub: DataFrame, batch_id: int,
+    def _merge(self, data: DataFrame, wm: int, batch_id: int,
                prov: ProvenanceWriter | None,
                dirty: Iterable[int] | None) -> list:
-        """Merge one sub-batch into the `dirty` buckets (None: the
-        store's probe finds them); returns its JOIN and SEND records."""
-        changes = self._normalize_changes(sub)
+        """Merge the batch's data rows (lsn > `wm`) into the `dirty`
+        buckets (None: the store's probe finds them); returns its JOIN
+        and SEND records."""
+        changes = self._normalize_changes(data, self.store._load_manifest(),
+                                          wm)
         if self.dedup_deliveries:
             changes = changes.dropDuplicates(["repo", "path", "lsn"])
         records = (prov.aggregate(changes, "JOIN", batch_id, "compact")

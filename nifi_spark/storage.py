@@ -171,6 +171,14 @@ class SnapshotTableStore:
         applied schema events are skipped — name-based checks alone are
         NOT idempotent (add X → rename X→Xr, replayed, would re-add X and
         rename it into a duplicate Xr).
+
+        The manifest's `schema_lsn[sid]` records the lsn from which the
+        new schema applies: `lsn` itself, or for an out-of-band change
+        (no `lsn`) the table's `last_schema_lsn` at that moment. Schema 0
+        and any sid missing from the map apply from the start. A replay
+        projects each change event from the schema in effect at its lsn
+        (CdcPipeline), so it gives what the first run gave although the
+        batch's DDL already ran.
         """
         m = self._load_manifest()
         if lsn is not None and lsn <= m.get("last_schema_lsn", -1):
@@ -192,6 +200,8 @@ class SnapshotTableStore:
         sid = max(int(k) for k in m["schemas"]) + 1
         m["schemas"][str(sid)] = cols
         m["current_schema_id"] = sid
+        m.setdefault("schema_lsn", {})[str(sid)] = (
+            lsn if lsn is not None else m.get("last_schema_lsn", -1))
         m["version"] += 1
         if lsn is not None:
             m["last_schema_lsn"] = max(m.get("last_schema_lsn", -1), lsn)

@@ -5,9 +5,9 @@ Mirrors the reference's stateful-incremental tests
 nifi-standard-processors/src/test/java/org/apache/nifi/processors/standard/
 QueryDatabaseTableTest.java:167-250): replay deltas, assert final state.
 
-These bulk tests run with coalesce_ddl=True (one merge per batch); the
-faithful DDL-split path has its own dedicated tests in
-test_schema_evolution.py.
+The fixture log carries rare schema changes, so these tests also run
+batches that apply DDL before their one merge; evolved columns that data
+events fill are tested in test_schema_evolution.py.
 """
 
 from __future__ import annotations
@@ -42,7 +42,6 @@ def make_pipeline(spark, root, changelog_path, **kw):
     store.init()
     ledger = OffsetLedger(str(root / "ckpt"))
     prov = ProvenanceWriter(str(root / "prov"))
-    kw.setdefault("coalesce_ddl", True)
     return CdcPipeline(spark=spark, changelog_path=changelog_path,
                        store=store, ledger=ledger, provenance=prov, **kw)
 
@@ -100,7 +99,7 @@ def test_seeded_initial_table(spark, tmp_path, changelog, changelog_path):
     store.merge(spark, seed)
     ledger = OffsetLedger(str(tmp_path / "ckpt2"))
     pipe = CdcPipeline(spark=spark, changelog_path=changelog_path, store=store,
-                       ledger=ledger, coalesce_ddl=True)
+                       ledger=ledger)
     pipe.apply_until(int(changelog["lsn"].max()))
     expected, _ = oracle.replay(changelog, initial=base)
     got = pipe.final_table().toPandas()

@@ -41,7 +41,7 @@ def _pipe(spark, root, changelog_path, strategy):
     return CdcPipeline(spark=spark, changelog_path=changelog_path,
                        store=store,
                        ledger=OffsetLedger(str(root / f"ckpt_{strategy}")),
-                       coalesce_ddl=True, merge_strategy=strategy)
+                       merge_strategy=strategy)
 
 
 def _sorted(df: pd.DataFrame) -> pd.DataFrame:
@@ -102,7 +102,7 @@ def test_mor_crash_replay_converges(spark, tmp_path, changelog,
                        wm["checksum"], wm["table_version"])
     pipe2 = CdcPipeline(spark=spark, changelog_path=changelog_path,
                         store=pipe.store, ledger=pipe.ledger,
-                        coalesce_ddl=True, merge_strategy="delta")
+                        merge_strategy="delta")
     pipe2.run(bounds[1:])
     expected, _ = oracle.replay(changelog)
     got = pipe2.final_table().toPandas()
@@ -184,8 +184,7 @@ def test_mor_bytes_written_proportional_to_changes(spark, tmp_path):
         store.init()
         pipe = CdcPipeline(spark=spark, changelog_path=path, store=store,
                            ledger=OffsetLedger(str(tmp_path / f"l_{strat}")),
-                           coalesce_ddl=True, merge_strategy=strat,
-                           eager_stats=False)
+                           merge_strategy=strat, eager_stats=False)
         pipe.apply_until(bounds[0])
         vdir = os.path.join(store.root, "versions")
         before = du(vdir)

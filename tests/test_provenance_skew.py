@@ -32,7 +32,7 @@ def applied(spark, tmp_path_factory):
     store.init()
     prov = ProvenanceWriter(str(root / "prov"))
     pipe = CdcPipeline(spark, lp, store, OffsetLedger(str(root / "ck")),
-                       provenance=prov, coalesce_ddl=True)
+                       provenance=prov)
     pipe.run(fixtures.batch_bounds(log, 3))
     return spark, log, pipe, prov
 

@@ -39,7 +39,7 @@ def fresh(spark, root, changelog_path):
     store.init()
     return CdcPipeline(spark=spark, changelog_path=changelog_path, store=store,
                        ledger=OffsetLedger(str(root / "ckpt")),
-                       coalesce_ddl=True, checksum=True)
+                       checksum=True)
 
 
 def test_crash_between_commit_and_ledger_is_idempotent(spark, tmp_path,
@@ -59,8 +59,7 @@ def test_crash_between_commit_and_ledger_is_idempotent(spark, tmp_path,
     # recovery: a new pipeline instance resumes from the (stale) ledger and
     # replays batch 2, then continues to batch 3.
     pipe2 = CdcPipeline(spark=spark, changelog_path=changelog_path,
-                        store=pipe.store, ledger=pipe.ledger,
-                        coalesce_ddl=True)
+                        store=pipe.store, ledger=pipe.ledger)
     pipe2.run(bounds[1:])
 
     expected, _ = oracle.replay(changelog)
@@ -76,7 +75,7 @@ def test_crash_after_ledger_never_replays(spark, tmp_path, changelog,
     v_before = pipe.store.current_version()
     # "resume" at the same bounds: every batch is a no-op (lsn_to <= wm)
     pipe2 = CdcPipeline(spark=spark, changelog_path=changelog_path,
-                        store=pipe.store, ledger=pipe.ledger, coalesce_ddl=True)
+                        store=pipe.store, ledger=pipe.ledger)
     stats = pipe2.run(bounds)
     assert all(s.events == 0 for s in stats)
     assert pipe.store.current_version() == v_before  # no new snapshots
@@ -90,8 +89,7 @@ def test_kill_restart_equals_single_shot(spark, tmp_path, changelog,
     pipe = fresh(spark, root_a, changelog_path)
     for b in bounds:  # new pipeline object per batch = restart
         CdcPipeline(spark=spark, changelog_path=changelog_path,
-                    store=pipe.store, ledger=pipe.ledger,
-                    coalesce_ddl=True).apply_until(b)
+                    store=pipe.store, ledger=pipe.ledger).apply_until(b)
 
     root_b = tmp_path / "b"
     single = fresh(spark, root_b, changelog_path)

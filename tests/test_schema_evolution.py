@@ -1,15 +1,20 @@
-"""Schema evolution: DDL-split batches, add/rename, drift policies.
+"""Schema evolution: DDL inside batches, add/rename, drift policies.
 
 NiFi analog: ConvertJSONToSQL's unmatched-field/column policies
-(standard/ConvertJSONToSQL.java:101-113,156-166). The faithful mid-batch
-DDL split (apply data sub-batch → ALTER → continue) is exercised here with
-a hand-crafted changelog.
+(standard/ConvertJSONToSQL.java:101-113,156-166). A batch commits its
+DDL first and then merges once, each event projected from the schema in
+effect at its lsn; hand-crafted changelogs whose data events fill the
+evolved columns check that against `oracle.replay`, across batch cuts
+and crash-replays.
 """
 
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from nifi_spark import fixtures, oracle
@@ -55,7 +60,7 @@ def test_mid_batch_ddl_split_faithful(spark, tmp_path, crafted):
     store.init()
     pipe = CdcPipeline(spark=spark, changelog_path=path, store=store,
                        ledger=OffsetLedger(str(tmp_path / "c")),
-                       coalesce_ddl=False, checksum=False)
+                       checksum=False)
     stats = pipe.apply_until(8)
     assert stats.schema_events == 3
     assert stats.sub_batches == 4  # 3 DDL boundaries → 4 data sub-batches
@@ -72,17 +77,166 @@ def test_mid_batch_ddl_split_faithful(spark, tmp_path, crafted):
     assert got.set_index("path").loc["a.py", "commit"] == "c4"
 
 
-def test_coalesced_ddl_same_final_state(spark, tmp_path, crafted):
-    cl, path = crafted
-    store = SnapshotTableStore(str(tmp_path / "t2"), n_buckets=2)
-    store.init()
-    pipe = CdcPipeline(spark=spark, changelog_path=path, store=store,
-                       ledger=OffsetLedger(str(tmp_path / "c2")),
-                       coalesce_ddl=True, checksum=False)
-    pipe.apply_until(8)
-    expected, _ = oracle.replay(cl)
-    got = pipe.final_table().toPandas()
-    oracle.assert_equivalent(got[expected.columns.tolist()], expected)
+def test_coalesced_ddl_same_final_state(spark, tmp_path, valued):
+    """All DDL in one batch gives the table that a cut before every DDL
+    gives, evolved columns included."""
+    cl, path = valued
+    ddl = cl.loc[cl["op"] == "schema_change", "lsn"].tolist()
+    one = _run(spark, tmp_path / "one", path, [8])
+    cut = _run(spark, tmp_path / "cut", path, [d - 1 for d in ddl] + [8])
+    assert one == cut == _expected(cl)
+
+
+# ------------- evolved columns that data events fill, under replay -------------
+
+def _write_log(cl: pd.DataFrame, path: str) -> None:
+    """The changelog as parquet, any column besides the fixture schema's
+    a string column."""
+    schema = pa.schema(
+        [("lsn", pa.int64()), ("ts", pa.timestamp("us"))]
+        + [(c, pa.string()) for c in cl.columns if c not in ("lsn", "ts")])
+    pq.write_table(pa.Table.from_pandas(cl, schema=schema,
+                                        preserve_index=False), path)
+
+
+@pytest.fixture()
+def valued(tmp_path, crafted):
+    """The crafted log with values in the evolved columns, also where an
+    event predates its column or its column was renamed away."""
+    cl = crafted[0].copy()
+    vals = {0: ("s0", None, "l0"), 1: (None, None, "l1"),
+            3: ("s3", "g3", "l3"), 6: ("s6", "g6", "l6"),
+            8: ("s8", "g8", "l8")}
+    for i, c in enumerate(("stars", "stargazers", "license")):
+        cl[c] = [vals.get(lsn, (None,) * 3)[i] for lsn in cl["lsn"]]
+    path = str(tmp_path / "valued.parquet")
+    _write_log(cl, path)
+    return cl, path
+
+
+class _Crash(Exception):
+    pass
+
+
+def _crash_at(pipe: CdcPipeline, point: str, extras: list[str]) -> None:
+    """Make the pipeline's next batch crash. 'ledger': after the table
+    commit, in place of the ledger commit. 'merge': in the first merge
+    that starts once the table's evolved columns are `extras`, i.e.
+    after the batch's last DDL."""
+    if point == "ledger":
+        def commit(*a, **kw):
+            raise _Crash()
+        pipe.ledger.commit = commit
+        return
+    store, merge = pipe.store, pipe.store.merge
+
+    def crashing_merge(*a, **kw):
+        if [n for n, _ in store.schema_columns()][5:] == extras:
+            raise _Crash()
+        return merge(*a, **kw)
+    store.merge = crashing_merge
+
+
+def _run(spark, root, path, bounds, crash=None) -> dict:
+    """Apply `bounds` with a fresh store; `crash` = (point, i) crashes
+    batch i (see `_crash_at`) and resumes it with a fresh pipeline over
+    the same table and ledger. Returns `_table` of the final table."""
+    def pipeline():
+        return CdcPipeline(spark, path, SnapshotTableStore(str(root / "t")),
+                           OffsetLedger(str(root / "l")))
+    SnapshotTableStore(str(root / "t")).init()
+    pipe = pipeline()
+    for i, b in enumerate(bounds):
+        if crash and crash[1] == i:
+            log = pd.read_parquet(path)
+            _crash_at(pipe, crash[0], oracle.replay(log, max_lsn=b)[1])
+            with pytest.raises(_Crash):
+                pipe.apply_until(b)
+            pipe = pipeline()
+        pipe.apply_until(b)
+    return _table(pipe.final_table().toPandas())
+
+
+def _table(df: pd.DataFrame) -> dict:
+    """Columns and rows by key, nulls as None, for exact comparison."""
+    rows = {(r[0], r[1]): tuple(None if pd.isna(v) else v for v in r)
+            for r in df.itertuples(index=False)}
+    return {"columns": list(df.columns), "rows": rows}
+
+
+def _expected(cl: pd.DataFrame) -> dict:
+    return _table(oracle.replay(cl)[0])
+
+
+@pytest.mark.parametrize("point", ["ledger", "merge"])
+def test_crash_replay_projects_each_event_from_its_schema(
+        spark, tmp_path, valued, point):
+    """A DDL batch crashed after its table commit, or after its last DDL
+    but before its merge, resumes to the uncrashed table: the replay
+    skips the applied DDL, yet b.py (inserted at lsn 6, before
+    `add_column license` at 7) keeps license null."""
+    cl, path = valued
+    want = _run(spark, tmp_path / "clean", path, [8])
+    assert want == _expected(cl)
+    assert want["rows"][("o/r1", "b.py")][5:] == ("g6", None)
+    assert want["rows"][("o/r1", "a.py")][5:] == ("g8", "l8")
+    assert _run(spark, tmp_path / "crashed", path, [8], (point, 0)) == want
+
+
+_EVENTS = st.lists(
+    st.tuples(st.sampled_from(["add", "rename", "upsert", "upsert",
+                               "delete"]),
+              st.integers(0, 7), st.integers(0, 255)),
+    min_size=3, max_size=20)
+
+
+def _log(events) -> pd.DataFrame:
+    """A changelog from (kind, k, bits) draws: DDL adds a fresh column
+    `cN` or renames an evolved one to a fresh name; a data event upserts
+    or deletes key k % 3 and fills column j of every column name the log
+    ever uses when bit j % 8 of `bits` is set."""
+    extras, names, rows = [], [], []
+    for lsn, (kind, k, bits) in enumerate(events):
+        if kind in ("add", "rename"):
+            new = f"c{len(names)}"
+            names.append(new)
+            if kind == "rename" and extras:
+                old = extras[k % len(extras)]
+                extras[extras.index(old)] = new
+                sc = ("rename_column", old, new, "string")
+            else:
+                extras.append(new)
+                sc = ("add_column", new, None, "string")
+            rows.append((_row(lsn, "schema_change", sc=sc), 0))
+        else:
+            op = "delete" if kind == "delete" else "update"
+            rows.append((_row(lsn, op, "o/r", f"k{k % 3}", f"c{lsn}", "py",
+                              f"v{lsn}"), bits))
+    return pd.DataFrame([
+        {**r, **{n: f"{n}@{r['lsn']}" if bits >> (j % 8) & 1 else None
+                 for j, n in enumerate(names)}}
+        for r, bits in rows])
+
+
+@settings(deadline=None, max_examples=8,
+          suppress_health_check=list(HealthCheck))
+@given(_EVENTS, st.sets(st.integers(0, 19)),
+       st.one_of(st.none(), st.tuples(st.sampled_from(["ledger", "merge"]),
+                                      st.integers(0, 20))))
+def test_any_cuts_and_crash_equal_the_oracle(spark, tmp_path_factory,
+                                             events, cuts, crash):
+    """Random DDL kinds and positions, data that fills evolved columns,
+    deletes and re-inserts across DDL, random batch cuts and an optional
+    crash-replay of one batch: the table equals `oracle.replay`."""
+    cl = _log(events)
+    root = tmp_path_factory.mktemp("prop")
+    path = str(root / "log.parquet")
+    _write_log(cl, path)
+    last = len(events) - 1
+    bounds = sorted(c for c in cuts if c < last) + [last]
+    if crash:
+        crash = (crash[0], crash[1] % len(bounds))
+    assert _run(spark, root, path, bounds, crash) == _expected(cl)
 
 
 def test_evolution_is_metadata_only(spark, tmp_path, crafted):
@@ -92,7 +246,7 @@ def test_evolution_is_metadata_only(spark, tmp_path, crafted):
     store.init()
     pipe = CdcPipeline(spark=spark, changelog_path=path, store=store,
                        ledger=OffsetLedger(str(tmp_path / "c3")),
-                       coalesce_ddl=False, checksum=False)
+                       checksum=False)
     pipe.apply_until(3)  # insert, insert, add_column, update
     v = store.current_version()
     store.evolve("add_column", "homepage", None, "string")

@@ -112,12 +112,10 @@ def test_one_pass_batch_matches_the_separate_queries(spark, tmp_path):
     assert sum(r.row_count for r in by["DROP"]) == st.quarantined == len(q)
     assert (min(r.lsn_min for r in by["DROP"]),
             max(r.lsn_max for r in by["DROP"])) == (8, 18)
-    # JOIN: each sub-batch's deduplicated good rows, in apply order
-    joins = [0, 0, 0]
-    for r in by["JOIN"]:
-        joins[(r.lsn_min > 10) + (r.lsn_min > 14)] += r.row_count
-    assert joins == [3, 2, 3]
-    assert len(by["SEND"]) == 3
+    # JOIN: the deduplicated good rows of the batch's one merge (3, 2
+    # and 3 in its three schema segments); one SEND for that merge
+    assert sum(r.row_count for r in by["JOIN"]) == 8
+    assert len(by["SEND"]) == 1
     assert recs[0].event_type == "RECEIVE"
 
 
@@ -308,8 +306,10 @@ def test_dirty_buckets_come_from_the_slice_pass(spark, tmp_path):
 
 
 def test_empty_sub_batch_between_adjacent_ddls_commits_nothing(spark, tmp_path):
-    """A batch with DDL keeps the probe per sub-batch, so the empty one
-    between two adjacent DDLs commits no table version."""
+    """A batch with two adjacent DDLs commits them first, then runs one
+    merge over the slice pass's dirty set: no probe job, no table
+    version for the empty segment between the DDLs, and no more jobs
+    than a default-config batch without DDL."""
     rows = ([_row(i, "insert", f"r{i}", "a") for i in range(6)]
             + [_row(6 + i, "update", f"r{i}", "a") for i in range(4)]
             + [_row(10, "schema_change", None, None, "", ADD),
@@ -324,10 +324,23 @@ def test_empty_sub_batch_between_adjacent_ddls_commits_nothing(spark, tmp_path):
                        quarantine_path=str(tmp_path / "q"))
     pipe.apply_until(5)
     assert store.current_version() == 1
+    keys = spark.createDataFrame([(f"r{i}", "a") for i in range(4)],
+                                 "repo string, path string")
+    touched = {r.b for r in keys.select(bucket_expr(4).alias("b")).collect()}
     dirty_args = _record_dirty(store)
-    st = pipe.apply_until(15)
-    assert st.sub_batches == 3 and dirty_args == [None, None, None]
-    # merge (6..9), add, nothing for the empty sub-batch, rename, merge (12..15)
-    assert store.current_version() == 5 == st.table_version
-    assert store.versions() == [0, 1, 2, 3, 4, 5]
+    jobs, st = _group_jobs(spark, lambda: pipe.apply_until(15))
+    assert st.sub_batches == 3 and dirty_args == [touched]
+    tracker = spark.sparkContext.statusTracker()
+    stages = [tracker.getStageInfo(s) for j in jobs
+              for s in tracker.getJobInfo(j).stageIds]
+    assert not [s.name for s in stages
+                if s and s.name.startswith("collect at")
+                and "storage.py" in s.name]
+    assert len(jobs) <= DEFAULT_BATCH_JOBS, len(jobs)
+    # merge (0..5), then this batch: add, rename, one merge (6..15)
+    assert store.current_version() == 4 == st.table_version
+    assert store.versions() == [0, 1, 2, 3, 4]
     assert store.read(spark).columns[-1] == "extra_y"
+    final = {(r.repo, r.path): r.content for r in store.read(spark).collect()}
+    assert final == {**{(f"r{i}", "a"): f"v{12 + i}" for i in range(4)},
+                     ("r4", "a"): "v4", ("r5", "a"): "v5"}
