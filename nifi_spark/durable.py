@@ -3,11 +3,14 @@
 NiFi makes a write visible one way: PutHDFS writes a hidden dot-prefixed
 temp file and renames it into place, and the FlowFile repository's WAL
 update is the session-commit point (StandardProcessSession.java:361-370).
-Here every manifest, VERSION pointer, ledger entry, source state file
-and spool batch goes through `atomic_write` or `Spool.land`: the bytes
-land in a hidden temp file, are fsynced, renamed over the target, and
-the directory is fsynced. A crash leaves the old file or the new one,
-never a torn one.
+Here every table manifest, ledger entry, source state file and spool
+batch goes through `atomic_write` or `Spool.land`: the bytes land in a
+hidden temp file of this writer's own, are fsynced, renamed over the
+target, and the directory is fsynced. A crash leaves the old file or the
+new one, never a torn one. An `exclusive` write hard-links the temp to
+the target instead, which fails if the target exists: a put-if-absent
+(the Delta Lake log-entry commit), so of two writers of one table
+version the second raises `CommitConflict`.
 
 Temp names are `_`-prefixed. Spark's file index (batch and streaming)
 skips `_` and `.` names, so a temp file stranded in a spool directory
@@ -27,11 +30,16 @@ from __future__ import annotations
 import os
 import re
 import shutil
+import uuid
 from contextlib import contextmanager
 
 _BATCH = re.compile(r"batch_(\d{8})\.parquet$")
-# also sweeps the visible `batch_N.parquet.tmp` name older spools used
-_STALE = re.compile(r"_?batch_\d{8}\.parquet\.tmp$")
+# also sweeps the temp names older spools used (no token, or no `_`)
+_STALE = re.compile(r"_?batch_\d{8}\.parquet(\.[0-9a-f]+)?\.tmp$")
+
+
+class CommitConflict(FileExistsError):
+    """An exclusive write found its target there: another writer won."""
 
 
 def _fsync_dir(d: str) -> None:
@@ -43,22 +51,33 @@ def _fsync_dir(d: str) -> None:
 
 
 @contextmanager
-def _staged(path: str):
-    """Yield a binary file for a hidden temp next to `path`; on clean
-    exit fsync it, rename it over `path` and fsync the directory."""
+def _staged(path: str, exclusive: bool = False):
+    """Yield a binary file for a hidden temp next to `path`, named for
+    this writer alone; on clean exit fsync it, rename it over `path`
+    (`exclusive`: link it to `path`, raising CommitConflict if `path`
+    exists, and remove it) and fsync the directory."""
     d, name = os.path.split(path)
-    tmp = os.path.join(d, f"_{name}.tmp")
+    tmp = os.path.join(d, f"_{name}.{uuid.uuid4().hex}.tmp")
     with open(tmp, "wb") as f:
         yield f
         f.flush()
         os.fsync(f.fileno())
-    os.replace(tmp, path)
+    if exclusive:
+        try:
+            os.link(tmp, path)
+        except FileExistsError:
+            raise CommitConflict(f"{path} exists") from None
+        finally:
+            os.remove(tmp)
+    else:
+        os.replace(tmp, path)
     _fsync_dir(d)
 
 
-def atomic_write(path: str, text: str) -> None:
-    """Replace `path` with `text` atomically and durably."""
-    with _staged(path) as f:
+def atomic_write(path: str, text: str, exclusive: bool = False) -> None:
+    """Replace `path` with `text` atomically and durably; `exclusive`
+    creates it instead, raising CommitConflict if it exists."""
+    with _staged(path, exclusive) as f:
         f.write(text.encode())
 
 

@@ -80,7 +80,8 @@ def content_sha256(df: pd.DataFrame) -> pd.Series:
 
 
 def assert_equivalent(engine_df: pd.DataFrame, oracle_df: pd.DataFrame) -> None:
-    """Per-row equality on (repo,path): sha256(content), commit, lang, extras."""
+    """Per-row equality on (repo,path): sha256(content), commit, lang and
+    every evolved column, a null (None, NaN, NA) equal to any other."""
     e = engine_df.sort_values(["repo", "path"]).reset_index(drop=True)
     o = oracle_df.sort_values(["repo", "path"]).reset_index(drop=True)
     assert list(e.columns) == list(o.columns), (list(e.columns), list(o.columns))
@@ -92,3 +93,7 @@ def assert_equivalent(engine_df: pd.DataFrame, oracle_df: pd.DataFrame) -> None:
     eh, oh = content_sha256(e), content_sha256(o)
     mism = (eh != oh)
     assert not mism.any(), e.loc[mism, ["repo", "path"]].head()
+    for c in e.columns[len(BASE_COLS):]:
+        ev, ov = ([None if pd.isna(v) else v for v in df[c]] for df in (e, o))
+        bad = [r for r in zip(e["repo"], e["path"], ev, ov) if r[2] != r[3]]
+        assert not bad, (c, bad[:5])

@@ -14,11 +14,11 @@ One NiFi session-commit == one micro-batch here (SURVEY.md §3.1 mapping):
         the checksum, eager_stats, DDL scanning or the quarantine needs
         it, so the bulk config (none of these) runs the merge's jobs alone
       → poison rows append to the quarantine once, if the pass counted any
-      → the batch's DDL commits first, in lsn order, each a metadata-only
-        schema version that records the lsn it applies from
+      → the batch's DDL edits the loaded manifest, in lsn order, each
+        change a schema that records the lsn it applies from
         (`schema_lsn`; NiFi sidesteps this — every processor is
         schema-less; ConvertJSONToSQL.java:101-113 is its drift-policy
-        ancestor)
+        ancestor); it commits with the merge
       → normalize changes onto the final schema (narrow projection): each
         event's columns come from the schema in effect at its lsn,
         mapped by position (adds append, renames keep position), so the
@@ -28,21 +28,21 @@ One NiFi session-commit == one micro-batch here (SURVEY.md §3.1 mapping):
         (key, lsn, op) of current∪changes does LWW per (repo,path), and
         a 1:1 winner join fetches the full rows (map-side partial
         combine ⇒ hot-repo skew tolerated; full-width rows never cross a
-        wide shuffle) → dirty-bucket snapshot commit (atomic). One merge
-        equals a merge per schema segment because LWW is one `max` over
-        `lww_order`, and max is associative
+        wide shuffle) → dirty-bucket snapshot commit (atomic), the DDL
+        in the same version. One merge equals a merge per schema segment
+        because LWW is one `max` over `lww_order`, and max is associative
       → ONE provenance landing: the batch's RECEIVE, DROP, JOIN and SEND
         records as one parquet file (durable.Spool, no Spark job) — AFTER
         the table commits, like NiFi's session-commit provenance write
       → OffsetLedger.commit (checksum folded from the pass) — LAST
 
 Crash matrix (tests/test_resume.py; a DDL batch's crash points in
-tests/test_schema_evolution.py): crash before the DDL ⇒ nothing
-happened; crash after the DDL, before the merge ⇒ the replay skips the
-applied DDL (the `last_schema_lsn` gate) and still projects every event
-from the schema at its lsn (`schema_lsn`); crash between merge and ledger
-⇒ batch replays, `_last_lsn` LWW makes the replay idempotent; crash after
-ledger ⇒ batch never replays. Exactly-once final state in all four.
+tests/test_schema_evolution.py, tests/test_commit.py): crash before the
+table commit ⇒ nothing happened, DDL included; crash between it and the
+ledger ⇒ batch replays: `_last_lsn` LWW makes it idempotent, the
+`last_schema_lsn` gate skips the applied DDL, and each event is still
+projected from the schema at its lsn (`schema_lsn`); crash after ledger
+⇒ batch never replays. Exactly-once final state in all three.
 
 Duplicate (key,lsn) re-deliveries — NiFi's DetectDuplicate concern
 (standard/DetectDuplicate.java:58-68) — are absorbed by two mechanisms:
@@ -65,7 +65,7 @@ from nifi_spark.ledger import slice_checksum  # noqa: F401 — kept importable
 from nifi_spark.provenance import (ProvenanceWriter, content_size,
                                    count_record, partition_aggs,
                                    partition_records)
-from nifi_spark.storage import SnapshotTableStore, bucket_expr
+from nifi_spark.storage import SnapshotTableStore, bucket_expr, evolve_schema
 
 
 @dataclass
@@ -255,7 +255,8 @@ class CdcPipeline:
                    if self.quarantine_path else None)
             run_pass = bool(prov or self.checksum or self.eager_stats
                             or self.ddl_in_stream or bad is not None)
-            nb = self.store._load_manifest()["n_buckets"]
+            m = self.store._load_manifest()
+            nb = m["n_buckets"]
             parts = (self._slice_pass(sl, ddl, bad,
                                       None if self.bulk_mode else nb)
                      if run_pass else [])
@@ -278,11 +279,11 @@ class CdcPipeline:
                             parts, "DROP", batch_id, "quarantine", "drop_")
                 data = data.filter(~bad)
 
-            # DDL first (a replay's already-applied DDL is a no-op), then
+            # the DDL edits `m` (a replay's is a no-op) and commits with the
             # one merge, each event projected from its lsn's schema
             for r in sc:
-                self.store.evolve(r.sc_kind, r.sc_column, r.sc_new_name,
-                                  r.sc_dtype or "string", lsn=r.lsn)
+                evolve_schema(m, r.sc_kind, r.sc_column, r.sc_new_name,
+                              r.sc_dtype or "string", r.lsn)
             stats.sub_batches = len(sc) + 1
             # the merge's dirty buckets: all of them in bulk mode, else
             # the pass's set, else (no pass ran) the store's probe
@@ -292,7 +293,7 @@ class CdcPipeline:
                 dirty = {b for r in parts for b in r["buckets"]}
             else:
                 dirty = None
-            records += self._merge(data, wm, batch_id, prov, dirty)
+            records += self._merge(data, m, wm, batch_id, prov, dirty)
 
             stats.table_version = self.store.current_version()
             if prov:
@@ -318,20 +319,19 @@ class CdcPipeline:
          .withColumn("_batch_id", F.lit(batch_id).cast("long"))
          .write.mode("append").parquet(self.quarantine_path))
 
-    def _merge(self, data: DataFrame, wm: int, batch_id: int,
+    def _merge(self, data: DataFrame, m: dict, wm: int, batch_id: int,
                prov: ProvenanceWriter | None,
                dirty: Iterable[int] | None) -> list:
         """Merge the batch's data rows (lsn > `wm`) into the `dirty`
-        buckets (None: the store's probe finds them); returns its JOIN
-        and SEND records."""
-        changes = self._normalize_changes(data, self.store._load_manifest(),
-                                          wm)
+        buckets (None: the store's probe finds them) under manifest `m`,
+        with `m`'s edits; returns its JOIN and SEND records."""
+        changes = self._normalize_changes(data, m, wm)
         if self.dedup_deliveries:
             changes = changes.dropDuplicates(["repo", "path", "lsn"])
         records = (prov.aggregate(changes, "JOIN", batch_id, "compact")
                    if prov else [])
-        res = self.store.merge(self.spark, changes,
-                               strategy=self.merge_strategy, dirty=dirty)
+        res = self.store.merge(self.spark, changes, strategy=self.merge_strategy,
+                               dirty=dirty, base=m)
         if res["dirty_buckets"] and prov:
             records.append(count_record("SEND", batch_id, "merge",
                                         len(res["dirty_buckets"])))

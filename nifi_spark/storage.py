@@ -3,12 +3,12 @@
 The sandbox has no Iceberg catalog, so the engine targets a clean storage
 seam with the same semantics an Iceberg `MERGE INTO` would give:
 
-* **Snapshot isolation + atomic commit**: every merge writes a new version
-  directory plus a JSON manifest; the commit point is a single
-  `durable.atomic_write` of the VERSION pointer (NiFi analog: the
-  FlowFile-repo WAL update is the session-commit atomicity point,
-  StandardProcessSession.java:361-370; here the pointer swap plays that
-  role).
+* **Snapshot isolation + atomic commit**: a write lands in a data dir of
+  its own attempt; the commit point is the exclusive create of the next
+  `manifests/v{N}.json` (put-if-absent, as Delta Lake commits a log
+  entry), and the newest manifest is the current version. Of two writers
+  of one version the second raises `CommitConflict` (NiFi analog: the
+  FlowFile-repo WAL update, StandardProcessSession.java:361-370).
 * **Hash-bucketed layout**: rows live in `bucket = pmod(xxhash64(repo,path),
   n_buckets)` partitions. A merge only reads and rewrites *dirty* buckets —
   cost scales with the change set, not the table. At 100 TB you'd raise
@@ -17,7 +17,7 @@ seam with the same semantics an Iceberg `MERGE INTO` would give:
 * **Schema evolution without rewrites**: manifests carry numbered schemas;
   files written under an old schema are mapped positionally (append-only
   adds + in-place renames ⇒ position is a stable field id, the same trick
-  as Iceberg field-ids). add/rename are metadata-only commits.
+  as Iceberg field-ids). add/rename rewrite no data file.
 * **LWW merge with `_last_lsn`**: every stored row remembers the LSN that
   produced it, so replaying a batch after a crash between table-commit and
   ledger-write is idempotent (exactly-once end state; upgrades NiFi's
@@ -36,11 +36,12 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 from collections.abc import Iterable
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from .durable import atomic_write
+from .durable import CommitConflict, atomic_write
 
 _BASE = [("repo", "string"), ("path", "string"), ("commit", "string"),
          ("lang", "string"), ("content", "string")]
@@ -104,6 +105,61 @@ def lww_winners(rows: DataFrame) -> DataFrame:
                     F.shiftright("_w", 1).bitwiseAND(1).alias("_src")))
 
 
+def evolve_schema(m: dict, kind: str, column: str, new_name: str | None = None,
+                  dtype: str = "string", lsn: int | None = None) -> bool:
+    """Apply one schema change, add_column | rename_column, to manifest
+    `m` in place; False for a replay that changes nothing.
+
+    Given `lsn` (pipeline-driven DDL), a replay of an applied schema
+    event is skipped: name checks alone are NOT idempotent (add X →
+    rename X→Xr, replayed, would re-add X and rename it into a second
+    Xr). A rename onto a name the schema already has raises.
+
+    `schema_lsn[sid]` records the lsn the new schema applies from:
+    `lsn`, or out of band the table's `last_schema_lsn` then. Schema 0
+    and sids missing from the map apply from the start. CdcPipeline
+    projects each event from the schema in effect at its lsn, so a
+    replay gives what the first run gave although its DDL already ran.
+    """
+    if lsn is not None and lsn <= m.get("last_schema_lsn", -1):
+        return False  # crash-replay of an already-applied schema event
+    cols = [list(c) for c in m["schemas"][str(m["current_schema_id"])]]
+    names = [c[0] for c in cols]
+    if kind == "add_column":
+        if column in names:
+            return False  # idempotent replay
+        cols.append([column, dtype])
+    elif kind == "rename_column":
+        if column not in names:
+            if new_name in names:
+                return False  # replay after rename already applied
+            raise KeyError(f"rename_column: no column {column!r}")
+        if new_name in names:
+            raise KeyError(f"rename_column: {new_name!r} already exists")
+        cols[names.index(column)][0] = new_name
+    else:
+        raise ValueError(f"unknown schema change kind {kind!r}")
+    sid = max(int(k) for k in m["schemas"]) + 1
+    m["schemas"][str(sid)] = cols
+    m["current_schema_id"] = sid
+    # past the gate, `lsn` is newer than every applied schema event
+    m.setdefault("schema_lsn", {})[str(sid)] = m["last_schema_lsn"] = (
+        m.get("last_schema_lsn", -1) if lsn is None else lsn)
+    return True
+
+
+def _place_base(targets: list[int]):
+    """A `_publish` placement: each target bucket's written file becomes
+    its base file (deltas dropped); a target with no rows left goes."""
+    def place(m: dict, written: dict[int, str]) -> None:
+        for b in targets:
+            m["buckets"].pop(str(b), None)
+            if b in written:
+                m["buckets"][str(b)] = {"path": written[b],
+                                        "schema_id": m["current_schema_id"]}
+    return place
+
+
 class SnapshotTableStore:
     """Versioned parquet table with manifest-tracked buckets and schemas."""
 
@@ -116,19 +172,13 @@ class SnapshotTableStore:
         # version only ever fills its own dict
         self._plans: tuple = (None, {})
 
-    # ---------------- manifest / pointer plumbing ----------------
-    def _ptr_path(self) -> str:
-        return os.path.join(self.root, "VERSION")
-
+    # ---------------- manifests / the commit ----------------
     def _manifest_path(self, version: int) -> str:
         return os.path.join(self.root, "manifests", f"v{version:06d}.json")
 
     def current_version(self) -> int:
-        try:
-            with open(self._ptr_path()) as f:
-                return int(f.read().strip())
-        except FileNotFoundError:
-            return -1
+        """The newest manifest's version; -1 for no table."""
+        return max(self.versions(), default=-1)
 
     def _load_manifest(self, version: int | None = None) -> dict:
         v = self.current_version() if version is None else version
@@ -137,26 +187,38 @@ class SnapshotTableStore:
         with open(self._manifest_path(v)) as f:
             return json.load(f)
 
-    def _commit(self, manifest: dict) -> int:
-        """Write manifest, then atomically swap the VERSION pointer."""
-        v = manifest["version"]
-        os.makedirs(os.path.join(self.root, "manifests"), exist_ok=True)
-        atomic_write(self._manifest_path(v), json.dumps(manifest))
-        atomic_write(self._ptr_path(), str(v))  # ← the atomic commit point
+    def _publish(self, m: dict, df: DataFrame | None = None, parts: int = 0,
+                 place=None) -> int:
+        """Commit `m` as the next version, the only code that makes one.
+        Rows `df` (`_file_columns` + `bucket`) are first written, one
+        file per bucket over `parts` tasks, to this attempt's own data
+        dir, and `place(m, {bucket: rel_path})` puts them in `m`. The
+        exclusive manifest create is the commit: a writer whose `m` is
+        stale raises CommitConflict, its dir left to expire_snapshots."""
+        v = m["version"] = m["version"] + 1
+        if df is not None:
+            rel = os.path.join("versions", f"v{v:06d}-{uuid.uuid4().hex[:12]}")
+            out = os.path.join(self.root, rel)
+            df.repartition(parts, "bucket").write.partitionBy("bucket").parquet(out)
+            place(m, {int(d.split("=")[1]): os.path.join(rel, d)
+                      for d in os.listdir(out) if d.startswith("bucket=")})
+        m["committed_at"] = time.time()
+        atomic_write(self._manifest_path(v), json.dumps(m), exclusive=True)
         return v
 
     def init(self, extra_schema: list[tuple[str, str]] | None = None) -> None:
-        os.makedirs(self.root, exist_ok=True)
-        schema = _BASE + list(extra_schema or [])
-        manifest = {
-            "version": 0, "n_buckets": self.n_buckets,
-            "schemas": {"0": [list(c) for c in schema]},
+        """Create the table at v0; raises CommitConflict if it exists."""
+        if self.versions():
+            raise CommitConflict(f"table at {self.root} already exists")
+        os.makedirs(os.path.join(self.root, "manifests"), exist_ok=True)
+        self._publish({
+            "version": -1, "n_buckets": self.n_buckets,
+            "schemas": {"0": [list(c) for c in
+                              _BASE + list(extra_schema or [])]},
             "current_schema_id": 0,
             "buckets": {},  # bucket -> {path, schema_id}; absent = empty
             "last_schema_lsn": -1,  # idempotent DDL replay gate
-            "committed_at": time.time(),
-        }
-        self._commit(manifest)
+        })
 
     # ---------------- schema ----------------
     def schema_columns(self, manifest: dict | None = None) -> list[tuple[str, str]]:
@@ -165,48 +227,12 @@ class SnapshotTableStore:
 
     def evolve(self, kind: str, column: str, new_name: str | None = None,
                dtype: str = "string", lsn: int | None = None) -> None:
-        """Metadata-only schema commit: add_column | rename_column.
-
-        When `lsn` is given (pipeline-driven DDL), replays of already-
-        applied schema events are skipped — name-based checks alone are
-        NOT idempotent (add X → rename X→Xr, replayed, would re-add X and
-        rename it into a duplicate Xr).
-
-        The manifest's `schema_lsn[sid]` records the lsn from which the
-        new schema applies: `lsn` itself, or for an out-of-band change
-        (no `lsn`) the table's `last_schema_lsn` at that moment. Schema 0
-        and any sid missing from the map apply from the start. A replay
-        projects each change event from the schema in effect at its lsn
-        (CdcPipeline), so it gives what the first run gave although the
-        batch's DDL already ran.
-        """
+        """Out-of-band schema change: `evolve_schema` on the current
+        manifest, committed as a metadata-only version unless it changed
+        nothing. CdcPipeline commits a batch's DDL with its merge."""
         m = self._load_manifest()
-        if lsn is not None and lsn <= m.get("last_schema_lsn", -1):
-            return  # crash-replay of an already-applied schema event
-        cols = [list(c) for c in m["schemas"][str(m["current_schema_id"])]]
-        names = [c[0] for c in cols]
-        if kind == "add_column":
-            if column in names:
-                return  # idempotent replay
-            cols.append([column, dtype])
-        elif kind == "rename_column":
-            if column not in names:
-                if new_name in names:
-                    return  # replay after rename already applied
-                raise KeyError(f"rename_column: no column {column!r}")
-            cols[names.index(column)][0] = new_name
-        else:
-            raise ValueError(f"unknown schema change kind {kind!r}")
-        sid = max(int(k) for k in m["schemas"]) + 1
-        m["schemas"][str(sid)] = cols
-        m["current_schema_id"] = sid
-        m.setdefault("schema_lsn", {})[str(sid)] = (
-            lsn if lsn is not None else m.get("last_schema_lsn", -1))
-        m["version"] += 1
-        if lsn is not None:
-            m["last_schema_lsn"] = max(m.get("last_schema_lsn", -1), lsn)
-        m["committed_at"] = time.time()
-        self._commit(m)
+        if evolve_schema(m, kind, column, new_name, dtype, lsn):
+            self._publish(m)
 
     # ---------------- read ----------------
     def _normalize(self, df: DataFrame, file_schema: list, cur: list,
@@ -239,7 +265,7 @@ class SnapshotTableStore:
         + `op string` for delta files — the writers cast to exactly
         that), so no Spark job infers a parquet footer. The built
         DataFrame is memoized per (session, version, buckets,
-        with_lsn): VERSION and the manifest are re-read on every call,
+        with_lsn): the newest manifest is found and read on every call,
         so a commit by any store instance is seen at once, and the memo
         drops every plan of another version when the version moves.
 
@@ -338,9 +364,8 @@ class SnapshotTableStore:
     def versions(self) -> list[int]:
         """Retained (readable) snapshot versions, ascending."""
         mdir = os.path.join(self.root, "manifests")
-        if not os.path.isdir(mdir):
-            return []
-        return sorted(int(f[1:-5]) for f in os.listdir(mdir)
+        names = os.listdir(mdir) if os.path.isdir(mdir) else []
+        return sorted(int(f[1:-5]) for f in names
                       if f.startswith("v") and f.endswith(".json"))
 
     def expire_snapshots(self, keep_last: int = 2) -> dict:
@@ -350,11 +375,13 @@ class SnapshotTableStore:
         PersistentProvenanceRepository.java:156-175).
 
         Keeps the newest `keep_last` manifests (always including the
-        current pointer). A version DIRECTORY is deleted only when no
+        current one). A version DIRECTORY is deleted only when no
         RETAINED manifest references any bucket inside it — buckets
         untouched for many merges legitimately live in old version dirs,
         so liveness is computed from the retained bucket maps, not from
-        version age. Metadata-only versions (schema commits) have no dir.
+        version age; that collects losing and crashed attempts too. A
+        dir newer than the current version (its `vNNNNNN` prefix) may be
+        an attempt in flight and stays.
         """
         import shutil
         cur = self.current_version()
@@ -364,11 +391,9 @@ class SnapshotTableStore:
         for v in keep:
             m = self._load_manifest(v)
             for e in m["buckets"].values():
-                if e.get("path"):
-                    # bucket path = versions/vNNNNNN/bucket=k
-                    live_dirs.add(e["path"].split(os.sep)[1])
-                for d in e.get("deltas", []):
-                    live_dirs.add(d["path"].split(os.sep)[1])
+                # a data path is versions/vNNNNNN-token/bucket=k
+                paths = [e.get("path")] + [d["path"] for d in e.get("deltas", [])]
+                live_dirs.update(p.split(os.sep)[1] for p in paths if p)
         removed_manifests, removed_dirs = [], []
         for v in vs:
             if v not in keep:
@@ -377,7 +402,7 @@ class SnapshotTableStore:
         vdir = os.path.join(self.root, "versions")
         if os.path.isdir(vdir):
             for d in os.listdir(vdir):
-                if d not in live_dirs and int(d[1:]) not in keep:
+                if d not in live_dirs and int(d[1:7]) <= cur:
                     shutil.rmtree(os.path.join(vdir, d))
                     removed_dirs.append(d)
         return {"kept_versions": sorted(keep),
@@ -398,35 +423,24 @@ class SnapshotTableStore:
         manifest carries its own bucket map); subsequent merges hash
         changes with the NEW bucket count automatically since they read
         n_buckets from the current manifest. Crash-safe like merge: the
-        manifest pointer flips only after the full write."""
+        manifest is created only after the full write."""
         if new_n_buckets < 1:
             raise ValueError("new_n_buckets must be >= 1")
         m = self._load_manifest()
-        full = (self.read(spark, with_lsn=True)
+        full = (self._plan(spark, m, None, True)
                 .withColumn("bucket", bucket_expr(new_n_buckets))
                 .select(*_file_columns(self.schema_columns(m))))
-        new_version = m["version"] + 1
-        rel = os.path.join("versions", f"v{new_version:06d}")
-        out_dir = os.path.join(self.root, rel)
-        (full.repartition(new_n_buckets, "bucket")
-             .write.partitionBy("bucket").mode("overwrite").parquet(out_dir))
-        written = {int(d.split("=")[1]) for d in os.listdir(out_dir)
-                   if d.startswith("bucket=")}
-        sid = m["current_schema_id"]
-        m["buckets"] = {str(b): {"path": os.path.join(rel, f"bucket={b}"),
-                                 "schema_id": sid}
-                        for b in sorted(written)}
-        m["n_buckets"] = new_n_buckets
-        m["version"] = new_version
-        m["committed_at"] = time.time()
-        self._commit(m)
-        return {"n_buckets": new_n_buckets, "buckets_written": len(written),
-                "version": new_version}
+        m["buckets"], m["n_buckets"] = {}, new_n_buckets
+        v = self._publish(m, full, new_n_buckets,
+                          _place_base(range(new_n_buckets)))
+        return {"n_buckets": new_n_buckets,
+                "buckets_written": len(m["buckets"]), "version": v}
 
     # ---------------- merge (the PutSQL / MERGE INTO analog) ----------------
     def merge(self, spark: SparkSession, changes: DataFrame,
               strategy: str = "argmax",
-              dirty: Iterable[int] | None = None) -> dict:
+              dirty: Iterable[int] | None = None,
+              base: dict | None = None) -> dict:
         """Apply a change set (store-schema columns + `op` ∈
         {'upsert','delete'} + `lsn`; multiple rows per key allowed — LWW
         by LSN happens here, exactly once).
@@ -474,16 +488,21 @@ class SnapshotTableStore:
         "all" anyway). It must cover every bucket a change hashes to,
         or the changes outside it may be lost. Only `None` runs the
         probe, a `distinct` over the changes' buckets (two Spark jobs);
-        an empty set commits nothing.
+        an empty set commits only `base`'s edits.
 
         Every written file carries the manifest's columns in order and
         type (`_file_columns`), whatever types the change set has.
 
-        Returns stats {dirty_buckets, rows_written, version}.
+        base: the current manifest as the caller loaded and edited it
+        (CdcPipeline applies the batch's DDL to it). The dirty buckets
+        are read and written under it, and its edits commit in the
+        merge's version, also when no bucket is dirty.
+
+        Returns {dirty_buckets, version}.
         """
         if strategy not in ("argmax", "delta"):
             raise ValueError(f"unknown merge strategy {strategy!r}")
-        m = self._load_manifest()
+        m = self._load_manifest() if base is None else base
         nb = m["n_buckets"]
 
         # No cache: the dirty-bucket probe is a column-pruned scan of just
@@ -496,12 +515,14 @@ class SnapshotTableStore:
                      chg.select("bucket").distinct().collect()]
         dirty = sorted(dirty)
         if not dirty:
-            return {"dirty_buckets": [], "rows_written": 0, "version": m["version"]}
+            if base is not None and base != self._load_manifest(m["version"]):
+                self._publish(m)  # the caller's edits commit alone
+            return {"dirty_buckets": [], "version": m["version"]}
 
         if strategy == "delta":
-            return self._merge_delta(spark, chg, dirty, m)
+            return self._merge_delta(chg, dirty, m)
 
-        current = (self.read(spark, buckets=dirty, with_lsn=True)
+        current = (self._plan(spark, m, dirty, True)
                    .withColumn("op", F.lit("upsert"))
                    .withColumnRenamed("_last_lsn", "lsn")
                    .withColumn("bucket", bucket_expr(nb))
@@ -517,31 +538,13 @@ class SnapshotTableStore:
                   .withColumnRenamed("lsn", "_last_lsn")
                   .drop("op", "_src"))
 
-        new_version = m["version"] + 1
-        rel = os.path.join("versions", f"v{new_version:06d}")
-        out_dir = os.path.join(self.root, rel)
         # one output task per dirty bucket → exactly one file per bucket dir
         # (small-file control; MergeContent bin-packing analog).
-        (winner.select(*_file_columns(self.schema_columns(m)))
-               .repartition(len(dirty), "bucket")
-               .write.partitionBy("bucket").mode("overwrite").parquet(out_dir))
+        v = self._publish(m, winner.select(*_file_columns(self.schema_columns(m))),
+                          len(dirty), _place_base(dirty))
+        return {"dirty_buckets": dirty, "version": v}
 
-        written = {int(d.split("=")[1]) for d in os.listdir(out_dir)
-                   if d.startswith("bucket=")}
-        sid = m["current_schema_id"]
-        for b in dirty:
-            if b in written:
-                m["buckets"][str(b)] = {"path": os.path.join(rel, f"bucket={b}"),
-                                        "schema_id": sid}
-            else:
-                m["buckets"].pop(str(b), None)  # bucket fully deleted
-        m["version"] = new_version
-        m["committed_at"] = time.time()
-        self._commit(m)
-        return {"dirty_buckets": dirty, "rows_written": -1, "version": new_version}
-
-    def _merge_delta(self, spark: SparkSession, chg: DataFrame,
-                     dirty: list[int], m: dict) -> dict:
+    def _merge_delta(self, chg: DataFrame, dirty: list[int], m: dict) -> dict:
         """Merge-on-read append: within-batch LWW compaction (one
         batch-sized hash-agg — multiple ops per key in the batch reduce
         to the latest; delete tombstones survive as rows, read-time LWW
@@ -558,27 +561,15 @@ class SnapshotTableStore:
                              F.col("w.op").alias("op"),
                              F.col("w.bucket").alias("bucket"),
                              "_last_lsn"))
-        new_version = m["version"] + 1
-        rel = os.path.join("versions", f"v{new_version:06d}")
-        out_dir = os.path.join(self.root, rel)
-        (compacted.select(*_file_columns(cur, "op"))
-                  .repartition(len(dirty), "bucket")
-                  .write.partitionBy("bucket").mode("overwrite")
-                  .parquet(out_dir))
-        written = {int(d.split("=")[1]) for d in os.listdir(out_dir)
-                   if d.startswith("bucket=")}
-        sid = m["current_schema_id"]
-        for b in sorted(written):
-            e = m["buckets"].setdefault(str(b),
-                                        {"path": None, "schema_id": sid})
-            e.setdefault("deltas", []).append(
-                {"path": os.path.join(rel, f"bucket={b}"),
-                 "schema_id": sid})
-        m["version"] = new_version
-        m["committed_at"] = time.time()
-        self._commit(m)
-        return {"dirty_buckets": dirty, "rows_written": -1,
-                "version": new_version, "mode": "delta"}
+
+        def place(m: dict, written: dict[int, str]) -> None:
+            sid = m["current_schema_id"]
+            for b, p in sorted(written.items()):
+                e = m["buckets"].setdefault(str(b), {"path": None, "schema_id": sid})
+                e.setdefault("deltas", []).append({"path": p, "schema_id": sid})
+        v = self._publish(m, compacted.select(*_file_columns(cur, "op")),
+                          len(dirty), place)
+        return {"dirty_buckets": dirty, "version": v}
 
     def compact(self, spark: SparkSession,
                 buckets: list[int] | None = None) -> dict:
@@ -596,27 +587,9 @@ class SnapshotTableStore:
                         and (want is None or int(b) in want))
         if not target:
             return {"compacted_buckets": [], "version": m["version"]}
-        folded = (self.read(spark, buckets=target, with_lsn=True)
+        folded = (self._plan(spark, m, target, True)
                   .withColumn("bucket", bucket_expr(nb))
                   .select(*_file_columns(self.schema_columns(m))))
-        new_version = m["version"] + 1
-        rel = os.path.join("versions", f"v{new_version:06d}")
-        out_dir = os.path.join(self.root, rel)
-        (folded.repartition(len(target), "bucket")
-               .write.partitionBy("bucket").mode("overwrite")
-               .parquet(out_dir))
-        written = {int(d.split("=")[1]) for d in os.listdir(out_dir)
-                   if d.startswith("bucket=")}
-        sid = m["current_schema_id"]
-        for b in target:
-            if b in written:
-                m["buckets"][str(b)] = {
-                    "path": os.path.join(rel, f"bucket={b}"),
-                    "schema_id": sid}
-            else:  # every row in the bucket was tombstoned away
-                m["buckets"].pop(str(b), None)
-        m["version"] = new_version
-        m["committed_at"] = time.time()
-        self._commit(m)
-        return {"compacted_buckets": target, "version": new_version}
+        v = self._publish(m, folded, len(target), _place_base(target))
+        return {"compacted_buckets": target, "version": v}
 

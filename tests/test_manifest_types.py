@@ -63,8 +63,14 @@ def test_every_writer_writes_the_manifest_types(spark, tmp_path):
                sc_column="n", sc_dtype="bigint",
                ts=pd.Timestamp("2024-01-01"))
     log = pd.concat([log, pd.DataFrame([ddl])], ignore_index=True)
+    # the events after the DDL carry `n` as an int column, under the
+    # manifest's bigint
+    log["n"] = pd.array([lsn % 7 if lsn > ADD_LSN else None
+                         for lsn in log["lsn"]], dtype="Int32")
     path = str(tmp_path / "log.parquet")
     fixtures.write_changelog_parquet(log, path)
+    t = pq.read_table(path)
+    pq.write_table(t.append_column("n", pa.array(log["n"], pa.int32())), path)
     src = spark.read.parquet(path).filter(F.col("op") != "schema_change")
 
     def changes(lo, hi, with_n=False):
@@ -73,8 +79,7 @@ def test_every_writer_writes_the_manifest_types(spark, tmp_path):
              .withColumn("op", F.when(F.col("op") == "delete", "delete")
                          .otherwise("upsert")))
         cols = ["repo", "path", "commit", "lang", "content", "op", "lsn"]
-        if with_n:  # an int column under the manifest's bigint
-            c = c.withColumn("n", (F.col("lsn") % 7).cast("int"))
+        if with_n:
             cols.insert(5, "n")
         return c.select(*cols)
 

@@ -63,14 +63,6 @@ def test_one_pass_batch_matches_the_separate_queries(spark, tmp_path):
     fixtures.write_changelog_parquet(pd.DataFrame(LOG), log)
     store = SnapshotTableStore(str(tmp_path / "tbl"), n_buckets=4)
     store.init()
-    evolved = []
-    evolve = store.evolve
-
-    def recording_evolve(kind, col, new_name, dtype, lsn=None):
-        evolved.append((kind, col, new_name, dtype, lsn))
-        return evolve(kind, col, new_name, dtype, lsn=lsn)
-
-    store.evolve = recording_evolve
     prov = ProvenanceWriter(str(tmp_path / "prov"))
     qdir = str(tmp_path / "quarantine")
     ledger = OffsetLedger(str(tmp_path / "led"))
@@ -84,7 +76,10 @@ def test_one_pass_batch_matches_the_separate_queries(spark, tmp_path):
         sl.filter(~F.col("op").eqNullSafe("schema_change")))
     assert st.events == 16 == sl.count()
     assert st.schema_events == 2 and st.sub_batches == 3
-    assert evolved == [(*ADD, 10), (*RENAME, 14)]
+    # the DDL committed in lsn order: add from lsn 10, rename from 14
+    assert store._load_manifest()["schema_lsn"] == {"1": 10, "2": 14}
+    assert [n for n, _ in store.schema_columns()] == [
+        "repo", "path", "commit", "lang", "content", "extra_y"]
     assert st.quarantined == 4
     q = spark.read.parquet(qdir).filter(F.col("_batch_id") == 1).collect()
     assert {r.lsn: r._reason for r in q} == POISON and len(q) == 4
@@ -306,10 +301,10 @@ def test_dirty_buckets_come_from_the_slice_pass(spark, tmp_path):
 
 
 def test_empty_sub_batch_between_adjacent_ddls_commits_nothing(spark, tmp_path):
-    """A batch with two adjacent DDLs commits them first, then runs one
-    merge over the slice pass's dirty set: no probe job, no table
-    version for the empty segment between the DDLs, and no more jobs
-    than a default-config batch without DDL."""
+    """A batch with two adjacent DDLs commits them with its one merge
+    over the slice pass's dirty set: no probe job, one table version
+    for the batch, and no more jobs than a default-config batch without
+    DDL."""
     rows = ([_row(i, "insert", f"r{i}", "a") for i in range(6)]
             + [_row(6 + i, "update", f"r{i}", "a") for i in range(4)]
             + [_row(10, "schema_change", None, None, "", ADD),
@@ -337,9 +332,9 @@ def test_empty_sub_batch_between_adjacent_ddls_commits_nothing(spark, tmp_path):
                 if s and s.name.startswith("collect at")
                 and "storage.py" in s.name]
     assert len(jobs) <= DEFAULT_BATCH_JOBS, len(jobs)
-    # merge (0..5), then this batch: add, rename, one merge (6..15)
-    assert store.current_version() == 4 == st.table_version
-    assert store.versions() == [0, 1, 2, 3, 4]
+    # merge (0..5), then this batch: add, rename and merge (6..15)
+    assert store.current_version() == 2 == st.table_version
+    assert store.versions() == [0, 1, 2]
     assert store.read(spark).columns[-1] == "extra_y"
     final = {(r.repo, r.path): r.content for r in store.read(spark).collect()}
     assert final == {**{(f"r{i}", "a"): f"v{12 + i}" for i in range(4)},
