@@ -2396,10 +2396,10 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_near_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup keep/drop sets: connected components (min-label
-    propagation) over the LSH candidate pairs — the step that turns
-    PAIRS into per-document keep decisions without over-deleting
-    chains."""
+    """Near-dup keep/drop sets: connected components (large-star /
+    small-star, datalib/graph.py) over the LSH candidate pairs — the
+    step that turns PAIRS into per-document keep decisions without
+    over-deleting chains."""
     from nifi_spark.datalib import near_dup_clusters
     docs = _t(spark, sf_dir, "documents")
     return near_dup_clusters(docs, "doc_id", "text", k=3, num_perm=12,

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from nifi_spark.datalib.graph import connected_components
 from nifi_spark.functions.portable_hash import (portable_hash64,
                                                 portable_hash64_py)
 
@@ -279,24 +280,17 @@ def near_dup_clusters(df: DataFrame, id_col: str, text_col: str,
                       k: int = 3, num_perm: int = 12, bands: int = 4,
                       max_bucket: int = 1000,
                       pairs: DataFrame | None = None,
-                      threshold: float | None = None,
-                      max_iters: int = 20,
-                      method: str = "label") -> DataFrame:
+                      threshold: float | None = None) -> DataFrame:
     """Connected components over near-dup candidate pairs → keep/drop
     sets: (id, cluster_id = min id in component, keep = is-canonical).
 
     The missing last step of the dedup pipeline: minhash_lsh_pairs finds
     PAIRS, but dropping one doc per pair over-deletes chains (a~b, b~c
-    must drop b and c, keep only a). Distributed min-label propagation:
-    every doc starts labeled with its own id; each round takes the min of
-    its label and its neighbors' labels (one narrow-key join + partial
-    agg per round); converges in O(component diameter) rounds — near-dup
-    components are chains/cliques of a viral doc, diameter stays small,
-    and `max_iters` bounds the pathological case. Each round
-    localCheckpoints its labels — iterative plans MUST truncate lineage
-    (persist alone leaves the logical plan growing per round and
-    re-optimization time explodes; on a real cluster with a checkpoint
-    dir, `checkpoint()` adds executor-loss resilience).
+    must drop b and c, keep only a). The components come from
+    graph.connected_components (large-star/small-star, O(log n) rounds
+    on any pair graph, raises if it does not converge); docs with no
+    pair are their own cluster. Ids may be of any orderable type, the
+    same in `df` and the pairs.
     """
     # `pairs` may come from ANY candidate generator (minhash_lsh_pairs,
     # simhash_pairs, cosine/ANN pairs renamed to id_a/id_b) — clustering
@@ -306,45 +300,13 @@ def near_dup_clusters(df: DataFrame, id_col: str, text_col: str,
         bands = lsh_band_plan(num_perm, threshold)["bands"]
     p = pairs if pairs is not None else minhash_lsh_pairs(
         df, id_col, text_col, k, num_perm, bands, max_bucket)
-    if method == "star":
-        # O(log n)-round star contraction for adversarially deep pair
-        # graphs (long chains of pairwise-similar docs) — delegate to
-        # graph.connected_components, then re-attach isolated docs.
-        from nifi_spark.datalib.graph import connected_components
-        cc = connected_components(p, "id_a", "id_b", max_iters=max_iters)
-        out = (df.select(F.col(id_col).alias("id")).distinct()
-               .join(cc.withColumnRenamed("node", "id"), "id", "left")
-               .select("id", F.coalesce("component", F.col("id"))
-                       .alias("cluster_id")))
-        return out.select(F.col("id").alias(id_col), "cluster_id",
-                          (F.col("id") == F.col("cluster_id")).alias("keep"))
-    e = p.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
-    edges = e.unionAll(e.select(F.col("b").alias("a"),
-                                F.col("a").alias("b"))).localCheckpoint()
-    labels = (df.select(F.col(id_col).alias("id")).distinct()
-              .withColumn("cluster_id", F.col("id")).localCheckpoint())
-    for _ in range(max_iters):
-        nbr = (edges.join(labels.select(F.col("id").alias("b"),
-                                        F.col("cluster_id").alias("nl")),
-                          "b")
-               .groupBy("a").agg(F.min("nl").alias("nbr_min"))
-               .withColumnRenamed("a", "id"))
-        new_labels = (labels.join(nbr, "id", "left")
-                      .select("id",
-                              F.least(F.col("cluster_id"),
-                                      F.coalesce(F.col("nbr_min"),
-                                                 F.col("cluster_id")))
-                              .alias("cluster_id"))).localCheckpoint()
-        changed = (new_labels
-                   .join(labels.select(F.col("id"),
-                                       F.col("cluster_id").alias("old")),
-                         "id")
-                   .filter(F.col("cluster_id") != F.col("old")).count())
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels.select(F.col("id").alias(id_col), "cluster_id",
-                         (F.col("id") == F.col("cluster_id")).alias("keep"))
+    cc = connected_components(p, "id_a", "id_b")
+    out = (df.select(F.col(id_col).alias("id")).distinct()
+           .join(cc.withColumnRenamed("node", "id"), "id", "left")
+           .select("id", F.coalesce("component", F.col("id"))
+                   .alias("cluster_id")))
+    return out.select(F.col("id").alias(id_col), "cluster_id",
+                      (F.col("id") == F.col("cluster_id")).alias("keep"))
 
 
 def build_dedup_index(df: DataFrame, id_col: str, text_col: str,

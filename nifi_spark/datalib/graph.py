@@ -75,14 +75,12 @@ def connected_components(edges: DataFrame, src_col: str = "src",
                          max_iters: int = 40) -> DataFrame:
     """Alternating large-star / small-star connected components
     (Kiveris et al. 2014): returns (node, component) with component =
-    min node id in the component.
+    min node id in the component. `src_col` and `dst_col` must share a
+    type; any orderable id (long, string, ...) works and keeps its type.
 
-    Why a second CC besides dedup.near_dup_clusters' min-label
-    propagation: label propagation needs O(component diameter) rounds —
-    fine for near-dup graphs (shallow cliques/chains of a viral doc),
-    quadratic-in-rounds on adversarial paths. Star contraction converges
-    in O(log n) rounds on ANY topology, so this is the scale-true choice
-    for web link graphs and follower graphs where million-hop paths are
+    Star contraction converges in O(log n) rounds on ANY topology —
+    near-dup pair graphs (shallow cliques/chains of a viral doc) as well
+    as web link graphs and follower graphs where million-hop paths are
     real. Each round is two grouped aggregations over the edge list (no
     windows, no collects); the edge list shrinks toward the star fixed
     point, and each round localCheckpoints to keep lineage flat.
@@ -93,20 +91,19 @@ def connected_components(edges: DataFrame, src_col: str = "src",
       and hi itself onto m = min(N(hi) ∪ {hi}).
 
     Both preserve connectivity and map stars to themselves; convergence
-    is detected by (count, checksum) of the canonical edge set.
+    is two consecutive rounds with the same (count, checksum) of the
+    canonical edge set, so a graph at its fixed point after round r
+    stops after round r+1. If `max_iters` rounds pass without that, it
+    raises RuntimeError — it never returns unconverged components.
 
-    Per-round action budget (the local-overhead item from the r4 review):
-    ONE localCheckpoint per round — large-star and small-star are fused
-    into a single lineage chain; the large-star intermediate feeds both
-    the small-star min-agg and its join-back through the SAME
-    hash-partition(hi) exchange, so ReuseExchange computes it once. The
-    convergence signature is probed each round once past a short
-    warm-up; the probe scans the already-materialized checkpoint so it
-    costs ~1/7 of a round — ~1.15 actions/round instead of the
-    previous 3, and the loop stops the first round after the fixed
-    point instead of overshooting to a cadence boundary."""
-    raw = edges.select(F.col(src_col).cast("long").alias("a"),
-                       F.col(dst_col).cast("long").alias("b"))
+    Per-round action budget: ONE localCheckpoint per round — large-star
+    and small-star are fused into a single lineage chain; the
+    large-star intermediate feeds both the small-star min-agg and its
+    join-back through the SAME hash-partition(hi) exchange, so
+    ReuseExchange computes it once. The convergence probe scans the
+    already-materialized checkpoint, so it costs a fraction of a
+    round."""
+    raw = edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
     # nodes is consumed exactly once (the final join-back), so it needs
     # no checkpoint and no count action — one setup action total (E)
     nodes = (raw.select(F.col("a").alias("node"))
@@ -126,14 +123,8 @@ def connected_components(edges: DataFrame, src_col: str = "src",
                        F.lit(0).cast("decimal(38,0)")).alias("h")).first()
         return (row["n"], row["h"])
 
-    # probes may start well before log2(n): rounds-to-converge is
-    # ~log2(component DIAMETER), usually far below log2(n), and a probe
-    # (one agg over the just-materialized checkpoint) costs ~1/7 of a
-    # full round — a short fixed warm-up avoids running wasted rounds
-    # past the fixed point on shallow-component graphs
-    warmup = 4
     sig = None
-    for rnd in range(max_iters):
+    for _ in range(max_iters):
         # large-star over the symmetric neighborhood
         sym = E.select(F.col("hi").alias("u"), F.col("lo").alias("v")) \
                .unionAll(E.select(F.col("lo").alias("u"),
@@ -161,11 +152,13 @@ def connected_components(edges: DataFrame, src_col: str = "src",
         hang_hi = sm.select("hi", F.col("m").alias("lo"))
         E = (hang_lo.unionAll(hang_hi)
              .distinct().localCheckpoint())
-        if rnd >= warmup:
-            new_sig = _signature(E)
-            if new_sig == sig:
-                break
-            sig = new_sig
+        new_sig = _signature(E)
+        if new_sig == sig:
+            break
+        sig = new_sig
+    else:
+        raise RuntimeError(f"connected_components did not converge in "
+                           f"{max_iters} rounds")
     return (nodes.join(E.select(F.col("hi").alias("node"),
                                 F.col("lo").alias("comp")), "node", "left")
             .groupBy("node")

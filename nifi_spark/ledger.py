@@ -32,42 +32,11 @@ from .durable import atomic_write
 _MOD = (1 << 61) - 1
 
 
-class OffsetLedger:
-    def __init__(self, checkpoint_dir: str):
-        self.dir = checkpoint_dir
-        os.makedirs(self.dir, exist_ok=True)
-
-    def _path(self, stream: str) -> str:
-        return os.path.join(self.dir, f"{stream}.json")
-
-    def get(self, stream: str) -> dict:
-        try:
-            with open(self._path(stream)) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {"stream": stream, "last_applied_lsn": -1, "batch_id": -1,
-                    "committed_at": None, "checksum": None, "table_version": -1}
-
-    def commit(self, stream: str, last_applied_lsn: int, batch_id: int,
-               checksum: str | None, table_version: int) -> dict:
-        state = {"stream": stream, "last_applied_lsn": int(last_applied_lsn),
-                 "batch_id": int(batch_id), "committed_at": time.time(),
-                 "checksum": checksum, "table_version": int(table_version)}
-        atomic_write(self._path(stream), json.dumps(state))
-        return state
-
-    def clear(self, stream: str) -> None:
-        try:
-            os.remove(self._path(stream))
-        except FileNotFoundError:
-            pass
-
-
 class KVState:
-    """Generic atomic JSON key→dict state (the StateManager analog for
-    operators whose state isn't an LSN watermark: @Stateful
-    UpdateAttribute counters, GetHTTP ETag/Last-Modified, listing
-    timestamps). Same `durable.atomic_write` commit as OffsetLedger."""
+    """Generic atomic JSON key→dict state, one `{key}.json` file per key
+    (the StateManager analog: @Stateful UpdateAttribute counters,
+    GetHTTP ETag/Last-Modified, listing timestamps, stream watermarks),
+    committed by `durable.atomic_write`."""
 
     def __init__(self, checkpoint_dir: str):
         self.dir = checkpoint_dir
@@ -86,6 +55,29 @@ class KVState:
     def put(self, key: str, value: dict) -> dict:
         atomic_write(self._path(key), json.dumps(value))
         return value
+
+    def clear(self, key: str) -> None:
+        try:
+            os.remove(self._path(key))
+        except FileNotFoundError:
+            pass
+
+
+class OffsetLedger(KVState):
+    """Per-stream LSN watermarks; a stream never committed reads as
+    nothing applied (`last_applied_lsn` -1)."""
+
+    def get(self, stream: str) -> dict:
+        return super().get(stream, {
+            "stream": stream, "last_applied_lsn": -1, "batch_id": -1,
+            "committed_at": None, "checksum": None, "table_version": -1})
+
+    def commit(self, stream: str, last_applied_lsn: int, batch_id: int,
+               checksum: str | None, table_version: int) -> dict:
+        return self.put(stream, {
+            "stream": stream, "last_applied_lsn": int(last_applied_lsn),
+            "batch_id": int(batch_id), "committed_at": time.time(),
+            "checksum": checksum, "table_version": int(table_version)})
 
 
 def checksum_term() -> Column:

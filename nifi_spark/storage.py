@@ -92,6 +92,16 @@ def lww_order(lsn: str, src: str, op: str) -> Column:
             + (F.col(op) == "delete").cast("long"))
 
 
+def lww_latest(rows: DataFrame, cols: list[str], lsn: str) -> DataFrame:
+    """Each key's last writer over `rows` (KEY, `cols`, `lsn`, `_src`,
+    `op`): KEY plus `w`, the struct of `cols` of the row that is largest
+    in `lww_order`. One `max_by` (map-side combine, so skew-safe); an
+    LSN outside [-2^61, 2^61) raises."""
+    row = F.struct(*[F.col(c) for c in cols])
+    return rows.groupBy(*KEY).agg(
+        F.max_by(row, lww_order(lsn, "_src", "op")).alias("w"))
+
+
 def lww_winners(rows: DataFrame) -> DataFrame:
     """Each key's winning (lsn, _src) over `rows` (KEY, lsn, _src, op;
     other columns are pruned), keys whose winner is a delete dropped.
@@ -343,10 +353,8 @@ class SnapshotTableStore:
             # the merge's lww_order; ties (crash-replayed delta ==
             # compacted base, identical payload by contract) resolve
             # to the delta copy via _src.
-            row = F.struct(*[F.col(c) for c in names], "_last_lsn", "op")
-            folded = (fold_in.groupBy(*KEY)
-                      .agg(F.max_by(row, lww_order("_last_lsn", "_src",
-                                                   "op")).alias("w"))
+            folded = (lww_latest(fold_in, [*names, "_last_lsn", "op"],
+                                 "_last_lsn")
                       .filter(F.col("w.op") != "delete")
                       .select(*[F.col(f"w.{c}").alias(c)
                                 for c in [*names, "_last_lsn"]]))
@@ -552,15 +560,10 @@ class SnapshotTableStore:
         table is neither read nor rewritten."""
         cur = self.schema_columns(m)
         names = [n for n, _ in cur]
-        row = F.struct(*[F.col(c) for c in names], F.col("op"),
-                       F.col("bucket"))
-        compacted = (chg.groupBy(*KEY)
-                     .agg(F.max_by(row, F.col("lsn")).alias("w"),
-                          F.max("lsn").alias("_last_lsn"))
-                     .select(*[F.col(f"w.{c}").alias(c) for c in names],
-                             F.col("w.op").alias("op"),
-                             F.col("w.bucket").alias("bucket"),
-                             "_last_lsn"))
+        compacted = (lww_latest(chg, [*names, "op", "bucket", "lsn"], "lsn")
+                     .select(*[F.col(f"w.{c}").alias(c)
+                               for c in [*names, "op", "bucket"]],
+                             F.col("w.lsn").alias("_last_lsn")))
 
         def place(m: dict, written: dict[int, str]) -> None:
             sid = m["current_schema_id"]

@@ -369,44 +369,66 @@ def test_frame_sample(docs):
 
 def test_near_dup_clusters_chain(spark):
     """A chain a~b, b~c must collapse to ONE cluster keeping only the
-    min id (pair-wise dropping would over/under-delete)."""
+    min id (pair-wise dropping would over/under-delete); docs with no
+    pair stay their own cluster. String ids cluster the same way and
+    keep their type."""
     from nifi_spark.datalib import near_dup_clusters
-    df = spark.createDataFrame(
-        [(i, f"doc {i}") for i in range(1, 8)], "doc_id long, text string")
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (5, 6)], "id_a long, id_b long")
-    out = {r.doc_id: (r.cluster_id, r.keep)
-           for r in near_dup_clusters(df, "doc_id", "text",
-                                      pairs=pairs).collect()}
-    assert out == {1: (1, True), 2: (1, False), 3: (1, False),
-                   4: (4, True), 5: (5, True), 6: (5, False), 7: (7, True)}
+    for typ, ident in (("long", lambda i: i), ("string", lambda i: f"d{i}")):
+        df = spark.createDataFrame(
+            [(ident(i), f"doc {i}") for i in range(1, 8)],
+            f"doc_id {typ}, text string")
+        pairs = spark.createDataFrame(
+            [(ident(a), ident(b)) for a, b in ((1, 2), (2, 3), (5, 6))],
+            f"id_a {typ}, id_b {typ}")
+        out = {r.doc_id: (r.cluster_id, r.keep)
+               for r in near_dup_clusters(df, "doc_id", "text",
+                                          pairs=pairs).collect()}
+        exp = {1: (1, True), 2: (1, False), 3: (1, False), 4: (4, True),
+               5: (5, True), 6: (5, False), 7: (7, True)}
+        assert out == {ident(i): (ident(c), keep)
+                       for i, (c, keep) in exp.items()}, typ
 
 
 def test_near_dup_clusters_star_matches_label(spark):
-    """method='star' (large-star/small-star CC) must produce exactly the
-    label-propagation clustering, isolated docs included."""
+    """The star-contraction clustering must match a driver-side
+    min-label union-find over the same pairs, isolated docs included."""
+    import random
     from nifi_spark.datalib import near_dup_clusters
-    df = spark.createDataFrame(
-        [(i, f"doc {i}") for i in range(1, 8)], "doc_id long, text string")
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (5, 6)], "id_a long, id_b long")
-    lab = {r.doc_id: (r.cluster_id, r.keep)
-           for r in near_dup_clusters(df, "doc_id", "text",
-                                      pairs=pairs).collect()}
+    rng = random.Random(7)
+    n = 40
+    edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(25)]
+    parent = list(range(n))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    label = {i: (find(i), find(i) == i) for i in range(n)}
+    df = spark.createDataFrame([(i, f"doc {i}") for i in range(n)],
+                               "doc_id long, text string")
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
     star = {r.doc_id: (r.cluster_id, r.keep)
-            for r in near_dup_clusters(df, "doc_id", "text", pairs=pairs,
-                                       method="star").collect()}
-    assert star == lab
+            for r in near_dup_clusters(df, "doc_id", "text",
+                                       pairs=pairs).collect()}
+    assert star == label
 
 
 def test_near_dup_clusters_long_chain_converges(spark):
+    """A 64-doc chain is one cluster with default arguments: its
+    diameter is beyond any fixed budget of label-propagation rounds,
+    but star contraction needs O(log n)."""
     from nifi_spark.datalib import near_dup_clusters
-    n = 12
+    n = 64
     df = spark.createDataFrame([(i, "x") for i in range(n)],
                                "doc_id long, text string")
     pairs = spark.createDataFrame([(i, i + 1) for i in range(n - 1)],
                                   "id_a long, id_b long")
     out = near_dup_clusters(df, "doc_id", "text", pairs=pairs).collect()
+    assert len(out) == n
     assert {r.cluster_id for r in out} == {0}
     assert sum(r.keep for r in out) == 1
 

@@ -3,6 +3,7 @@ SQL twin, and rank-ordering sanity."""
 
 import numpy as np
 import pandas as pd
+import pytest
 
 
 def _np_pagerank(edges, iters, d_num=85, d_den=100, scale=1_000_000):
@@ -122,3 +123,13 @@ def test_connected_components_adversarial_path(spark):
     out = connected_components(df, max_iters=12).collect()
     assert len(out) == 500
     assert all(r["component"] == 0 for r in out)
+
+
+def test_connected_components_raises_when_out_of_rounds(spark):
+    """A path that needs more rounds than `max_iters` allows raises
+    instead of returning unconverged components."""
+    from nifi_spark.datalib.graph import connected_components
+    edges = [(i, i + 1) for i in range(499)]
+    df = spark.createDataFrame(pd.DataFrame(edges, columns=["src", "dst"]))
+    with pytest.raises(RuntimeError, match="did not converge in 3 rounds"):
+        connected_components(df, max_iters=3)

@@ -1,11 +1,9 @@
-"""Schema evolution: DDL inside batches, add/rename, drift policies.
+"""Schema evolution: DDL inside batches, add/rename.
 
-NiFi analog: ConvertJSONToSQL's unmatched-field/column policies
-(standard/ConvertJSONToSQL.java:101-113,156-166). A batch commits its
-DDL first and then merges once, each event projected from the schema in
-effect at its lsn; hand-crafted changelogs whose data events fill the
-evolved columns check that against `oracle.replay`, across batch cuts
-and crash-replays.
+A batch commits its DDL and its merge as one version, each event
+projected from the schema in effect at its lsn; hand-crafted changelogs
+whose data events fill the evolved columns check that against
+`oracle.replay`, across batch cuts and crash-replays.
 """
 
 from __future__ import annotations
@@ -15,13 +13,10 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
-from pyspark.sql import functions as F
 
 from nifi_spark import fixtures, oracle
 from nifi_spark.ledger import OffsetLedger
 from nifi_spark.pipeline import CdcPipeline
-from nifi_spark.schema_evolution import (SchemaDriftError, UnmatchedColumn,
-                                         UnmatchedField, reconcile)
 from nifi_spark.storage import SnapshotTableStore
 
 
@@ -267,31 +262,3 @@ def test_rename_replay_is_idempotent(spark, tmp_path):
     with pytest.raises(KeyError):
         store.evolve("rename_column", "x", "y")
     assert [n for n, _ in store.schema_columns()] == names
-
-
-def test_drift_policies(spark):
-    table_cols = [("repo", "string"), ("path", "string"), ("commit", "string"),
-                  ("lang", "string"), ("content", "string")]
-    chg = spark.createDataFrame(
-        [("o/r", "a.py", "c0", "surprise", 0)],
-        "repo string, path string, commit string, homepage string, lsn long")
-
-    # unmatched incoming field: FAIL raises, IGNORE drops
-    with pytest.raises(SchemaDriftError):
-        reconcile(chg, table_cols, field_policy=UnmatchedField.FAIL)
-    out = reconcile(chg, table_cols, field_policy=UnmatchedField.IGNORE)
-    assert "homepage" not in out.columns
-
-    # unmatched table column: FAIL raises, IGNORE null-fills
-    with pytest.raises(SchemaDriftError):
-        reconcile(chg, table_cols, column_policy=UnmatchedColumn.FAIL)
-    out = reconcile(chg, table_cols, column_policy=UnmatchedColumn.IGNORE)
-    row = out.collect()[0]
-    assert row["lang"] is None and row["content"] is None
-
-    # EVOLVE: adds the new column via the callback
-    added = []
-    out = reconcile(chg, table_cols, field_policy=UnmatchedField.EVOLVE,
-                    evolve_fn=lambda k, c, n, t: added.append((k, c)))
-    assert added == [("add_column", "homepage")]
-    assert "homepage" in out.columns

@@ -84,12 +84,21 @@ def test_lsn_range_edges_round_trip(spark, tmp_path):
                                     ("lo", "x", -LSN_BOUND)]
 
 
-@pytest.mark.parametrize("lsn", [LSN_BOUND, -LSN_BOUND - 1])
-def test_lsn_out_of_range_raises(spark, tmp_path, lsn):
+_OUT_OF_RANGE = [LSN_BOUND, -LSN_BOUND - 1]
+
+
+@pytest.mark.parametrize("strategy,lsn", [
+    *[pytest.param("argmax", x, id=str(x)) for x in _OUT_OF_RANGE],
+    *[pytest.param("delta", x, id=f"delta-{x}") for x in _OUT_OF_RANGE]])
+def test_lsn_out_of_range_raises(spark, tmp_path, strategy, lsn):
+    """Both strategies order by `lww_order`, so an out-of-range LSN
+    raises before the commit instead of landing in the table."""
     store = _store(tmp_path)
     with pytest.raises(Exception, match="LSN outside"):
-        store.merge(spark, _changes(spark, [("a", "x", "upsert", lsn)]))
+        store.merge(spark, _changes(spark, [("a", "x", "upsert", lsn)]),
+                    strategy=strategy)
     assert store.current_version() == 0
+    assert store.read(spark).count() == 0
 
 
 def test_winner_plan_is_hash_aggregate(spark, tmp_path, monkeypatch):
